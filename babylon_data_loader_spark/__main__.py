@@ -160,9 +160,10 @@ def _cmd_vacuum(args: argparse.Namespace) -> int:
 
 
 def _cmd_sweep_stores(args: argparse.Namespace) -> int:
-    """Maintenance sweep of the at-rest store warehouse: deletes
-    every store whose recorded source files no longer exist unchanged
-    (the r16 full-warehouse complement of the per-access sweeps)."""
+    """Maintenance sweep of the at-rest store warehouse — the same
+    rule every store build runs afterwards: deletes every store whose
+    meta is missing or records source files that no longer exist
+    unchanged, and every abandoned staging dir of a killed build."""
     from babylon_data_loader_spark.operators.index_store import (
         sweep_dead_stores,
         warehouse_dir,
@@ -558,7 +559,7 @@ def main(argv: list[str] | None = None) -> int:
     sub.add_parser(
         "sweep-stores",
         help="remove at-rest index stores whose source data no "
-        "longer exists unchanged (full-warehouse maintenance sweep)",
+        "longer exists unchanged, and abandoned store builds",
     )
 
     dele = sub.add_parser(

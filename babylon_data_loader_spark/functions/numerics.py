@@ -43,9 +43,3 @@ def grid_sum(col: Column, scale: int) -> Column:
         "double"
     ) / F.lit(float(factor))
 
-
-def int_ratio(num: Column, den: Column) -> Column:
-    """An integer ratio emitted as the single unrounded IEEE division
-    of the two operands (each converted exactly or correctly-rounded
-    once). Oracle twin: ``CAST(num AS DOUBLE) / den``."""
-    return num.cast("double") / den.cast("double")

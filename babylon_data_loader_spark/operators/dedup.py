@@ -265,11 +265,8 @@ def stored_doc_shingles(
     return get_or_build_parquet(
         docs,
         "mh_shingles",
-        # v2 = +_df derivation column; the v1 key is retired so
-        # stranded df-less stores are swept on stable datasets
-        f"s{shingle_k}v2",
+        f"s{shingle_k}v2",  # v2 = +_df derivation column
         _build,
-        retired_params=(f"s{shingle_k}",),
     )
 
 
@@ -430,6 +427,18 @@ def lsh_candidate_pairs(
     )
 
 
+def verified_pairs_params(
+    threshold: float, n_bands: int, shingle_k: int, max_bucket_size: int
+) -> str:
+    """Store params of the verified-pair family. The threshold is
+    ROUNDED to hundredths: truncating (int(0.57 * 100) == 56) keyed
+    two thresholds onto one store."""
+    return (
+        f"t{round(threshold * 100)}b{n_bands}s{shingle_k}"
+        f"m{max_bucket_size}"
+    )
+
+
 def stored_verified_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -477,8 +486,9 @@ def stored_verified_pairs(
     return get_or_build_parquet(
         docs,
         "mh_pairs",
-        f"t{int(threshold * 100)}b{n_bands}s{shingle_k}"
-        f"m{max_bucket_size}",
+        verified_pairs_params(
+            threshold, n_bands, shingle_k, max_bucket_size
+        ),
         build,
     )
 
@@ -532,8 +542,10 @@ def stored_doc_components(
     return get_or_build_parquet(
         docs,
         "mh_comp",
-        f"t{int(threshold * 100)}b{n_bands}s{shingle_k}"
-        f"m{max_bucket_size}_{id_col}",
+        verified_pairs_params(
+            threshold, n_bands, shingle_k, max_bucket_size
+        )
+        + f"_{id_col}",
         build,
     )
 
@@ -792,7 +804,7 @@ def read_token_window_store(
     # schema-cached read: appends republish _SUCCESS, so the mtime key
     # re-infers whenever the store's files (hence schema) could change;
     # file LISTING stays per-call, so appended hp dirs are always seen
-    return _read_store(spark, path, "_SUCCESS"), _read_tokwin_meta(
+    return _read_store(spark, path), _read_tokwin_meta(
         spark, path
     )
 

@@ -92,17 +92,6 @@ def _nested_lit(mat: list[list[int]]) -> Column:
     )
 
 
-def int_dot_const(qcol: Column, plane: list[int]) -> Column:
-    """Σ q[d]·plane[d] — BIGINT-exact fold of a quantized vector
-    against a literal integer plane."""
-    prods = F.zip_with(
-        qcol, F.expr(_long_array_sql(plane)), lambda a, b: a * b
-    )
-    return F.aggregate(
-        prods, F.lit(0).cast("long"), lambda acc, x: acc + x
-    )
-
-
 def sign_bucket(qcol: Column, planes: list[list[int]]) -> Column:
     """Sign-LSH bucket id over a quantized vector: bit p set when the
     exact integer dot with plane p is ≥ 0. One runtime loop over the
@@ -210,25 +199,10 @@ def det_signature_store(
         "detsig",
         # 'b' = bucket-partitioned layout (r12): params must change
         # with layout so an unpartitioned r11 'p8' store is never
-        # mistaken for this one; the retired r11 key is swept (its
-        # stores would otherwise linger for stable datasets forever)
+        # mistaken for this one
         f"{tag}_p{len(planes)}b",
         _build,
         partition_by=("bucket",),
-        retired_params=(f"p{len(planes)}",),
-    )
-
-
-def int_sq_dist_const(qcol: Column, centroid: list[int]) -> Column:
-    """Σ (q[d] − c[d])² — BIGINT-exact squared L2 to a literal
-    integer centroid."""
-    diffs = F.zip_with(
-        qcol,
-        F.expr(_long_array_sql(centroid)),
-        lambda a, b: (a - b) * (a - b),
-    )
-    return F.aggregate(
-        diffs, F.lit(0).cast("long"), lambda acc, x: acc + x
     )
 
 
@@ -397,14 +371,6 @@ def adc_distance_per_list(
     )
 
 
-def floordiv_mean(sum_col: Column, n_col: Column) -> Column:
-    """floor(Σ/n) in pure integers (sign-safe: Spark % is C-style, so
-    the ((s % n) + n) % n repair recovers the floored quotient —
-    matches DuckDB ``//`` on negative sums)."""
-    rem = ((sum_col % n_col) + n_col) % n_col
-    return ((sum_col - rem) / n_col).cast("long")
-
-
 def det_seed_codebook(
     emb: DataFrame,
     k: int,
@@ -459,7 +425,7 @@ def det_assigned_store(
     # (a different id_col fails noisily on select; a different
     # vec_col would be silent wrong data). Old-format dirs become
     # dead-data when the driver regenerates the tables and are swept
-    # by sweep_stale's cross-params pass.
+    # then.
     key = hashlib.md5(
         json.dumps(
             [codebook, id_col, vec_col, list(extra_cols)],

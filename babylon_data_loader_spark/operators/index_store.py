@@ -14,6 +14,27 @@ old data). The fingerprint folds in each source file's basename, size
 and mtime-ns, so regenerated data gets a new store directory and the
 old one is swept.
 
+Every fingerprint-keyed store has one lifecycle, run by
+:func:`get_or_build_store`:
+
+- build: the data is written into a fresh ``staging_<kind>_<uuid>``
+  dir of the warehouse, never under the store's own name, and the
+  store meta (source files with size + mtime_ns) is written inside it;
+- publish: one ``os.rename`` to ``idx_<kind>_<fp>_<params>``. A
+  published dir therefore holds its data AND its meta by
+  construction: no reader sees a half-written store, and a killed
+  build leaves only a staging dir behind;
+- race: when two writers build one store at once, the first rename
+  wins; the loser finds the published dir holding meta and deletes
+  its own staging copy (both are the same pure function of the data);
+- sweep: :func:`sweep_dead_stores` removes every ``idx_*`` dir whose
+  meta is missing or records source files that no longer exist
+  unchanged, and every staging dir older than :data:`STAGING_TTL_S`.
+  It runs after each build and from the ``sweep-stores`` command,
+  never on a hit. A store over OTHER live data (the same table at
+  another scale-factor dir) is kept, so sessions on different data
+  never evict each other's stores.
+
 Reference parity: the reference keeps its lookup structures inside the
 storage engine where writes invalidate them transparently
 (/root/reference/storage/mongo.go — indexes live with the collection);
@@ -27,26 +48,37 @@ import hashlib
 import json
 import os
 import shutil
+import time
+import uuid
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Sidecar written into every store dir at build time: the store's
-# source files with size+mtime_ns, so sweep_stale can tell "this
-# sibling indexes data that was regenerated in place" (sweep) from
-# "this sibling indexes OTHER live data — e.g. the same table at a
-# different scale-factor dir" (keep). Before r9 the sweep removed
-# every different-fingerprint sibling, so a serial sf0.01 correctness
-# run evicted the sf0.1 bench stores and vice versa (r8 VERDICT).
+# Meta written into every store before it is published: the store's
+# source files with size+mtime_ns, so the sweep can tell "this store
+# indexes data that was regenerated in place" (sweep) from "this store
+# indexes OTHER live data — e.g. the same table at a different
+# scale-factor dir" (keep). Its presence is also the hit test.
 META_NAME = "_store_meta.json"
 
-# Per-process access trail appended by get_or_build_parquet:
+# Name prefix of unpublished builds (and of knn_lsh's throwaway
+# indexes) in the warehouse — deliberately not ``idx_``, so a staging
+# dir is never taken for a store. ``lsh_staging_`` is the throwaway
+# prefix used before the shared lifecycle; the sweep still ages it out.
+STAGING_PREFIX = "staging_"
+_STAGING_PREFIXES = (STAGING_PREFIX, "lsh_staging_")
+
+# Age in seconds after which a staging dir counts as abandoned (a
+# killed build, or a throwaway index no live plan reads any more) and
+# is swept. A build still running after this long loses its dir.
+STAGING_TTL_S = 3600
+
+# Per-process access trail appended by get_or_build_store:
 # {"kind", "params", "hit"} per store access. bench.py drains it to
 # report whether each store-backed query ran warm (hit) or paid a
 # build — a cold first rep is the usual cause of a bench-box "diff".
 ACCESS_LOG: list[dict] = []
-
 
 def files_fingerprint(paths: Iterable[str]) -> str:
     """12-hex-char digest over sorted (basename, size, mtime_ns).
@@ -172,8 +204,9 @@ def write_meta_text(spark: SparkSession, path: str, text: str) -> None:
     the tmp-file + ``os.replace`` atomic swap; ``scheme://`` paths
     write a sibling ``.tmp`` through Hadoop FileSystem and rename it
     over the target (deleting any previous copy first — HDFS rename
-    does not overwrite). Single-writer maintenance-window semantics,
-    same as the store writes themselves."""
+    does not overwrite). Single-writer: concurrent writers of one
+    path share its ``.tmp`` name (fingerprint-keyed stores write their
+    meta inside a private staging dir, so they never share one)."""
     if "://" not in path:
         tmp = path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
@@ -194,45 +227,6 @@ def write_meta_text(spark: SparkSession, path: str, text: str) -> None:
     fs.rename(tmp, target)
 
 
-def write_store_meta(
-    path: str,
-    files: Iterable[str],
-    partition_types: dict[str, str] | None = None,
-) -> None:
-    """Record the store's source files (path + size + mtime_ns) in the
-    sidecar. Written once at build time; read by sweep_stale to decide
-    whether a sibling store's data is still live.
-
-    ``partition_types`` records the WRITTEN dtype of each
-    ``partitionBy`` column: Spark re-infers partition-directory values
-    on read (a BIGINT bucket column comes back INT), so the reader
-    casts them back — both return paths of get_or_build_parquet must
-    yield identical schemas (r12 ADVICE)."""
-    recs = []
-    for p in files:
-        local = p.removeprefix("file://").removeprefix("file:")
-        try:
-            st = os.stat(local)
-            recs.append(
-                {
-                    "path": local,
-                    "size": st.st_size,
-                    "mtime_ns": st.st_mtime_ns,
-                }
-            )
-        except OSError:
-            # Non-local (hdfs/s3): path only — liveness then degrades
-            # to "path still listed", the best a local stat can do.
-            recs.append({"path": local})
-    if not os.path.isdir(path):
-        return
-    meta: dict = {"files": recs}
-    if partition_types:
-        meta["partition_types"] = partition_types
-    with open(os.path.join(path, META_NAME), "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-
-
 def read_partition_types(path: str) -> dict[str, str]:
     """The sidecar's recorded partition-column dtypes ({} when the
     store predates the record or has no sidecar)."""
@@ -243,19 +237,6 @@ def read_partition_types(path: str) -> dict[str, str]:
             return json.load(fh).get("partition_types", {}) or {}
     except (OSError, ValueError):
         return {}
-
-
-def ensure_store_meta(path: str, source: DataFrame) -> None:
-    """Backfill the sidecar on a store built before it existed (or by
-    an explicit-path writer): safe because reaching an existing store
-    through its content fingerprint proves it indexes exactly this
-    source's current files."""
-    if os.path.isdir(path) and not os.path.exists(
-        os.path.join(path, META_NAME)
-    ):
-        files = lineage_files(source)
-        if files:
-            write_store_meta(path, files)
 
 
 def store_meta_live(path: str) -> bool:
@@ -295,113 +276,124 @@ def store_meta_live(path: str) -> bool:
     return True
 
 
-def sweep_stale(
-    spark: SparkSession, kind: str, params: str, keep: str
-) -> int:
-    """Remove same-KIND sibling stores whose source data no longer
-    exists unchanged on disk (any params — see the in-loop note).
-    Siblings whose sidecar meta proves their data is still live are
-    KEPT: a different fingerprint does not mean dead data — the same
-    table at a different scale-factor dir fingerprints differently
-    too, and evicting it forced silent rebuilds when a correctness
-    run at sf0.01 and a bench run at sf0.1 alternated (r8 VERDICT
-    finding). Sidecar-less dirs (legacy layouts, interrupted builds)
-    are swept under the same params only. Returns how many were
-    removed."""
+def _source_records(files: Iterable[str]) -> list[dict]:
+    """The store meta's liveness record: path + size + mtime_ns per
+    source file. Non-local (hdfs/s3) files get a path-only record —
+    liveness then degrades to "path still listed", the best a local
+    stat can do."""
+    recs = []
+    for p in files:
+        local = p.removeprefix("file://").removeprefix("file:")
+        try:
+            st = os.stat(local)
+            recs.append(
+                {
+                    "path": local,
+                    "size": st.st_size,
+                    "mtime_ns": st.st_mtime_ns,
+                }
+            )
+        except OSError:
+            recs.append({"path": local})
+    return recs
+
+
+def new_staging_dir(spark: SparkSession, kind: str) -> str:
+    """A fresh, not yet created staging path in the warehouse (the
+    same filesystem as the stores, so publishing is one rename)."""
+    return os.path.join(
+        warehouse_dir(spark),
+        f"{STAGING_PREFIX}{kind}_{uuid.uuid4().hex[:12]}",
+    )
+
+
+def sweep_dead_stores(spark: SparkSession) -> int:
+    """The one sweep rule of the store warehouse: remove every
+    ``idx_*`` dir whose meta is missing (published stores always hold
+    one, so such a dir is a legacy layout) or no longer live, and every
+    staging dir older than :data:`STAGING_TTL_S`. Stores over live
+    data are kept whatever their kind or params, fresh staging dirs (a
+    build in flight in another session) are kept, and non-store
+    warehouse entries (managed tables) are never touched. Returns how
+    many dirs were removed."""
     wh = warehouse_dir(spark)
     if not os.path.isdir(wh):
         return 0
     n = 0
-    suffix = f"_{params}"
-    keep_base = os.path.basename(keep)
+    now = time.time()
     for entry in os.listdir(wh):
-        if (
-            not entry.startswith((f"idx_{kind}_", f"_{kind}_"))
-            or entry == keep_base
-        ):
-            continue
         full = os.path.join(wh, entry)
-        if store_meta_live(full):
+        if entry.startswith("idx_"):
+            dead = not store_meta_live(full)
+        elif entry.startswith(_STAGING_PREFIXES):
+            try:
+                dead = now - os.path.getmtime(full) > STAGING_TTL_S
+            except OSError:  # published or removed meanwhile
+                continue
+        else:
             continue
-        # Dead-data siblings sweep regardless of params (r14: a
-        # params-format change would otherwise strand every
-        # old-format dir forever once its data regenerates — the
-        # enumerable-keys sweep_retired cannot cover hashed params).
-        # SIDECAR-LESS dirs sweep only under the SAME params: a
-        # concurrent different-params build that has not yet written
-        # its meta must not be deleted mid-write.
-        has_meta = os.path.exists(os.path.join(full, META_NAME))
-        if has_meta or entry.endswith(suffix):
+        if dead:
             shutil.rmtree(full, ignore_errors=True)
             n += 1
     return n
 
 
-def sweep_retired(
-    spark: SparkSession, kind: str, retired_params: tuple[str, ...]
-) -> int:
-    """Remove same-kind sibling stores whose params key was RENAMED
-    away: sweep_stale only sweeps siblings of the same (kind, params)
-    suffix, so a params bump (e.g. detsig 'p8' -> 'annplane_p8b' when
-    the layout went bucket-partitioned, r12) strands the old-params
-    dirs on disk until their source data changes — potentially
-    forever for stable datasets (r12 ADVICE). Build sites that bump
-    their params call this with the OLD keys; liveness is irrelevant
-    because no caller produces those params anymore. A retired key
-    matches exactly or as a ``prefix-`` when it ends with ``_`` (the
-    evalgrams keys embed a per-eval-set fingerprint suffix).
-    Returns how many stores were removed."""
-    wh = warehouse_dir(spark)
-    if not os.path.isdir(wh):
-        return 0
-    n = 0
-    lead = f"idx_{kind}_"
-    for entry in os.listdir(wh):
-        if not entry.startswith(lead):
-            continue
-        rest = entry[len(lead):]
-        # <12-hex fingerprint>_<params>
-        if len(rest) < 14 or rest[12] != "_":
-            continue
-        params = rest[13:]
-        if any(
-            params.startswith(r) if r.endswith("_") else params == r
-            for r in retired_params
-        ):
-            shutil.rmtree(os.path.join(wh, entry), ignore_errors=True)
-            n += 1
-    return n
+def _publish(staging: str, path: str) -> None:
+    """Rename ``staging`` to ``path``; the first writer wins. When
+    ``path`` already holds meta another writer published first, and
+    ``staging`` is left for the caller to delete. A meta-less ``path``
+    is a legacy store and is replaced."""
+    for _ in range(3):
+        try:
+            os.rename(staging, path)
+            return
+        except OSError:
+            if os.path.exists(os.path.join(path, META_NAME)):
+                return
+            shutil.rmtree(path, ignore_errors=True)
+    raise OSError(f"could not publish store {path}")
 
 
-def sweep_dead_stores(spark: SparkSession) -> int:
-    """Full-warehouse maintenance sweep (r16, VERDICT ask #6): remove
-    EVERY at-rest store directory whose meta sidecar proves its source
-    data no longer exists unchanged on disk, regardless of kind or
-    params. Complements the per-access sweeps — ``sweep_stale`` only
-    fires for kinds still being accessed and ``sweep_retired`` only
-    for enumerated params renames, so a kind that stops being used
-    entirely strands its stores forever on a long-lived warehouse.
-    Dirs WITHOUT a meta sidecar are left alone (a concurrent build
-    that has not yet published its meta must not be deleted
-    mid-write — the rule sweep_stale applies across params), as are
-    non-store warehouse entries (managed tables, bench scratch).
-    Live-keyed stores are never touched, so ``store_hit`` behaviour
-    is unchanged. Returns how many dirs were removed."""
-    wh = warehouse_dir(spark)
-    if not os.path.isdir(wh):
-        return 0
-    n = 0
-    for entry in os.listdir(wh):
-        if not entry.startswith("idx_"):
-            continue
-        full = os.path.join(wh, entry)
-        if not os.path.exists(os.path.join(full, META_NAME)):
-            continue
-        if store_meta_live(full):
-            continue
-        shutil.rmtree(full, ignore_errors=True)
-        n += 1
-    return n
+def get_or_build_store(
+    source: DataFrame,
+    kind: str,
+    params: str,
+    write: Callable[[str], dict | None],
+) -> str | None:
+    """The published store dir of (kind, params) over ``source``,
+    building it first on a miss (see the module docstring for the
+    lifecycle). Returns None when the source has no file lineage to
+    fingerprint: the caller then computes inline — correctness never
+    depends on the store, only the amortized cost does.
+
+    ``write(staging)`` writes the store's data into the not yet
+    existing dir ``staging``; a mapping it returns is merged into the
+    store meta. Each access (a call on a fingerprinted source)
+    appends one :data:`ACCESS_LOG` record, before any build."""
+    spark = source.sparkSession
+    fp = df_fingerprint(source)
+    if fp is None:
+        return None
+    path = store_path(spark, kind, fp, params)
+    hit = os.path.exists(os.path.join(path, META_NAME))
+    ACCESS_LOG.append({"kind": kind, "params": params, "hit": hit})
+    if hit:
+        return path
+    # Stat the sources BEFORE the build: data regenerated mid-build
+    # then reads as dead, never as live under a stale fingerprint.
+    meta = {"files": _source_records(lineage_files(source))}
+    staging = new_staging_dir(spark, kind)
+    try:
+        meta.update(write(staging) or {})
+        os.makedirs(staging, exist_ok=True)
+        write_meta_text(
+            spark, os.path.join(staging, META_NAME), json.dumps(meta)
+        )
+        _publish(staging, path)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    sweep_dead_stores(spark)
+    return path
 
 
 def get_or_build_parquet(
@@ -409,87 +401,70 @@ def get_or_build_parquet(
     kind: str,
     params: str,
     build: Callable[[], DataFrame],
-    marker: str = "_SUCCESS",
     partition_by: tuple[str, ...] = (),
-    retired_params: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Read the store for `source` if present, else build+write+read.
+    """The parquet store of ``build()`` over ``source``, through
+    :func:`get_or_build_store`; ``build()`` itself (no store) when the
+    source has no file lineage to fingerprint.
 
-    Falls back to returning `build()` directly (no store) when the
-    source has no file lineage to fingerprint — correctness never
-    depends on the store, only the amortized cost does.
     ``partition_by`` lays the store out as a partitioned directory
     tree, so an equality/IN probe on those columns is a
-    partition-pruned read (the write_lsh_index layout discipline);
-    callers that change the layout must bump ``params`` — the
-    fingerprint keys DATA freshness, not layout — and pass the OLD
-    keys as ``retired_params`` so the rename's stranded same-kind
-    stores are swept (:func:`sweep_retired`)."""
-    spark = source.sparkSession
-    fp = df_fingerprint(source)
-    if fp is None:
-        return build()
-    path = store_path(spark, kind, fp, params)
-    sweep_stale(spark, kind, params, keep=path)
-    if retired_params:
-        sweep_retired(spark, kind, retired_params)
-    hit = os.path.exists(os.path.join(path, marker))
-    ACCESS_LOG.append({"kind": kind, "params": params, "hit": hit})
-    ptypes: dict[str, str] = {}
-    if not hit:
+    partition-pruned read (the write_lsh_index layout discipline).
+    Callers that change the layout or the derivation must change
+    ``params`` — the fingerprint keys DATA freshness only; stores
+    under the old params are swept once their data changes."""
+
+    def write(staging: str) -> dict | None:
         built = build()
+        writer = built.write
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        # Spark re-infers partition-directory types on read (BIGINT
+        # written, INT back): record the written ones so the reader
+        # casts back and both return paths agree on schema.
         ptypes = {
             c: built.schema[c].dataType.simpleString()
             for c in partition_by
             if c in built.columns
         }
-        writer = built.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        write_store_meta(
-            path, lineage_files(source), partition_types=ptypes
-        )
-    else:
-        ensure_store_meta(path, source)
-        if partition_by:
-            ptypes = read_partition_types(path)
-    out = _read_store(spark, path, marker)
-    # Partition-directory values are type re-INFERRED on read (BIGINT
-    # written, INT back): cast to the recorded written types so the
-    # store-backed and no-lineage build() return paths agree on
-    # schema. Stores that predate the record are read as-inferred.
-    for c, t in ptypes.items():
-        if c in out.columns:
-            out = out.withColumn(c, F.col(c).cast(t))
+        return {"partition_types": ptypes} if ptypes else None
+
+    path = get_or_build_store(source, kind, params, write)
+    if path is None:
+        return build()
+    out = _read_store(source.sparkSession, path)
+    if partition_by:
+        for c, t in read_partition_types(path).items():
+            if c in out.columns:
+                out = out.withColumn(c, F.col(c).cast(t))
     return out
 
 
 # Schema cache for store reads, keyed PER PATH with a freshness stamp
-# (r16, closing both r15 ADVICE notes on the r15 cache): a store dir
-# is immutable once its marker is published (rebuilds overwrite the
-# marker, changing its mtime), so the parquet schema — pure metadata
-# fully determined by the store files — never changes under a live
-# stamp. The stamp folds in the _store_meta.json sidecar's identity
-# as well as the zero-byte marker's mtime: every (re)build rewrites
-# the meta sidecar, whose SIZE varies with content, so a rebuild
-# landing inside one coarse filesystem timestamp tick still changes
-# the stamp. Keying per path (insert replaces the previous entry)
-# bounds the cache at the number of live stores instead of growing
-# across regenerations in a long-lived process. Parquet schema
-# INFERENCE launches a footer-reading Spark job per
-# spark.read.parquet call (~85 ms warm, r15 measured); store-heavy
-# lanes access several stores per run, so the per-access inference
-# was a fixed tax on every warm path (guide §1.2). Data reads and
-# partition-directory listing stay fresh per call — only the schema
-# is reused.
+# (r16): a published store dir is immutable, and a caller-owned index
+# that is appended to republishes its _SUCCESS marker (new mtime), so
+# the parquet schema — pure metadata fully determined by the store
+# files — never changes under a live stamp. The stamp folds in the
+# store meta's identity as well as the zero-byte marker's mtime: a
+# legacy store replaced at the same path gets a new meta, whose SIZE
+# varies with content, so a rebuild landing inside one coarse
+# filesystem timestamp tick still changes the stamp. Keying per path
+# (insert replaces the previous entry) bounds the cache at the number
+# of live stores instead of growing across regenerations in a
+# long-lived process. Parquet schema INFERENCE launches a
+# footer-reading Spark job per spark.read.parquet call (~85 ms warm,
+# r15 measured); store-heavy lanes access several stores per run, so
+# the per-access inference was a fixed tax on every warm path (guide
+# §1.2). Data reads and partition-directory listing stay fresh per
+# call — only the schema is reused.
 _READ_SCHEMA_CACHE: dict = {}
 
 
-def _store_stamp(path: str, marker: str):
+def _store_stamp(path: str):
     """Freshness stamp for a store dir, or None when unreadable."""
     try:
-        mst = os.stat(os.path.join(path, marker))
+        mst = os.stat(os.path.join(path, "_SUCCESS"))
     except OSError:
         return None
     try:
@@ -500,8 +475,8 @@ def _store_stamp(path: str, marker: str):
     return (mst.st_mtime_ns, mst.st_size, meta_id)
 
 
-def _read_store(spark: SparkSession, path: str, marker: str):
-    stamp = _store_stamp(path, marker)
+def _read_store(spark: SparkSession, path: str):
+    stamp = _store_stamp(path)
     if stamp is not None:
         hit = _READ_SCHEMA_CACHE.get(path)
         if hit is not None and hit[0] == stamp:
@@ -540,8 +515,7 @@ def stored_norm_tokens(
     different ``text_col`` silently alias onto one directory — the
     second caller would read tokens derived from the wrong column
     with no error (a wrong ``id_col`` at least fails the select
-    noisily; ``text_col`` is silent wrong data). The r13 'lw' key is
-    retired so its stores are swept rather than stranded."""
+    noisily; ``text_col`` is silent wrong data)."""
     from babylon_data_loader_spark.functions.text import tokens
 
     return get_or_build_parquet(
@@ -552,7 +526,6 @@ def stored_norm_tokens(
             id_col,
             tokens(F.lower(F.col(text_col))).alias("tok"),
         ),
-        retired_params=("lw",),
     )
 
 

@@ -128,6 +128,10 @@ def write_ivf_index(
     import json
     import os
 
+    from babylon_data_loader_spark.operators.index_store import (
+        write_meta_text,
+    )
+
     # one build-time shuffle on cluster_id so each list is ONE file,
     # not one file per upstream task (see write_lsh_index — same
     # small-files hazard; probes open one file per probed list)
@@ -139,11 +143,11 @@ def write_ivf_index(
     )
     # commit marker: presence implies a complete index, so the write
     # must be atomic (crash mid-write would poison the store)
-    meta_path = os.path.join(path, "_centroids.json")
-    tmp = f"{meta_path}.tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(centroids, fh)
-    os.replace(tmp, meta_path)  # atomic on POSIX
+    write_meta_text(
+        indexed.sparkSession,
+        os.path.join(path, "_centroids.json"),
+        json.dumps(centroids),
+    )
 
 
 def read_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
@@ -164,7 +168,7 @@ def read_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
         centroids = json.load(fh)
     # schema-cached read: appends republish _SUCCESS, so the mtime key
     # re-infers whenever the store's files (hence schema) could change
-    return _read_store(spark, path, "_SUCCESS"), centroids
+    return _read_store(spark, path), centroids
 
 
 def append_ivf_index(

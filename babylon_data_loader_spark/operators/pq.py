@@ -150,14 +150,18 @@ def write_pq_index(
     import json
     import os
 
+    from babylon_data_loader_spark.operators.index_store import (
+        write_meta_text,
+    )
+
     codes.write.mode("overwrite").parquet(path)
     # commit marker: presence implies a complete index, so the write
     # must be atomic (crash mid-write would poison the store)
-    meta_path = os.path.join(path, "_codebooks.json")
-    tmp = f"{meta_path}.tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(codebooks, fh)
-    os.replace(tmp, meta_path)  # atomic on POSIX
+    write_meta_text(
+        codes.sparkSession,
+        os.path.join(path, "_codebooks.json"),
+        json.dumps(codebooks),
+    )
 
 
 def append_pq_index(
@@ -229,7 +233,7 @@ def read_pq_index(spark, path: str):
         codebooks = json.load(fh)
     # schema-cached read: appends republish _SUCCESS, so the mtime key
     # re-infers whenever the store's files (hence schema) could change
-    return _read_store(spark, path, "_SUCCESS"), codebooks
+    return _read_store(spark, path), codebooks
 
 
 def pq_search(

@@ -143,9 +143,9 @@ def _cached_totals_rows(totals: DataFrame, cache_dir: str | None, key: str):
     pure function of (stored ranged frame, aggregate spec), so a warm
     store turns the O(full-scan) aggregation job into an O(#rows)
     sidecar read. Underscore-led sidecar names are invisible to
-    readers of the store parquet itself; an overwrite rebuild of the
-    store dir wipes the sidecars with it, so they can never outlive
-    the data they summarize. The sidecar is published by atomic
+    readers of the store parquet itself; a data change publishes a new
+    store dir and the sweep removes the old one with its sidecars, so
+    they can never outlive the data they summarize. The sidecar is published by atomic
     rename (the write_meta_text discipline) and any read failure —
     a concurrent writer, a partial legacy dir — falls back to
     collecting the totals job directly: correctness never depends on
@@ -163,8 +163,7 @@ def _cached_totals_rows(totals: DataFrame, cache_dir: str | None, key: str):
             # the _TOTALS_SIDECAR_V bump correctly misses v1 sidecars
             # but left the old `_totals_{key}` dirs stranded in
             # still-live ranged stores forever on stable datasets
-            # (r15 ADVICE — the sweep_retired problem one level
-            # down). Current-version sidecars and their `.__tmp_*`
+            # (r15 ADVICE — a params rename one level down). Current-version sidecars and their `.__tmp_*`
             # publish staging dirs are left alone, so a concurrent
             # same-version writer is never disturbed.
             cur = f"_totals_{_TOTALS_SIDECAR_V}_"

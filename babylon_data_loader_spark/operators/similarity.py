@@ -148,6 +148,23 @@ def embedding_dup_pairs(
     )
 
 
+def embedding_pairs_params(
+    threshold: float,
+    n_planes: int,
+    n_bands: int,
+    id_col: str,
+    vec_col: str,
+    max_bucket_size: int | None,
+) -> str:
+    """Store params of the embedding-pair family. The threshold is
+    ROUNDED to thousandths: truncating keyed two thresholds onto one
+    store."""
+    return (
+        f"t{round(threshold * 1000)}p{n_planes}b{n_bands}"
+        f"m{max_bucket_size}_{id_col}_{vec_col}"
+    )
+
+
 def stored_embedding_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -173,8 +190,9 @@ def stored_embedding_pairs(
     return get_or_build_parquet(
         emb,
         "emb_pairs",
-        f"t{int(threshold * 1000)}p{n_planes}b{n_bands}"
-        f"m{max_bucket_size}_{id_col}_{vec_col}",
+        embedding_pairs_params(
+            threshold, n_planes, n_bands, id_col, vec_col, max_bucket_size
+        ),
         lambda: embedding_dup_pairs(
             emb,
             threshold=threshold,
@@ -235,8 +253,9 @@ def stored_embedding_components(
     return get_or_build_parquet(
         emb,
         "emb_comp",
-        f"t{int(threshold * 1000)}p{n_planes}b{n_bands}"
-        f"m{max_bucket_size}_{id_col}_{vec_col}",
+        embedding_pairs_params(
+            threshold, n_planes, n_bands, id_col, vec_col, max_bucket_size
+        ),
         build,
     )
 
@@ -366,6 +385,10 @@ def write_lsh_index(
     import json
     import os
 
+    from babylon_data_loader_spark.operators.index_store import (
+        write_meta_text,
+    )
+
     dim = len(emb.select(vec_col).first()[0])
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
     (
@@ -383,18 +406,17 @@ def write_lsh_index(
         .partitionBy("bucket")
         .parquet(path)
     )
-    # The meta file is the index's COMMIT MARKER (written after the
-    # parquet, checked for existence before reuse), so its write must
-    # be atomic: a crash mid-write would otherwise leave truncated
-    # JSON that blocks every future rebuild.
-    meta_path = os.path.join(path, "_lsh_meta.json")
-    tmp = f"{meta_path}.tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(
-            {"n_planes": n_planes, "dim": dim, "fingerprint": fingerprint},
-            fh,
-        )
-    os.replace(tmp, meta_path)  # atomic on POSIX
+    # The meta file is a caller-owned index's COMMIT MARKER (written
+    # after the parquet, checked for existence before reuse), so its
+    # write must be atomic: a crash mid-write would otherwise leave
+    # truncated JSON that blocks every future rebuild.
+    write_meta_text(
+        emb.sparkSession,
+        os.path.join(path, "_lsh_meta.json"),
+        json.dumps(
+            {"n_planes": n_planes, "dim": dim, "fingerprint": fingerprint}
+        ),
+    )
 
 
 def append_lsh_index(
@@ -430,6 +452,7 @@ def append_lsh_index(
     from babylon_data_loader_spark.operators.index_store import (
         check_append_schema,
         recover_index,
+        write_meta_text,
     )
 
     recover_index(path)
@@ -461,10 +484,7 @@ def append_lsh_index(
         .parquet(path)
     )
     meta["fingerprint"] = fingerprint
-    tmp = f"{meta_path}.tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, meta_path)  # atomic on POSIX
+    write_meta_text(new_vecs.sparkSession, meta_path, json.dumps(meta))
 
 
 def read_lsh_index(spark, path: str) -> tuple[DataFrame, dict]:
@@ -484,7 +504,7 @@ def read_lsh_index(spark, path: str) -> tuple[DataFrame, dict]:
         meta = json.load(fh)
     # schema-cached read: appends republish _SUCCESS, so the mtime key
     # re-infers whenever the store's files (hence schema) could change
-    return _read_store(spark, path, "_SUCCESS"), meta
+    return _read_store(spark, path), meta
 
 
 def lsh_search(
@@ -553,89 +573,58 @@ def knn_lsh(
     """
     import json
     import os
-    import uuid
 
     from babylon_data_loader_spark.operators.index_store import (
         df_fingerprint,
-        ensure_store_meta,
-        lineage_files,
-        store_path,
-        sweep_stale,
-        warehouse_dir,
-        write_store_meta,
+        get_or_build_store,
+        new_staging_dir,
     )
 
     spark = emb.sparkSession
-    fp = df_fingerprint(emb)
-    params = f"p{n_planes}"
-    if index_path is None:
-        if fp is not None:
-            index_path = store_path(spark, "lsh_index", fp, params)
-            sweep_stale(spark, "lsh_index", params, keep=index_path)
-        elif build_throwaway_index:
-            import shutil
-            import time
 
-            wh = warehouse_dir(spark)
-            # Self-cleaning staging: a throwaway index stays on disk
-            # while its lazy result plan is alive, so it cannot be
-            # removed here; instead each new staging sweeps siblings
-            # older than an hour (no live plan outlives that in any
-            # harness run).
-            now = time.time()
-            for entry in os.listdir(wh) if os.path.isdir(wh) else []:
-                if entry.startswith(("lsh_staging_", "_lsh_staging_")):
-                    full = os.path.join(wh, entry)
-                    try:
-                        if now - os.path.getmtime(full) > 3600:
-                            shutil.rmtree(full, ignore_errors=True)
-                    except OSError:
-                        pass
-            index_path = os.path.join(
-                wh, f"lsh_staging_{uuid.uuid4().hex[:12]}"
-            )
-        else:
-            raise ValueError(
-                "knn_lsh: input has no file lineage to fingerprint, so a "
-                "persistent index cannot be keyed to it. Pass index_path= "
-                "(caller-owned store) or build_throwaway_index=True to "
-                "accept a full staging write for this call."
-            )
-    meta_file = os.path.join(index_path, "_lsh_meta.json")
-    stale = False
-    if os.path.exists(meta_file):
-        with open(meta_file, encoding="utf-8") as fh:
-            meta = json.load(fh)
-        stale = meta.get("n_planes") != n_planes or (
-            fp is not None
-            and meta.get("fingerprint") is not None
-            and meta["fingerprint"] != fp
-        )
-    from babylon_data_loader_spark.operators.index_store import (
-        ACCESS_LOG,
-    )
-
-    ACCESS_LOG.append(
-        {
-            "kind": "lsh_index",
-            "params": params,
-            "hit": not stale and os.path.exists(meta_file),
-        }
-    )
-    if stale or not os.path.exists(meta_file):
+    def write(path: str) -> None:
         write_lsh_index(
             emb,
-            index_path,
+            path,
             n_planes=n_planes,
             id_col=id_col,
             vec_col=vec_col,
             fingerprint=fp,
         )
-        write_store_meta(index_path, lineage_files(emb))
+
+    if index_path is None:
+        fp = None  # the store's NAME carries the fingerprint
+        index_path = get_or_build_store(
+            emb, "lsh_index", f"p{n_planes}", write
+        )
+        if index_path is None:
+            if not build_throwaway_index:
+                raise ValueError(
+                    "knn_lsh: input has no file lineage to fingerprint, "
+                    "so a persistent index cannot be keyed to it. Pass "
+                    "index_path= (caller-owned store) or "
+                    "build_throwaway_index=True to accept a full "
+                    "staging write for this call."
+                )
+            # A throwaway index stays on disk while its lazy result
+            # plan is alive, so it cannot be removed here: it is a
+            # staging dir, which the store sweep ages out.
+            index_path = new_staging_dir(spark, "lsh_index")
+            write(index_path)
     else:
-        # legacy stores predate the source-file sidecar; backfill it
-        # so the next sweep_stale doesn't evict this live index
-        ensure_store_meta(index_path, emb)
+        fp = df_fingerprint(emb)
+        meta_file = os.path.join(index_path, "_lsh_meta.json")
+        stale = True
+        if os.path.exists(meta_file):
+            with open(meta_file, encoding="utf-8") as fh:
+                meta = json.load(fh)
+            stale = meta.get("n_planes") != n_planes or (
+                fp is not None
+                and meta.get("fingerprint") is not None
+                and meta["fingerprint"] != fp
+            )
+        if stale:
+            write(index_path)
     indexed, meta = read_lsh_index(spark, index_path)
     qvec = [
         float(x)

@@ -543,8 +543,6 @@ def q_incremental_decontaminate(
         )
         .select("h")
         .distinct(),
-        # pre-normalization (r11) key — superseded by n4lw_*, swept
-        retired_params=("n4_",),
     )
     batch = docs.where(F.expr("doc_id % 23 = 0"))
     return contamination_census(

@@ -450,8 +450,6 @@ def q_admission_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("h")
         .distinct(),
-        # pre-normalization (r11) key — superseded by n4lw_*, swept
-        retired_params=("n4_",),
     )
     # The store read carries parquet size stats, so Catalyst's
     # auto-broadcast threshold IS the guarded broadcast here (an

@@ -17,11 +17,10 @@ composition, term statistics, and the IVF quality curve.
   ratio, the corpus's quality proxy) × embedding labels — does the
   cheap text signal align with the semantic labeling? Majority-label
   share per decile.
-- ``q_ivf_nprobe_curve``: rows-only self-certifying recall@10 curve
-  over nprobe ∈ {1,2,4,8,16} for the IVF index — recall is PROVABLY
+- ``q_ivf_nprobe_curve``: oracle-checked recall@10 curve over
+  nprobe ∈ {1, 2, 4, 8, 16} for the IVF index — recall is PROVABLY
   non-decreasing in nprobe (candidate supersets) and exactly 1.0
-  when every list is probed; the query RAISES if the implementation
-  violates either.
+  when every list is probed (pinned by tests/test_det_ann.py).
 
 Scale notes: pair compositions read the at-rest verified-pair store
 and shuffle bare ids + small dimension values; coverage and
@@ -769,7 +768,7 @@ def _ivf_curve_oracle() -> str:
 def q_ivf_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF quality/cost curve a deployment actually tunes:
     recall@10 of a sampled-seed IVF index (16 lists) at
-    nprobe ∈ {1, 2, 4, 16}. The coarse quantizer is deterministic
+    nprobe ∈ {1, 2, 4, 8, 16}. The coarse quantizer is deterministic
     integer arithmetic (operators/det_ann.py), so the curve is
     oracle-checked exactly; the structural invariants (recall
     non-decreasing in nprobe, exhaustive probe recalls 1.0) are

@@ -553,15 +553,8 @@ def _float_pq_store_topk(
     q_knn_pq through r11, kept as the float-side probe
     q_knn_recall_guard declares (the det-oracle lane q_knn_pq no
     longer exercises the float codebooks)."""
-    import os as _os
-
     from babylon_data_loader_spark.operators.index_store import (
-        df_fingerprint,
-        ensure_store_meta,
-        lineage_files,
-        store_path,
-        sweep_stale,
-        write_store_meta,
+        get_or_build_store,
     )
     from babylon_data_loader_spark.operators.pq import (
         pq_encode,
@@ -570,47 +563,27 @@ def _float_pq_store_topk(
         read_pq_index,
         write_pq_index,
     )
+
+    def fit_encode():
+        books = pq_fit(emb, m=8, ksub=16, n_iters=2)
+        codes = pq_encode(emb, books).select("vec_id", "label", "pq_code")
+        return codes, books
+
+    def write(path: str) -> None:
+        codes, books = fit_encode()
+        write_pq_index(codes, path, books)
+
     # Train-once/search-many: the codes table is the at-rest index
     # (like the LSH/IVF stores), keyed by the table's CONTENT
     # fingerprint — NOT its path — so the driver regenerating testdata
     # in place gets a fresh index (stale path-keyed codes served old
-    # vec_ids/codebooks against new vectors); old-fingerprint dirs are
-    # swept. A real deployment rebuilds the index on ingest, not per
-    # query.
-    fp = df_fingerprint(emb)
-    if fp is None:  # no file lineage: build in-session, skip the store
-        books = pq_fit(emb, m=8, ksub=16, n_iters=2)
-        codes = pq_encode(emb, books).select("vec_id", "label", "pq_code")
+    # vec_ids/codebooks against new vectors). A real deployment
+    # rebuilds the index on ingest, not per query.
+    index_path = get_or_build_store(emb, "pq_index", "m8k16", write)
+    if index_path is None:  # no file lineage: build in-session
+        codes, books = fit_encode()
     else:
-        index_path = store_path(spark, "pq_index", fp, "m8k16")
-        sweep_stale(spark, "pq_index", "m8k16", keep=index_path)
-        from babylon_data_loader_spark.operators.index_store import (
-            ACCESS_LOG,
-        )
-
-        ACCESS_LOG.append(
-            {
-                "kind": "pq_index",
-                "params": "m8k16",
-                "hit": _os.path.exists(
-                    _os.path.join(index_path, "_codebooks.json")
-                ),
-            }
-        )
-        if _os.path.exists(_os.path.join(index_path, "_codebooks.json")):
-            # legacy stores predate the source-file sidecar; backfill
-            # so the next sweep_stale doesn't evict this live index
-            ensure_store_meta(index_path, emb)
-            codes, books = read_pq_index(spark, index_path)
-        else:
-            books = pq_fit(emb, m=8, ksub=16, n_iters=2)
-            write_pq_index(
-                pq_encode(emb, books).select("vec_id", "label", "pq_code"),
-                index_path,
-                books,
-            )
-            write_store_meta(index_path, lineage_files(emb))
-            codes, books = read_pq_index(spark, index_path)
+        codes, books = read_pq_index(spark, index_path)
     qvec = [
         float(x)
         for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]

@@ -162,8 +162,8 @@ def test_plan_size_estimate_known_and_unknown(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# index store: partition-type roundtrip + retired-params sweep
-# (ADVICE #4 / #5)
+# index store: partition-type roundtrip
+# (ADVICE #4)
 # ---------------------------------------------------------------------------
 
 
@@ -216,37 +216,6 @@ def test_store_partition_column_type_roundtrip(spark, tmp_path):
                     os.path.join(warehouse_dir(spark), e),
                     ignore_errors=True,
                 )
-
-
-def test_sweep_retired_removes_only_renamed_params(spark, tmp_path):
-    import shutil
-
-    from babylon_data_loader_spark.operators.index_store import (
-        sweep_retired,
-        warehouse_dir,
-    )
-
-    wh = warehouse_dir(spark)
-    os.makedirs(wh, exist_ok=True)
-    fp = "0123456789ab"
-    made = [
-        f"idx_swr_{fp}_p8",       # exact retired key
-        f"idx_swr_{fp}_n4_e9x",   # retired prefix key
-        f"idx_swr_{fp}_p8b",      # CURRENT key: must survive
-        f"idx_swr_{fp}_n4lw_e9x", # current prefixed key: must survive
-    ]
-    try:
-        for m in made:
-            os.makedirs(os.path.join(wh, m), exist_ok=True)
-        removed = sweep_retired(spark, "swr", ("p8", "n4_"))
-        assert removed == 2
-        left = sorted(
-            e for e in os.listdir(wh) if e.startswith("idx_swr_")
-        )
-        assert left == sorted(made[2:])
-    finally:
-        for m in made:
-            shutil.rmtree(os.path.join(wh, m), ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

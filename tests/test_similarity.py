@@ -344,9 +344,9 @@ def test_store_sweep_keeps_live_cross_sf_siblings(spark, tmp_path):
     """Alternating store access across two scale-factor dirs of the
     same table must NOT evict each other's stores (r8 VERDICT: the
     serial sf0.01 correctness run evicted the sf0.1 bench stores and
-    paid silent rebuilds). Each store's sidecar meta records its
-    source files; sweep_stale keeps siblings whose data is still live
-    and only removes stores whose data was regenerated or deleted."""
+    paid silent rebuilds). Each store's meta records its source
+    files; the sweep keeps stores whose data is still live and only
+    removes stores whose data was regenerated or deleted."""
     import os
     import shutil
 
@@ -396,8 +396,11 @@ def test_store_sweep_keeps_live_cross_sf_siblings(spark, tmp_path):
     os.remove(os.path.join(dirs[1], "embeddings.parquet"))
     access(dirs[0])
     from babylon_data_loader_spark.operators.index_store import (
+        sweep_dead_stores,
         warehouse_dir,
     )
+
+    sweep_dead_stores(spark)
 
     left = [
         e
@@ -823,13 +826,14 @@ def test_stored_embedding_pairs_reuse(spark, tmp_path):
 def test_sweep_dead_stores_full_warehouse(spark, tmp_path):
     """sweep_dead_stores removes every store whose recorded source
     data no longer exists unchanged — regardless of kind — while
-    leaving live stores and meta-less dirs (possible in-flight
+    leaving live stores and fresh staging dirs (possible in-flight
     builds) untouched (r16 full-warehouse maintenance sweep)."""
     import os
     import shutil
 
     from babylon_data_loader_spark.operators.index_store import (
         get_or_build_parquet,
+        new_staging_dir,
         sweep_dead_stores,
         warehouse_dir,
     )
@@ -852,9 +856,9 @@ def test_sweep_dead_stores_full_warehouse(spark, tmp_path):
     wh = warehouse_dir(spark)
     dead = [e for e in os.listdir(wh) if e.startswith("idx_swdead_")]
     assert len(dead) == 1
-    # a meta-less store-like dir: must survive the sweep
-    inflight = os.path.join(wh, "idx_swdead_000000000000_p9")
-    os.makedirs(inflight, exist_ok=True)
+    # a fresh staging dir (a build in flight): must survive the sweep
+    inflight = new_staging_dir(spark, "swdead")
+    os.makedirs(inflight)
     try:
         # data still live: nothing removed
         assert sweep_dead_stores(spark) == 0
@@ -863,6 +867,6 @@ def test_sweep_dead_stores_full_warehouse(spark, tmp_path):
         os.remove(d / "embeddings.parquet")
         assert sweep_dead_stores(spark) >= 1
         assert not os.path.isdir(os.path.join(wh, dead[0]))
-        assert os.path.isdir(inflight), "meta-less dir was swept"
+        assert os.path.isdir(inflight), "fresh staging dir was swept"
     finally:
         shutil.rmtree(inflight, ignore_errors=True)
