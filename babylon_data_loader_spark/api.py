@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from babylon_data_loader_spark.schemas import TRANSACTION_SCHEMA
+from babylon_data_loader_spark.session import local_frame
 
 
 def get_transaction_by_id(
@@ -60,7 +61,7 @@ def add_transaction(
     txn_id = str(uuid.uuid4())
     row = {field.name: txn.get(field.name) for field in TRANSACTION_SCHEMA.fields}
     df = (
-        spark.createDataFrame([tuple(row.values())], TRANSACTION_SCHEMA)
+        local_frame(spark, [tuple(row.values())], TRANSACTION_SCHEMA)
         .withColumn("transaction_id", F.lit(txn_id))
     )
     # open(): honor a migrated lake's recorded partition column

@@ -23,6 +23,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from babylon_data_loader_spark.config import EngineConfig
 from babylon_data_loader_spark.ingest.normalize import (
@@ -30,12 +31,26 @@ from babylon_data_loader_spark.ingest.normalize import (
     validate_transactions,
 )
 from babylon_data_loader_spark.operators.merge import merge_upsert
+from babylon_data_loader_spark.session import local_frame
 from babylon_data_loader_spark.sources.csv_source import (
     decoded_basename,
     list_csv_files,
     read_csv_dir,
 )
 from babylon_data_loader_spark.sources.parquet_lake import append_sync_log
+
+# The per-file status table (`<lake>/ingest_file_status`): written by
+# `_write_status`, read back with this schema so no footer inference.
+STATUS_SCHEMA = StructType(
+    [
+        StructField("run_id", StringType()),
+        StructField("file", StringType()),
+        StructField("status", StringType()),
+        StructField("reason", StringType()),
+        StructField("raw_rows", LongType()),
+        StructField("valid_rows", LongType()),
+    ]
+)
 
 
 @dataclass
@@ -95,7 +110,8 @@ class IngestResult:
         if self._status_spark is None:
             raise ValueError("no status table bound to this result")
         return (
-            self._status_spark.read.parquet(self._status_path)
+            self._status_spark.read.schema(STATUS_SCHEMA)
+            .parquet(self._status_path)
             .filter(F.col("run_id") == self._run_id)
             .drop("run_id")
         )
@@ -103,8 +119,11 @@ class IngestResult:
     @property
     def failures(self) -> dict[str, str]:
         """file → reason for this run's failures. Materialized from
-        the status table on first access; prefer :meth:`file_status`
-        when the failure count may be large."""
+        the status table on first access (not read at all when the run
+        counted none); prefer :meth:`file_status` when the failure count
+        may be large."""
+        if self._failures is None and not self.failed_files:
+            self._failures = {}
         if self._failures is None:
             self._failures = {
                 r["file"]: r["reason"]
@@ -125,7 +144,8 @@ class IngestResult:
         datalake/stats.go:13) — appendable to an audit table."""
         from pyspark.sql import functions as F
 
-        row = spark.createDataFrame(
+        row = local_frame(
+            spark,
             [
                 (
                     self.total_files,
@@ -170,20 +190,8 @@ def ingest(spark: SparkSession, config: EngineConfig) -> IngestResult:
 
     if not csv_files:
         if skipped_names:
-            _write_status(
-                spark,
-                status_path,
-                run_id,
-                spark.createDataFrame(
-                    [(n,) for n in skipped_names], "file string"
-                ).select(
-                    "file",
-                    F.lit("failed").alias("status"),
-                    F.lit("not a csv file").alias("reason"),
-                    F.lit(0).cast("long").alias("raw_rows"),
-                    F.lit(0).cast("long").alias("valid_rows"),
-                ),
-            )
+            status = _not_csv_status(spark, skipped_names)
+            _write_status(spark, status_path, run_id, status)
             result._bind_status(spark, status_path, run_id)
         result.failed_files = len(skipped_names)
         return result
@@ -231,16 +239,9 @@ def ingest(spark: SparkSession, config: EngineConfig) -> IngestResult:
         "raw_rows",
         F.coalesce(F.col("valid_rows"), F.lit(0)).alias("valid_rows"),
     )
-    skipped_status = spark.createDataFrame(
-        [(n,) for n in skipped_names], "file string"
-    ).select(
-        "file",
-        F.lit("failed").alias("status"),
-        F.lit("not a csv file").alias("reason"),
-        F.lit(0).cast("long").alias("raw_rows"),
-        F.lit(0).cast("long").alias("valid_rows"),
+    status = scanned_status.unionByName(
+        _not_csv_status(spark, skipped_names)
     )
-    status = scanned_status.unionByName(skipped_status)
     _write_status(spark, status_path, run_id, status)
     result._bind_status(spark, status_path, run_id)
 
@@ -273,7 +274,7 @@ def ingest(spark: SparkSession, config: EngineConfig) -> IngestResult:
     # only the FAILED names (usually few) to exclude, never the full
     # per-file stats. Files absent from the scan parsed to zero rows —
     # empty/header-only — and still count as processed (csv/csv.go:58-62).
-    failed_names = set(result.failures) if csv_files else set()
+    failed_names = set(result.failures)
     processed = {
         os.path.basename(p)
         for p in csv_files
@@ -292,15 +293,21 @@ def ingest(spark: SparkSession, config: EngineConfig) -> IngestResult:
     return result
 
 
+def _not_csv_status(spark: SparkSession, names: list[str]):
+    """Status rows for directory entries that are not CSV files."""
+    return local_frame(spark, [(n,) for n in names], "file string").select(
+        "file",
+        F.lit("failed").alias("status"),
+        F.lit("not a csv file").alias("reason"),
+        F.lit(0).cast("long").alias("raw_rows"),
+        F.lit(0).cast("long").alias("valid_rows"),
+    )
+
+
 def _write_status(
     spark: SparkSession, path: str, run_id: str, status
 ) -> None:
     """Append this run's per-file rows to the status table."""
-    status.select(
-        F.lit(run_id).alias("run_id"),
-        "file",
-        "status",
-        "reason",
-        "raw_rows",
-        "valid_rows",
+    status.withColumn("run_id", F.lit(run_id)).select(
+        *[F.col(f.name).cast(f.dataType) for f in STATUS_SCHEMA]
     ).write.mode("append").parquet(path)

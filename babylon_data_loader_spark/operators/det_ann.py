@@ -40,6 +40,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from babylon_data_loader_spark.session import local_frame
+
 #: quantization grid: floor(x * 1e6). Embedding components are O(1)
 #: floats, so quantized values sit near ±2^20; squared-distance terms
 #: near 2^44; 64-dim sums near 2^50 — exact in BIGINT with orders of
@@ -561,16 +563,16 @@ def int_lloyd_trajectory_store(
                 StructField("iter", LongType(), False),
                 StructField("inertia", LongType(), False),
                 StructField("n_shifted", LongType(), False),
+                # Nullable struct fields: local_frame cannot carry NOT
+                # NULL fields of a struct that holds an array.
                 StructField(
                     "codebook",
                     ArrayType(
                         StructType(
                             [
-                                StructField("cid", LongType(), False),
+                                StructField("cid", LongType()),
                                 StructField(
-                                    "cent",
-                                    ArrayType(LongType(), False),
-                                    False,
+                                    "cent", ArrayType(LongType(), False)
                                 ),
                             ]
                         )
@@ -591,7 +593,7 @@ def int_lloyd_trajectory_store(
             )
             for it in range(1, n_iters + 1)
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     # Params carry the full derivation spec (dim and the source
     # columns, not just k/iters): same aliasing discipline as

@@ -28,6 +28,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from babylon_data_loader_spark.session import local_frame
+
 _ACTIONS = {"drop", "quarantine", "fail"}
 
 
@@ -133,7 +135,7 @@ def enforce(
         raise FailedExpectationError(
             f"expectations failed with violations: {failed}"
         )
-    stats = spark.createDataFrame(rows, schema=res.stats.schema)
+    stats = local_frame(spark, rows, res.stats.schema)
     return ExpectationResult(res.passed, res.quarantined, stats)
 
 
@@ -178,11 +180,11 @@ def check_aggregates(
             # bind the scalar as a one-row `value` column so the
             # predicate reads naturally ("value BETWEEN 0 AND 100")
             passed = bool(
-                spark.createDataFrame([(float(value),)], "value DOUBLE")
+                local_frame(spark, [(float(value),)], "value DOUBLE")
                 .selectExpr(f"({c.predicate}) AS p")
                 .collect()[0]["p"]
             )
         out.append((c.name, value, passed))
-    return spark.createDataFrame(
-        out, schema="expectation STRING, value DOUBLE, passed BOOLEAN"
+    return local_frame(
+        spark, out, "expectation STRING, value DOUBLE, passed BOOLEAN"
     )

@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from babylon_data_loader_spark.session import local_frame
+
 
 def export_corpus(
     df: DataFrame,
@@ -78,5 +80,5 @@ def export_manifest(spark: SparkSession, path: str, fmt: str = "parquet") -> Dat
         for name in sorted(os.listdir(path))
         if not name.startswith(("_", "."))
     ]
-    size_df = spark.createDataFrame(sizes, "file STRING, n_bytes BIGINT")
+    size_df = local_frame(spark, sizes, "file STRING, n_bytes BIGINT")
     return per_file.join(size_df, on="file")

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from babylon_data_loader_spark.session import local_frame
+
 BLOOM_SIDECAR = "_bloom"
 N_BITS = 8192
 N_HASHES = 5
@@ -87,8 +89,8 @@ def write_bloom_sidecar(
         return
     cols = list(bloom_cols)
     n_parts = max(1, min(32, len(files) // 64 + 1))
-    paths = spark.createDataFrame(
-        files, schema="subdir string, file string"
+    paths = local_frame(
+        spark, files, "subdir string, file string"
     ).repartition(n_parts)
 
     def harvest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from babylon_data_loader_spark.session import local_frame
+
 STATS_SIDECAR = "_stats"
 
 STATS_SCHEMA = T.StructType(
@@ -151,12 +153,13 @@ def collect_file_stats(
 ) -> DataFrame:
     """Footer stats for ``files`` (``(subdir, rel_file)`` pairs under
     ``base_dir``), read on executors — the driver ships paths, never
-    parses a footer. Partition count tracks the file count so tiny
-    version dirs don't pay 32 Python-worker cold starts."""
+    parses a footer. The path frame is a local relation, so only the
+    ``mapInPandas`` harvest runs Python, on a partition count that
+    tracks the file count: a tiny version dir starts one worker."""
     cols = list(stats_cols)
     n_parts = max(1, min(32, len(files) // 64 + 1))
-    paths = spark.createDataFrame(
-        files, schema="subdir string, file string"
+    paths = local_frame(
+        spark, files, "subdir string, file string"
     ).repartition(n_parts)
 
     def harvest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

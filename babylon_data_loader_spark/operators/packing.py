@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from babylon_data_loader_spark.session import local_frame
+
 
 def packed_ids(
     tok: DataFrame,
@@ -68,8 +70,8 @@ def packed_ids(
     for row in sorted(totals, key=lambda r: r["_shard"]):
         offsets.append((int(row["_shard"]), offset))
         offset += int(row["_t"])
-    off_df = tok.sparkSession.createDataFrame(
-        offsets, "_shard BIGINT, _off BIGINT"
+    off_df = local_frame(
+        tok.sparkSession, offsets, "_shard BIGINT, _off BIGINT"
     )
     w = (
         Window.partitionBy("_shard")

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from babylon_data_loader_spark.functions.cache import persist_tracked
+from babylon_data_loader_spark.session import local_frame
 
 PID = "__rank_pid"
 
@@ -278,7 +279,7 @@ def _offsets_frame(
         # empty input: a one-row zero frame keeps the join resolvable
         out = [(0, *[v for n in sums for v in (zeros[n], 0)])]
     spark = part.sparkSession
-    return F.broadcast(spark.createDataFrame(out, schema)), dict(running)
+    return F.broadcast(local_frame(spark, out, schema)), dict(running)
 
 
 def _scan(
@@ -555,7 +556,7 @@ def grouped_running_totals_with_input(
             )
         ]
     off = F.broadcast(
-        part.sparkSession.createDataFrame(out, schema).withColumnsRenamed(
+        local_frame(part.sparkSession, out, schema).withColumnsRenamed(
             {g: f"__grp_{g}" for g in group_cols}
         )
     )
@@ -648,7 +649,7 @@ def _extreme_scan(
                 )
     if not out:
         out = [(0, *[None] * len(cols))]
-    off = F.broadcast(part.sparkSession.createDataFrame(out, schema))
+    off = F.broadcast(local_frame(part.sparkSession, out, schema))
     local = local.join(off, PID)
     for name in cols:
         local = local.withColumn(

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from babylon_data_loader_spark.session import local_frame
+
 _SEEDS = (0, 7)  # k = 2 hash functions derived from seeded xxhash64
 
 
@@ -100,7 +102,7 @@ def bloom_prefilter(
     at sf0.1)."""
     words = build_key_bloom(small, small_key, n_bits)
     spark = big.sparkSession
-    bitmap = spark.createDataFrame([(words,)], "_bloom_bitmap array<bigint>")
+    bitmap = local_frame(spark, [(words,)], "_bloom_bitmap array<bigint>")
     return (
         big.crossJoin(F.broadcast(bitmap))
         .filter(

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from babylon_data_loader_spark.operators.commit_backend import (
     PosixCommitBackend,
 )
+from babylon_data_loader_spark.session import local_frame
 
 # Spark's placeholder subdir value for a NULL partition key; a batch
 # carrying None in the partition column lands here on disk.
@@ -643,7 +644,8 @@ class TransactionalLake:
         try:
             one = dict([next(iter(manifest["partitions"].items()))])
             ptype = self._read_subdirs(spark, one).schema[pc].dataType
-            probe = spark.createDataFrame(
+            probe = local_frame(
+                spark,
                 [
                     (None if v == HIVE_NULL_PARTITION else v,)
                     for v in raw
@@ -1094,7 +1096,7 @@ class TransactionalLake:
         ]
         if not changed:
             schema = self.read(spark, version=v_to).schema
-            empty = spark.createDataFrame([], schema)
+            empty = local_frame(spark, [], schema)
             return empty.withColumn("change_type", F.lit("insert")).filter(
                 F.lit(False)
             )

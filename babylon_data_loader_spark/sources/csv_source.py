@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from babylon_data_loader_spark.session import local_frame
+
 # Go's encoding/csv: quotes escape by doubling ("").
 FROM_CSV_OPTIONS = {"escape": '"', "mode": "PERMISSIVE"}
 
@@ -225,12 +227,13 @@ def read_header_group(spark: SparkSession, group: HeaderGroup) -> DataFrame:
     # the sniff. (A data line byte-identical to the header line would
     # also be dropped — the reference would mis-ingest such a line too.)
     if group.header_lines is not None:
-        hdr = spark.createDataFrame(
+        hdr = local_frame(
+            spark,
             [
                 (os.path.basename(p), line)
                 for p, line in zip(group.paths, group.header_lines)
             ],
-            ["_file_base", "_header_line"],
+            "_file_base string, _header_line string",
         )
     else:
         # Distributed-sniffed group: the raw lines never visited the
@@ -321,7 +324,7 @@ def read_csv_dir(spark: SparkSession, directory: str) -> DataFrame:
                 StructField("account_id", StringType()),
             ]
         )
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     frames = [read_header_group(spark, g) for g in groups]
     out = frames[0]
     for frame in frames[1:]:

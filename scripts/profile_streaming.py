@@ -12,8 +12,10 @@ and trigger-execution latency. Prints one JSON line per lane:
   {"q": ..., "wall_s": ..., "n_batches": N,
    "batch_ms": [...], "rows": [...], "max_batch_ms": ...}
 
-Listener events are delivered asynchronously; the per-lane drain
-waits until no new event arrives for a settle interval.
+Progress events are delivered asynchronously, so each batch is tagged
+with its query's run id and counted for the lane that started that run;
+the per-lane drain waits until no new event arrives for a settle
+interval.
 """
 
 from __future__ import annotations
@@ -43,16 +45,25 @@ STREAM_LANES = [
 
 
 class _BatchRecorder(StreamingQueryListener):
+    """Records every micro-batch with the lane whose query ran it.
+
+    Spark calls onQueryStarted synchronously inside start(), so a run id
+    maps to the lane running at that moment; a late progress event of
+    one lane's run never counts for the next lane."""
+
     def __init__(self) -> None:
+        self.lane: str | None = None
+        self.lane_of_run: dict[str, str | None] = {}
         self.batches: list[dict] = []
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
+        self.lane_of_run[str(event.runId)] = self.lane
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = json.loads(event.progress.json)
         self.batches.append(
             {
+                "run_id": p.get("runId"),
                 "batch_id": p.get("batchId"),
                 "rows": p.get("numInputRows"),
                 "ms": (p.get("durationMs") or {}).get(
@@ -67,6 +78,12 @@ class _BatchRecorder(StreamingQueryListener):
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
 
+    def lane_batches(self, lane: str) -> list[dict]:
+        return [
+            b for b in self.batches
+            if self.lane_of_run.get(b["run_id"]) == lane
+        ]
+
 
 def main() -> int:
     args = sys.argv[1:]
@@ -80,17 +97,18 @@ def main() -> int:
     # absorb first-action JVM/codegen startup like bench.py does
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     for name in names:
-        rec.batches = []
+        rec.lane = name
         t0 = time.time()
         qmap[name](spark, sf_dir).count()
         wall = time.time() - t0
         # drain the async listener queue: settle until quiet
         seen = -1
-        while seen != len(rec.batches):
-            seen = len(rec.batches)
+        while seen != len(rec.lane_batches(name)):
+            seen = len(rec.lane_batches(name))
             time.sleep(0.5)
         batches = sorted(
-            rec.batches, key=lambda b: (b["batch_id"] is None, b["batch_id"])
+            rec.lane_batches(name),
+            key=lambda b: (b["batch_id"] is None, b["batch_id"]),
         )
         ms = [b["ms"] for b in batches if b["ms"] is not None]
         print(
