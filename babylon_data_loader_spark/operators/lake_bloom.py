@@ -31,12 +31,25 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from babylon_data_loader_spark.session import local_frame
 
 BLOOM_SIDECAR = "_bloom"
 N_BITS = 8192
 N_HASHES = 5
+
+BLOOM_SCHEMA = T.StructType(
+    [
+        T.StructField("subdir", T.StringType()),
+        T.StructField("file", T.StringType()),
+        T.StructField("column", T.StringType()),
+        # hex bitset; None when the file's column could not be read
+        # (no filter: the file is always kept)
+        T.StructField("bits_hex", T.StringType()),
+        T.StructField("n_bits", T.LongType()),
+    ]
+)
 
 
 def bloom_positions(value: object, n_bits: int = N_BITS) -> list[int]:
@@ -111,11 +124,7 @@ def write_bloom_sidecar(
             if rows:
                 yield pd.DataFrame(rows)
 
-    blooms = paths.mapInPandas(
-        harvest,
-        schema="subdir string, file string, column string, "
-        "bits_hex string, n_bits long",
-    )
+    blooms = paths.mapInPandas(harvest, schema=BLOOM_SCHEMA)
     blooms.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(version_dir, BLOOM_SIDECAR)
     )
@@ -142,7 +151,8 @@ def bloom_keep_files(
     if not parts:
         return None
     rows = (
-        spark.read.parquet(*parts)
+        spark.read.schema(BLOOM_SCHEMA)
+        .parquet(*parts)
         .filter(F.col("subdir").isin(subdirs) & (F.col("column") == col))
         .collect()  # O(files in touched subdirs) — index metadata
     )

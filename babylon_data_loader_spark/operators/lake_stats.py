@@ -229,7 +229,7 @@ def prune_files(
     ]
     if not parts:
         return None
-    stats = spark.read.parquet(*parts).filter(
+    stats = spark.read.schema(STATS_SCHEMA).parquet(*parts).filter(
         F.col("subdir").isin(subdirs)
     )
     disjoint = F.lit(False)

@@ -35,7 +35,9 @@ uses, at partition granularity:
 Scale notes: rewrite cost per merge is bounded by the touched
 partitions, not the table; the manifest is O(partitions); readers
 issue one scan per live version dir (appends accumulate dirs —
-``compact()`` folds a partition back to one dir). All the underscore-
+``compact()`` folds a partition back to one dir). Each version dir
+records its data schema in ``_schema.json`` when it is written, so
+opening that scan costs no footer-inference job. All the underscore-
 prefixed control dirs are invisible to plain ``spark.read.parquet`` on
 the lake root, so a legacy plain lake migrates in place: its root
 becomes data dir ``"."`` of manifest v1, with zero data movement.
@@ -52,6 +54,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from babylon_data_loader_spark.operators.commit_backend import (
     PosixCommitBackend,
@@ -67,6 +70,29 @@ HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 # lake with an ordinary column named `_rn` is merged intact instead
 # of having the working column silently replace and then drop it.
 RESOLVE_RN = "__bdl_rn"
+
+# Per-version-dir data schema, published when the dir is written.
+SCHEMA_SIDECAR = "_schema.json"
+
+
+def _nullable(dtype: T.DataType) -> T.DataType:
+    """``dtype`` with every field, element and map value nullable, field
+    metadata kept — the schema Spark's file sources report for any
+    stored parquet schema (Scala's ``DataType.asNullable``)."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(_nullable(dtype.elementType), True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(
+            _nullable(dtype.keyType), _nullable(dtype.valueType), True
+        )
+    return dtype
 
 
 def _orderable(dtype) -> bool:
@@ -152,6 +178,10 @@ class TransactionalLake:
         self._versions_dir = os.path.join(lake_path, "_versions")
         self._manifest_dir = os.path.join(lake_path, "_manifest")
         self._current_path = os.path.join(lake_path, "_CURRENT")
+        # The manifest open() resolved (None: not versioned, or built
+        # without open()). A committed manifest never changes, so
+        # read(version=snapshot["version"]) reuses it with no I/O.
+        self.snapshot: dict | None = None
 
     @classmethod
     def open(cls, lake_path: str, **kwargs) -> "TransactionalLake":
@@ -159,15 +189,15 @@ class TransactionalLake:
         in the current manifest (written by migrate_partitioning) —
         the safe way to reopen a lake whose partitioning may have
         evolved; falls back to the default/kwarg column for manifests
-        that predate the field."""
-        probe = cls(lake_path, **kwargs)
-        if probe.is_versioned():
-            recorded = probe.current_manifest().get("partition_col")
-            if recorded and recorded != probe.partition_col:
-                kwargs = dict(kwargs)
-                kwargs["partition_col"] = recorded
-                return cls(lake_path, **kwargs)
-        return probe
+        that predate the field. The manifest it read is kept as
+        ``snapshot``."""
+        handle = cls(lake_path, **kwargs)
+        snapshot = handle._committed_manifest()
+        recorded = snapshot and snapshot.get("partition_col")
+        if recorded and recorded != handle.partition_col:
+            handle = cls(lake_path, **{**kwargs, "partition_col": recorded})
+        handle.snapshot = snapshot
+        return handle
 
     # -- state inspection ---------------------------------------------------
 
@@ -183,14 +213,23 @@ class TransactionalLake:
     def exists(self) -> bool:
         return self.is_versioned() or self._has_legacy_data()
 
+    def _committed_manifest(self) -> dict | None:
+        """The manifest ``_CURRENT`` names, or None for an unversioned
+        path: one pointer read and one manifest read."""
+        try:
+            name = self.backend.read(self._current_path).strip()
+        except FileNotFoundError:
+            return None
+        return json.loads(
+            self.backend.read(os.path.join(self._manifest_dir, name))
+        )
+
     def current_manifest(self) -> dict:
         """The active manifest; migrates a legacy plain lake in place
         (its root becomes data dir ``"."`` — no data movement)."""
-        if self.is_versioned():
-            name = self.backend.read(self._current_path).strip()
-            return json.loads(
-                self.backend.read(os.path.join(self._manifest_dir, name))
-            )
+        manifest = self._committed_manifest()
+        if manifest is not None:
+            return manifest
         partitions: dict[str, list[str]] = {}
         if self._has_legacy_data():
             for entry in sorted(os.listdir(self.lake_path)):
@@ -309,6 +348,14 @@ class TransactionalLake:
             )
         return tags[name]
 
+    def _manifest(self, version: int | None) -> dict:
+        """The manifest a read of ``version`` (None: current) sees."""
+        if version is None:
+            return self.current_manifest()
+        if self.snapshot is not None and version == self.snapshot["version"]:
+            return self.snapshot
+        return self.manifest_at(version)
+
     def read(
         self,
         spark: SparkSession,
@@ -319,35 +366,9 @@ class TransactionalLake:
             if version is not None:
                 raise ValueError("pass version OR tag, not both")
             version = self.resolve_tag(tag)
-        manifest = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
+        return self._read_partitions(
+            spark, self._manifest(version)["partitions"]
         )
-        by_dir: dict[str, list[str]] = {}
-        for subdir, dirs in manifest["partitions"].items():
-            for d in dirs:
-                by_dir.setdefault(d, []).append(subdir)
-        if not by_dir:
-            raise FileNotFoundError(
-                f"empty or missing lake at {self.lake_path}"
-            )
-        frames = []
-        for d, subdirs in sorted(by_dir.items()):
-            base = (
-                self.lake_path
-                if d == "."
-                else os.path.join(self.lake_path, d)
-            )
-            frames.append(
-                spark.read.option("basePath", base).parquet(
-                    *[os.path.join(base, s) for s in sorted(subdirs)]
-                )
-            )
-        out = frames[0]
-        for frame in frames[1:]:
-            out = out.unionByName(frame, allowMissingColumns=True)
-        return out
 
     def read_pruned(
         self,
@@ -366,56 +387,19 @@ class TransactionalLake:
             prune_files,
         )
 
-        manifest = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
-        )
-        by_dir: dict[str, list[str]] = {}
-        for subdir, dirs in manifest["partitions"].items():
-            for d in dirs:
-                by_dir.setdefault(d, []).append(subdir)
-        if not by_dir:
-            raise FileNotFoundError(
-                f"empty or missing lake at {self.lake_path}"
-            )
-        frames = []
-        for d, subdirs in sorted(by_dir.items()):
-            base = (
-                self.lake_path
-                if d == "."
-                else os.path.join(self.lake_path, d)
-            )
-            kept = (
-                None
-                if d == "."
-                else prune_files(spark, base, sorted(subdirs), predicates)
-            )
-            if kept is None:
-                paths = [os.path.join(base, s) for s in sorted(subdirs)]
-            else:
-                paths = [
-                    os.path.join(base, s, f)
-                    for s in sorted(kept)
-                    for f in kept[s]
-                ]
-            if paths:
-                frames.append(
-                    spark.read.option("basePath", base).parquet(*paths)
-                )
         cond = F.lit(True)
         for col, lo, hi in predicates:
             if lo is not None:
                 cond = cond & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(col) <= F.lit(hi))
-        if not frames:
-            # Every file pruned: an empty frame with the live schema.
-            return self.read(spark, version=version).filter(F.lit(False))
-        out = frames[0]
-        for frame in frames[1:]:
-            out = out.unionByName(frame, allowMissingColumns=True)
-        return out.filter(cond)
+        return self._read_partitions(
+            spark,
+            self._manifest(version)["partitions"],
+            lambda base, subdirs: prune_files(
+                spark, base, subdirs, predicates
+            ),
+        ).filter(cond)
 
     def read_lookup(
         self,
@@ -434,49 +418,86 @@ class TransactionalLake:
             bloom_keep_files,
         )
 
-        manifest = (
-            self.current_manifest()
-            if version is None
-            else self.manifest_at(version)
-        )
+        return self._read_partitions(
+            spark,
+            self._manifest(version)["partitions"],
+            lambda base, subdirs: bloom_keep_files(
+                spark, base, subdirs, col, value
+            ),
+        ).filter(F.col(col) == F.lit(value))
+
+    def _dir_schema(self, base: str) -> T.StructType | None:
+        """The data schema recorded in version dir ``base``; None when
+        its sidecar is missing (the adopted ``"."`` dir, dirs written
+        before sidecars existed) or unreadable — the caller then lets
+        Spark infer it from a footer."""
+        try:
+            text = self.backend.read(os.path.join(base, SCHEMA_SIDECAR))
+        except FileNotFoundError:
+            return None
+        try:
+            return T.StructType.fromJson(json.loads(text))
+        except (
+            ValueError, LookupError, TypeError, AttributeError, AssertionError
+        ):
+            return None
+
+    def _read_partitions(
+        self,
+        spark: SparkSession,
+        partitions: dict[str, list[str]],
+        keep_files=None,
+    ) -> DataFrame:
+        """The one lake reader: the rows of ``partitions`` (subdir →
+        its commit-ordered version dirs), one parquet scan per version
+        dir, unioned by name (schema evolution NULL-fills missing
+        columns). ``keep_files(base, subdirs)`` may narrow a dir to
+        ``{subdir: [file, ...]}`` (None: read it whole). Hive partition
+        discovery types the partition column, so a scan opened with
+        the dir's recorded data schema equals the inferred one."""
         by_dir: dict[str, list[str]] = {}
-        for subdir, dirs in manifest["partitions"].items():
-            for d in dirs:
+        for subdir in sorted(partitions):
+            for d in partitions[subdir]:
                 by_dir.setdefault(d, []).append(subdir)
         if not by_dir:
             raise FileNotFoundError(
                 f"empty or missing lake at {self.lake_path}"
             )
         frames = []
-        for d, subdirs in sorted(by_dir.items()):
+        # "." first, then order of first appearance: a function of the
+        # manifest alone, so the union's column order never depends on
+        # the random version-dir names.
+        for d in sorted(by_dir, key=lambda d: d != "."):
+            subdirs = by_dir[d]
             base = (
                 self.lake_path
                 if d == "."
                 else os.path.join(self.lake_path, d)
             )
-            kept = (
-                None
-                if d == "."
-                else bloom_keep_files(spark, base, sorted(subdirs), col, value)
-            )
+            kept = keep_files(base, subdirs) if keep_files else None
             if kept is None:
-                paths = [os.path.join(base, s) for s in sorted(subdirs)]
+                paths = [os.path.join(base, s) for s in subdirs]
             else:
                 paths = [
                     os.path.join(base, s, f)
                     for s in sorted(kept)
                     for f in kept[s]
                 ]
-            if paths:
-                frames.append(
-                    spark.read.option("basePath", base).parquet(*paths)
-                )
+            if not paths:
+                continue
+            reader = spark.read.option("basePath", base)
+            schema = self._dir_schema(base)
+            if schema is not None:
+                reader = reader.schema(schema)
+            frames.append(reader.parquet(*paths))
         if not frames:
-            return self.read(spark, version=version).filter(F.lit(False))
-        out = frames[0]
-        for frame in frames[1:]:
-            out = out.unionByName(frame, allowMissingColumns=True)
-        return out.filter(F.col(col) == F.lit(value))
+            # Every file pruned: an empty frame with the live schema.
+            return self._read_partitions(spark, partitions).filter(
+                F.lit(False)
+            )
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+        )
 
     # -- write --------------------------------------------------------------
 
@@ -520,6 +541,20 @@ class TransactionalLake:
             .option("compression", "zstd")
             .partitionBy(self.partition_col)
             .parquet(full)
+        )
+        # Record the data schema the way the parquet reader will report
+        # it, so every later scan of this dir skips footer inference.
+        # The dir is unreachable until the manifest commit, so a crash
+        # here leaves an orphan for vacuum.
+        self.backend.publish(
+            os.path.join(full, SCHEMA_SIDECAR),
+            T.StructType(
+                [
+                    f
+                    for f in _nullable(df.schema).fields
+                    if f.name != self.partition_col
+                ]
+            ).json(),
         )
         subdirs = [
             e
@@ -626,7 +661,7 @@ class TransactionalLake:
         )
 
         def _discovery_scan() -> set[str]:
-            full = self._read_subdirs(spark, manifest["partitions"])
+            full = self._read_partitions(spark, manifest["partitions"])
             # rows the delete will REMOVE (TRUE-condition rows, SQL
             # DELETE semantics — NULL keeps the row)
             deletes = F.coalesce(condition, F.lit(False))
@@ -643,7 +678,7 @@ class TransactionalLake:
             return _discovery_scan()
         try:
             one = dict([next(iter(manifest["partitions"].items()))])
-            ptype = self._read_subdirs(spark, one).schema[pc].dataType
+            ptype = self._read_partitions(spark, one).schema[pc].dataType
             probe = local_frame(
                 spark,
                 [
@@ -762,7 +797,7 @@ class TransactionalLake:
                 if self._subdir_value(subdir) in touched_values
             }
             if stored_subdirs:
-                stored = self._read_subdirs(spark, stored_subdirs)
+                stored = self._read_partitions(spark, stored_subdirs)
                 # Anti-join out stored rows whose key appears in the
                 # batch; one batch of keys is small relative to the
                 # table ⇒ broadcast it. eqNullSafe: a NULL in a key
@@ -915,7 +950,7 @@ class TransactionalLake:
                 for subdir, dirs in manifest["partitions"].items()
                 if self._subdir_value(subdir) in touched_values
             }
-            stored = self._read_subdirs(spark, stored_subdirs)
+            stored = self._read_partitions(spark, stored_subdirs)
             # touched partitions may be ONLY the null-sentinel dir, in
             # which case hive inference types the partition column
             # VOID and the survivor write would reject it — recover
@@ -927,7 +962,7 @@ class TransactionalLake:
                 stored.schema[self.partition_col].dataType, NullType
             ):
                 canonical = (
-                    self._read_subdirs(spark, manifest["partitions"])
+                    self._read_partitions(spark, manifest["partitions"])
                     .schema[self.partition_col]
                     .dataType
                 )
@@ -1008,7 +1043,7 @@ class TransactionalLake:
         )
         for attempt in range(max_retries + 1):
             manifest = self.current_manifest()
-            df = self.read(spark)
+            df = self._read_partitions(spark, manifest["partitions"])
             rel, new_subdirs = migrated._write_version_dir(df)
             new_manifest = {
                 "version": manifest["version"] + 1,
@@ -1069,7 +1104,9 @@ class TransactionalLake:
         manifest = self.current_manifest()
         if not manifest["partitions"]:
             return
-        rel, new_subdirs = self._write_version_dir(self.read(spark))
+        rel, new_subdirs = self._write_version_dir(
+            self._read_partitions(spark, manifest["partitions"])
+        )
         self._claim_and_commit(
             self._next_manifest(manifest, {s: [rel] for s in new_subdirs})
         )
@@ -1100,12 +1137,12 @@ class TransactionalLake:
             return empty.withColumn("change_type", F.lit("insert")).filter(
                 F.lit(False)
             )
-        old = self._read_subdirs(
+        old = self._read_partitions(
             spark,
             {s: m_from["partitions"][s] for s in changed
              if s in m_from["partitions"]},
         ) if any(s in m_from["partitions"] for s in changed) else None
-        new = self._read_subdirs(
+        new = self._read_partitions(
             spark,
             {s: m_to["partitions"][s] for s in changed
              if s in m_to["partitions"]},
@@ -1286,27 +1323,3 @@ class TransactionalLake:
             "removed_dirs": removed,
             "removed_manifests": removed_manifests,
         }
-
-    def _read_subdirs(
-        self, spark: SparkSession, subdir_map: dict[str, list[str]]
-    ) -> DataFrame:
-        by_dir: dict[str, list[str]] = {}
-        for subdir, dirs in subdir_map.items():
-            for d in dirs:
-                by_dir.setdefault(d, []).append(subdir)
-        frames = []
-        for d, subdirs in sorted(by_dir.items()):
-            base = (
-                self.lake_path
-                if d == "."
-                else os.path.join(self.lake_path, d)
-            )
-            frames.append(
-                spark.read.option("basePath", base).parquet(
-                    *[os.path.join(base, s) for s in sorted(subdirs)]
-                )
-            )
-        out = frames[0]
-        for frame in frames[1:]:
-            out = out.unionByName(frame, allowMissingColumns=True)
-        return out

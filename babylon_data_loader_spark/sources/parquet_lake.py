@@ -23,17 +23,17 @@ def read_transactions(
     the physical analog of picking one Mongo collection.
 
     A versioned lake (operators/tx_lake.py) is resolved through its
-    _CURRENT manifest — an atomic snapshot; a plain parquet lake is
-    read directly."""
+    _CURRENT manifest — an atomic snapshot, read once by ``open()``; a
+    plain parquet lake is read directly."""
     from babylon_data_loader_spark.operators.tx_lake import (
         TransactionalLake,
     )
 
     lake = TransactionalLake.open(lake_path)
     df = (
-        lake.read(spark)
-        if lake.is_versioned()
-        else spark.read.parquet(lake_path)
+        spark.read.parquet(lake_path)
+        if lake.snapshot is None
+        else lake.read(spark, version=lake.snapshot["version"])
     )
     if data_source is not None:
         df = df.filter(F.col("data_source") == data_source)

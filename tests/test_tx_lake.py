@@ -6,11 +6,14 @@ from __future__ import annotations
 
 import os
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from babylon_data_loader_spark.operators.tx_lake import (
+    SCHEMA_SIDECAR,
     ConcurrentWriteError,
     TransactionalLake,
 )
@@ -26,6 +29,39 @@ def state(spark, lake):
     return sorted(
         (r["k"], r["v"], r["data_source"])
         for r in lake.read(spark).collect()
+    )
+
+
+def assert_sidecar_read_matches(spark, lake):
+    """Every live written dir carries a sidecar equal to the data
+    schema its footers give, and reading through the recorded schemas
+    gives exactly what the inferred per-dir read gives: schema (column
+    order, nullability, field metadata) and rows."""
+    live = {
+        d
+        for dirs in lake.current_manifest()["partitions"].values()
+        for d in dirs
+        if d != "."
+    }
+    assert live
+    for d in live:
+        # the sidecar holds the data schema a footer read reports
+        base = os.path.join(lake.lake_path, d)
+        data = [
+            f
+            for f in spark.read.parquet(base).schema.fields
+            if f.name != lake.partition_col
+        ]
+        assert lake._dir_schema(base) == StructType(data)
+    recorded = lake.read(spark)
+    lake._dir_schema = lambda base: None
+    try:
+        inferred = lake.read(spark)
+    finally:
+        del lake._dir_schema
+    assert recorded.schema.json() == inferred.schema.json()
+    assert sorted(map(repr, recorded.collect())) == sorted(
+        map(repr, inferred.collect())
     )
 
 
@@ -47,8 +83,14 @@ def test_crash_before_pointer_swap_leaves_old_state(spark, tmp_path, monkeypatch
     lake.merge(spark, frame(spark, [(1, "a", "chase")]), KEY)
     before = state(spark, lake)
 
+    publish = lake.backend.publish
+
     def boom(path, payload):
-        raise RuntimeError("simulated crash before pointer swap")
+        # the version dir's schema sidecar is published too; crash only
+        # at the pointer swap, after the claim
+        if path.endswith("_CURRENT"):
+            raise RuntimeError("simulated crash before pointer swap")
+        publish(path, payload)
 
     monkeypatch.setattr(lake.backend, "publish", boom)
     with pytest.raises(RuntimeError, match="simulated crash"):
@@ -115,10 +157,12 @@ def test_append_accumulates_and_compact_folds(spark, tmp_path):
     assert len(state(spark, lake)) == 3
     m = lake.current_manifest()
     assert len(m["partitions"]["data_source=chase"]) == 2  # two dirs
+    assert_sidecar_read_matches(spark, lake)
     lake.compact(spark)
     m2 = lake.current_manifest()
     assert len(m2["partitions"]["data_source=chase"]) == 1
     assert len(state(spark, lake)) == 3  # data unchanged
+    assert_sidecar_read_matches(spark, lake)
 
 
 def test_reader_snapshot_isolation(spark, tmp_path):
@@ -149,6 +193,7 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert rows[2]["extra"] is None  # untouched syn partition (filled
     # by the reader's allowMissingColumns union)
     assert set(rows) == {1, 2, 3}
+    assert_sidecar_read_matches(spark, lake)
 
 
 def test_time_travel_reads(spark, tmp_path):
@@ -797,6 +842,7 @@ def test_delete_where_semantics(spark, tmp_path):
 
     # pre-delete snapshot still has all 4 rows
     assert lake.read(spark, version=v1).count() == 4
+    assert_sidecar_read_matches(spark, lake)
 
 
 def test_delete_where_partition_pruning_metadata_only(spark, tmp_path):
@@ -882,3 +928,179 @@ def test_condition_attr_names_prechecks_fast_path(spark):
     assert names(F.lit(True)) == set()
     # a plain-string condition is not a Column — unknown, not a crash
     assert names("data_source = 'chase'") is None
+
+
+def test_schema_sidecar_nested_null_partition_numeric_migration(
+    spark, tmp_path
+):
+    """The recorded schema matches the inferred one for a frame with a
+    NOT NULL column, field metadata and nested array/map types, after
+    a delete that touches only the NULL partition (whose inferred
+    partition type is VOID) and after migrating the partitioning onto
+    a numeric-looking string column (inferred as int)."""
+    from pyspark.sql import types as T
+
+    nest = T.StructType(
+        [
+            T.StructField("xs", T.ArrayType(T.LongType(), False), False),
+            T.StructField(
+                "m", T.MapType(T.StringType(), T.DoubleType(), False)
+            ),
+        ]
+    )
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("v", T.StringType(), True, {"comment": "value"}),
+            T.StructField("acct", T.StringType()),
+            T.StructField("nest", nest, False),
+            T.StructField("data_source", T.StringType()),
+        ]
+    )
+    rows = [
+        (1, "a", "1001", ([1, 2], {"x": 1.0}), "chase"),
+        (2, "b", "1002", ([3], {}), None),
+        (3, "c", "1001", ([], {"y": 2.0}), None),
+    ]
+    lake = TransactionalLake(str(tmp_path / "lake"))
+    lake.merge(spark, spark.createDataFrame(rows, schema), KEY)
+    assert_sidecar_read_matches(spark, lake)
+    assert lake.read(spark).schema["v"].metadata == {"comment": "value"}
+    assert lake.delete_where(spark, F.col("k") == 3) == 1
+    assert_sidecar_read_matches(spark, lake)
+    migrated = lake.migrate_partitioning(spark, "acct")
+    assert_sidecar_read_matches(spark, migrated)
+    assert migrated.read(spark).schema["acct"].dataType == T.IntegerType()
+
+
+def test_lookup_on_recorded_schemas_runs_one_job(spark, tmp_path, monkeypatch):
+    """Opening a lake whose dirs carry schema sidecars and building a
+    point lookup on it runs no Spark job (no footer inference per
+    dir) and reads the snapshot once (one _CURRENT read, one manifest
+    read); the lookup's collect is a single job."""
+    from babylon_data_loader_spark.api import (
+        add_transaction,
+        get_transaction_by_id,
+    )
+    from babylon_data_loader_spark.operators.commit_backend import (
+        PosixCommitBackend,
+    )
+    from babylon_data_loader_spark.sources.parquet_lake import (
+        read_transactions,
+    )
+
+    path = str(tmp_path / "transactions")
+    txn = {"type": "DEBIT_CARD", "amount": -1.5, "data_source": "chase"}
+    ids = [
+        add_transaction(spark, path, {**txn, "description": f"t{i}"})
+        for i in range(3)
+    ]
+    sc = spark.sparkContext
+    calls = []
+    for name in ("read", "exists"):
+        orig = getattr(PosixCommitBackend, name)
+        monkeypatch.setattr(
+            PosixCommitBackend,
+            name,
+            lambda self, key, orig=orig, name=name: calls.append(
+                (name, os.path.basename(key))
+            )
+            or orig(self, key),
+        )
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    lookup, built = jobs_of(
+        "sidecar-lookup-build",
+        lambda: get_transaction_by_id(
+            read_transactions(spark, path), ids[1], "DEBIT_CARD"
+        ),
+    )
+    assert built == []
+    # one _CURRENT and one manifest read; one sidecar read per dir
+    assert Counter(calls) == {
+        ("read", "_CURRENT"): 1,
+        ("read", "v3.json"): 1,
+        ("read", SCHEMA_SIDECAR): 3,
+    }
+    rows, ran = jobs_of("sidecar-lookup-collect", lookup.collect)
+    assert [r["transaction_id"] for r in rows] == [ids[1]]
+    assert len(ran) == 1
+
+
+def test_dirs_without_usable_sidecar_fall_back_to_inference(spark, tmp_path):
+    """The adopted legacy root dir has no sidecar, a dir may lose its
+    sidecar, and an unparseable sidecar is ignored: each is read with
+    its inferred schema and the lake reads as before."""
+    path = str(tmp_path / "lake")
+    frame(spark, [(1, "old", "chase"), (2, "keep", "syn")]).write.partitionBy(
+        "data_source"
+    ).parquet(path)
+    lake = TransactionalLake(path)
+    lake.append(spark, frame(spark, [(3, "c", "chase")]))
+    lake.append(spark, frame(spark, [(4, "d", "syn")]))
+    dirs = lake.current_manifest()["partitions"]
+    missing, garbled = dirs["data_source=chase"][1], dirs["data_source=syn"][1]
+    os.remove(os.path.join(path, missing, SCHEMA_SIDECAR))
+    assert lake._dir_schema(path) is None
+    for bad in [
+        "{not json",
+        "[1, 2]",
+        '{"fields": 3}',
+        '{"fields": [[1]]}',
+        '{"fields": [{"name": "k"}]}',
+        '{"fields": [{"name": 1, "type": "string"}]}',
+        '{"fields": [{"name": "k", "type": "no_such_type"}]}',
+    ]:
+        with open(os.path.join(path, garbled, SCHEMA_SIDECAR), "w") as fh:
+            fh.write(bad)
+        assert lake._dir_schema(os.path.join(path, garbled)) is None, bad
+    assert state(spark, lake) == [
+        (1, "old", "chase"),
+        (2, "keep", "syn"),
+        (3, "c", "chase"),
+        (4, "d", "syn"),
+    ]
+    assert lake.read(spark).columns == ["k", "v", "data_source"]
+
+
+def test_column_order_independent_of_dir_names(spark, tmp_path, monkeypatch):
+    """Two lakes with one commit history read with one column order,
+    whatever their random version-dir names: the merge dir lacks the
+    column the later append adds, and the union follows commit order,
+    not the names' sort order."""
+    import types
+
+    from babylon_data_loader_spark.operators import tx_lake
+
+    def history(path, names):
+        it = iter(names)
+        monkeypatch.setattr(
+            tx_lake,
+            "uuid",
+            types.SimpleNamespace(
+                uuid4=lambda: types.SimpleNamespace(hex=next(it))
+            ),
+        )
+        lake = TransactionalLake(path)
+        lake.merge(spark, frame(spark, [(1, "a", "chase")]), KEY)
+        lake.append(
+            spark,
+            spark.createDataFrame(
+                [(2, "b", "chase", "x")],
+                "k BIGINT, v STRING, data_source STRING, t STRING",
+            ),
+        )
+        return lake.read(spark).columns
+
+    first = history(str(tmp_path / "a"), ["0" * 12, "f" * 12])
+    second = history(str(tmp_path / "b"), ["f" * 12, "0" * 12])
+    assert first == second == ["k", "v", "data_source", "t"]
