@@ -148,16 +148,6 @@ def gram_hashes(
     )
 
 
-#: meta sidecar name for explicit-path gram indexes (underscore-led:
-#: invisible to parquet readers of the index dir)
-GRAM_META = "_gram_meta.json"
-
-
-def _gram_meta_path(path: str) -> str:
-    # posixpath-style join — store paths may be URIs (hdfs://…)
-    return path.rstrip("/") + "/" + GRAM_META
-
-
 def write_gram_index(
     docs: DataFrame,
     path: str,
@@ -172,22 +162,14 @@ def write_gram_index(
     re-hashing the whole suite (the append_token_windows lifecycle,
     applied to the decontamination gate's probe side). Meta records
     (n, cols) so appends hash identically."""
-    import json
-
-    from babylon_data_loader_spark.operators.index_store import (
-        write_meta_text,
-    )
+    from babylon_data_loader_spark.operators.index_store import write_store
 
     grams = (
         gram_hashes(docs, n=n, id_col=id_col, text_col=text_col)
         .select("h")
         .distinct()
     )
-    grams.write.mode("overwrite").parquet(path)
-    meta = {"n": n, "id_col": id_col, "text_col": text_col}
-    write_meta_text(
-        docs.sparkSession, _gram_meta_path(path), json.dumps(meta)
-    )
+    write_store(grams, path, n=n, id_col=id_col, text_col=text_col)
 
 
 def append_gram_index(new_docs: DataFrame, path: str) -> None:
@@ -200,16 +182,12 @@ def append_gram_index(new_docs: DataFrame, path: str) -> None:
     compact (re-write of DISTINCT h) is layout hygiene, not
     correctness. Caller routes each shard into exactly one
     write/append — the append_token_windows contract."""
-    import json
-
     from babylon_data_loader_spark.operators.index_store import (
         check_append_schema,
-        read_meta_text,
+        read_store_meta,
     )
 
-    meta = json.loads(
-        read_meta_text(new_docs.sparkSession, _gram_meta_path(path))
-    )
+    meta = read_store_meta(new_docs.sparkSession, path)
     grams = (
         gram_hashes(
             new_docs,
@@ -220,8 +198,15 @@ def append_gram_index(new_docs: DataFrame, path: str) -> None:
         .select("h")
         .distinct()
     )
-    check_append_schema(new_docs.sparkSession, path, grams, exclude=())
+    check_append_schema(meta, grams, exclude=())
     grams.write.mode("append").parquet(path)
+
+
+def read_gram_index(spark, path: str) -> tuple[DataFrame, dict]:
+    """(gram hash DataFrame, meta) of a gram index."""
+    from babylon_data_loader_spark.operators.index_store import read_store
+
+    return read_store(spark, path)
 
 
 def contamination_census(

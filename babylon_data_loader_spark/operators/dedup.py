@@ -681,8 +681,6 @@ def dedup_clustered(
 # economics split write_lsh_index/append_lsh_index make for ANN.
 # ---------------------------------------------------------------------------
 
-TOKWIN_META = "_tokwin_meta.json"
-
 
 def write_token_window_store(
     docs: DataFrame,
@@ -705,11 +703,7 @@ def write_token_window_store(
     `tokwin_layout` supplement measures BOTH widths). Meta I/O is
     scheme-aware (index_store.read/write_meta_text), so the store
     works on hdfs://-style paths, not just the local filesystem."""
-    import json
-
-    from babylon_data_loader_spark.operators.index_store import (
-        write_meta_text,
-    )
+    from babylon_data_loader_spark.operators.index_store import write_store
 
     # corpus-scale write-once build: derive from the shared at-rest
     # token store (one regex pass per dataset version, r12 ask #2)
@@ -720,39 +714,16 @@ def write_token_window_store(
         k,
         tok_df=_norm_tok(docs, text_col, id_col, "_t"),
     )
-    (
+    write_store(
         win.withColumn("hp", F.substring("_h", 1, prefix_chars))
-        .repartition(F.col("hp"))
-        .write.mode("overwrite")
-        .partitionBy("hp")
-        .parquet(path)
+        .repartition(F.col("hp")),
+        path,
+        ("hp",),
+        k=k,
+        prefix_chars=prefix_chars,
+        text_col=text_col,
+        id_col=id_col,
     )
-    meta = {
-        "k": k,
-        "prefix_chars": prefix_chars,
-        "text_col": text_col,
-        "id_col": id_col,
-    }
-    write_meta_text(
-        docs.sparkSession, _tokwin_meta_path(path), json.dumps(meta)
-    )
-
-
-def _tokwin_meta_path(path: str) -> str:
-    # posixpath-style join: store paths may be URIs (hdfs://…), where
-    # os.path.join is wrong on non-posix hosts and "\\" separators
-    # corrupt the URI.
-    return path.rstrip("/") + "/" + TOKWIN_META
-
-
-def _read_tokwin_meta(spark: SparkSession, path: str) -> dict:
-    import json
-
-    from babylon_data_loader_spark.operators.index_store import (
-        read_meta_text,
-    )
-
-    return json.loads(read_meta_text(spark, _tokwin_meta_path(path)))
 
 
 def append_token_windows(new_docs: DataFrame, path: str) -> None:
@@ -769,19 +740,20 @@ def append_token_windows(new_docs: DataFrame, path: str) -> None:
     duplicates its windows, the same contract as append_lsh_index."""
     from babylon_data_loader_spark.operators.index_store import (
         check_append_schema,
+        read_store_meta,
     )
 
-    meta = _read_tokwin_meta(new_docs.sparkSession, path)
+    meta = read_store_meta(new_docs.sparkSession, path)
     # no up-front emptiness probe: it would evaluate the batch plan
     # twice per append (r10 review); appending zero rows writes no
     # data files, so an empty batch is a content no-op anyway
     win = token_windows(
         new_docs, meta["text_col"], meta["id_col"], int(meta["k"])
     )
-    # footer-only guard (r10 advice): a batch whose doc-id/pos types
+    # meta-only guard (r10 advice): a batch whose doc-id/pos types
     # diverge from the stored windows (string vs long _id) would
     # otherwise append parquet files later reads fail on or mis-merge
-    check_append_schema(new_docs.sparkSession, path, win, exclude=("hp",))
+    check_append_schema(meta, win, exclude=("hp",))
     (
         win.withColumn(
             "hp", F.substring("_h", 1, int(meta["prefix_chars"]))
@@ -796,17 +768,11 @@ def append_token_windows(new_docs: DataFrame, path: str) -> None:
 def read_token_window_store(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, dict]:
-    """(window DataFrame with its `hp` partition column, meta)."""
-    from babylon_data_loader_spark.operators.index_store import (
-        _read_store,
-    )
+    """(window DataFrame with its `hp` partition column, meta). The
+    file listing is per call, so appended hp dirs are always seen."""
+    from babylon_data_loader_spark.operators.index_store import read_store
 
-    # schema-cached read: appends republish _SUCCESS, so the mtime key
-    # re-infers whenever the store's files (hence schema) could change;
-    # file LISTING stays per-call, so appended hp dirs are always seen
-    return _read_store(spark, path), _read_tokwin_meta(
-        spark, path
-    )
+    return read_store(spark, path)
 
 
 def probe_token_windows(

@@ -19,14 +19,20 @@ Every fingerprint-keyed store has one lifecycle, run by
 
 - build: the data is written into a fresh ``staging_<kind>_<uuid>``
   dir of the warehouse, never under the store's own name, and the
-  store meta (source files with size + mtime_ns) is written inside it;
+  store meta is written inside it: the written frame's schema, the
+  kind's own fields and the source files with size + mtime_ns;
 - publish: one ``os.rename`` to ``idx_<kind>_<fp>_<params>``. A
   published dir therefore holds its data AND its meta by
   construction: no reader sees a half-written store, and a killed
   build leaves only a staging dir behind;
+- read: every store is opened with the schema its meta records
+  (:func:`read_store`), so no read infers a schema from parquet
+  footers or from partition directory names;
 - race: when two writers build one store at once, the first rename
   wins; the loser finds the published dir holding meta and deletes
-  its own staging copy (both are the same pure function of the data);
+  its own staging copy (both are the same pure function of the data).
+  A published dir whose meta records no schema is a legacy store: it
+  is rebuilt once, and the rebuild replaces it;
 - sweep: :func:`sweep_dead_stores` removes every ``idx_*`` dir whose
   meta is missing or records source files that no longer exist
   unchanged, and every staging dir older than :data:`STAGING_TTL_S`.
@@ -54,12 +60,19 @@ from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-# Meta written into every store before it is published: the store's
-# source files with size+mtime_ns, so the sweep can tell "this store
-# indexes data that was regenerated in place" (sweep) from "this store
-# indexes OTHER live data — e.g. the same table at a different
-# scale-factor dir" (keep). Its presence is also the hit test.
+from babylon_data_loader_spark.schemas import as_nullable
+
+# The one meta file of every store dir (fingerprint-keyed or at a
+# caller-owned path), written after its data. It holds ``schema``, the
+# written frame's schema as the reader reports it, and the kind's own
+# fields (LSH planes, PQ codebooks, IVF centroids, window/gram
+# parameters). Fingerprint-keyed stores add ``files``, their source
+# files with size+mtime_ns, so the sweep can tell "this store indexes
+# data that was regenerated in place" (sweep) from "this store indexes
+# OTHER live data — e.g. the same table at a different scale-factor
+# dir" (keep).
 META_NAME = "_store_meta.json"
 
 # Name prefix of unpublished builds (and of knn_lsh's throwaway
@@ -227,16 +240,69 @@ def write_meta_text(spark: SparkSession, path: str, text: str) -> None:
     fs.rename(tmp, target)
 
 
-def read_partition_types(path: str) -> dict[str, str]:
-    """The sidecar's recorded partition-column dtypes ({} when the
-    store predates the record or has no sidecar)."""
+def _meta_path(path: str) -> str:
+    # posixpath-style join: store paths may be URIs (hdfs://…), where
+    # os.path.join is wrong on non-posix hosts.
+    return path.rstrip("/") + "/" + META_NAME
+
+
+def write_store_meta(spark: SparkSession, path: str, meta: dict) -> None:
+    """Write (or replace) the meta of the store at ``path``."""
+    write_meta_text(spark, _meta_path(path), json.dumps(meta))
+
+
+def write_store(
+    df: DataFrame,
+    path: str,
+    partition_by: tuple[str, ...] = (),
+    **fields,
+) -> dict:
+    """Write ``df`` as a parquet store at ``path`` (replacing what is
+    there), then its meta: the schema (all nullable, partition columns
+    last, as the reader reports it) plus ``fields``. Returns the meta.
+    The meta is written last, so a store that holds one is complete."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    cols = as_nullable(df.schema).fields
+    schema = StructType(
+        [f for f in cols if f.name not in partition_by]
+        + [f for c in partition_by for f in cols if f.name == c]
+    )
+    meta = {"schema": schema.jsonValue(), **fields}
+    write_store_meta(df.sparkSession, path, meta)
+    return meta
+
+
+def read_store_meta(spark: SparkSession, path: str) -> dict:
+    """The meta of the store at ``path``, after recovering a crashed
+    :func:`compact_index` swap."""
+    recover_index(path)
+    return json.loads(read_meta_text(spark, _meta_path(path)))
+
+
+def read_store(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """(frame, meta) of the store at ``path``: the one store reader.
+    The frame is read with the schema the meta records, so it starts
+    no Spark job and every column, partition columns included, has
+    the type it was written with."""
+    meta = read_store_meta(spark, path)
+    schema = StructType.fromJson(meta["schema"])
+    return spark.read.schema(schema).parquet(path), meta
+
+
+def published_meta(path: str) -> dict | None:
+    """The meta of the published store at local ``path``, or None when
+    there is none or it records no schema (a legacy store, rebuilt on
+    its next access). The hit test of :func:`get_or_build_store` and
+    the "another writer won" test of its publish."""
     try:
-        with open(
-            os.path.join(path, META_NAME), encoding="utf-8"
-        ) as fh:
-            return json.load(fh).get("partition_types", {}) or {}
+        with open(os.path.join(path, META_NAME), encoding="utf-8") as fh:
+            meta = json.load(fh)
     except (OSError, ValueError):
-        return {}
+        return None
+    return meta if isinstance(meta, dict) and "schema" in meta else None
 
 
 def store_meta_live(path: str) -> bool:
@@ -340,15 +406,15 @@ def sweep_dead_stores(spark: SparkSession) -> int:
 
 def _publish(staging: str, path: str) -> None:
     """Rename ``staging`` to ``path``; the first writer wins. When
-    ``path`` already holds meta another writer published first, and
-    ``staging`` is left for the caller to delete. A meta-less ``path``
-    is a legacy store and is replaced."""
+    ``path`` already holds a published store another writer won, and
+    ``staging`` is left for the caller to delete. Any other ``path``
+    (a legacy store) is replaced."""
     for _ in range(3):
         try:
             os.rename(staging, path)
             return
         except OSError:
-            if os.path.exists(os.path.join(path, META_NAME)):
+            if published_meta(path) is not None:
                 return
             shutil.rmtree(path, ignore_errors=True)
     raise OSError(f"could not publish store {path}")
@@ -366,29 +432,28 @@ def get_or_build_store(
     fingerprint: the caller then computes inline — correctness never
     depends on the store, only the amortized cost does.
 
-    ``write(staging)`` writes the store's data into the not yet
-    existing dir ``staging``; a mapping it returns is merged into the
-    store meta. Each access (a call on a fingerprinted source)
-    appends one :data:`ACCESS_LOG` record, before any build."""
+    ``write(staging)`` writes the store into the not yet existing dir
+    ``staging`` through :func:`write_store` and returns its meta; the
+    source records are added to it. Each access (a call on a
+    fingerprinted source) appends one :data:`ACCESS_LOG` record,
+    before any build."""
     spark = source.sparkSession
     fp = df_fingerprint(source)
     if fp is None:
         return None
     path = store_path(spark, kind, fp, params)
-    hit = os.path.exists(os.path.join(path, META_NAME))
+    hit = published_meta(path) is not None
     ACCESS_LOG.append({"kind": kind, "params": params, "hit": hit})
     if hit:
         return path
     # Stat the sources BEFORE the build: data regenerated mid-build
     # then reads as dead, never as live under a stale fingerprint.
-    meta = {"files": _source_records(lineage_files(source))}
+    files = _source_records(lineage_files(source))
     staging = new_staging_dir(spark, kind)
     try:
-        meta.update(write(staging) or {})
+        meta = {**(write(staging) or {}), "files": files}
         os.makedirs(staging, exist_ok=True)
-        write_meta_text(
-            spark, os.path.join(staging, META_NAME), json.dumps(meta)
-        )
+        write_store_meta(spark, staging, meta)
         _publish(staging, path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
@@ -413,78 +478,15 @@ def get_or_build_parquet(
     Callers that change the layout or the derivation must change
     ``params`` — the fingerprint keys DATA freshness only; stores
     under the old params are swept once their data changes."""
-
-    def write(staging: str) -> dict | None:
-        built = build()
-        writer = built.write
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-        # Spark re-infers partition-directory types on read (BIGINT
-        # written, INT back): record the written ones so the reader
-        # casts back and both return paths agree on schema.
-        ptypes = {
-            c: built.schema[c].dataType.simpleString()
-            for c in partition_by
-            if c in built.columns
-        }
-        return {"partition_types": ptypes} if ptypes else None
-
-    path = get_or_build_store(source, kind, params, write)
+    path = get_or_build_store(
+        source,
+        kind,
+        params,
+        lambda staging: write_store(build(), staging, partition_by),
+    )
     if path is None:
         return build()
-    out = _read_store(source.sparkSession, path)
-    if partition_by:
-        for c, t in read_partition_types(path).items():
-            if c in out.columns:
-                out = out.withColumn(c, F.col(c).cast(t))
-    return out
-
-
-# Schema cache for store reads, keyed PER PATH with a freshness stamp
-# (r16): a published store dir is immutable, and a caller-owned index
-# that is appended to republishes its _SUCCESS marker (new mtime), so
-# the parquet schema — pure metadata fully determined by the store
-# files — never changes under a live stamp. The stamp folds in the
-# store meta's identity as well as the zero-byte marker's mtime: a
-# legacy store replaced at the same path gets a new meta, whose SIZE
-# varies with content, so a rebuild landing inside one coarse
-# filesystem timestamp tick still changes the stamp. Keying per path
-# (insert replaces the previous entry) bounds the cache at the number
-# of live stores instead of growing across regenerations in a
-# long-lived process. Parquet schema INFERENCE launches a
-# footer-reading Spark job per spark.read.parquet call (~85 ms warm,
-# r15 measured); store-heavy lanes access several stores per run, so
-# the per-access inference was a fixed tax on every warm path (guide
-# §1.2). Data reads and partition-directory listing stay fresh per
-# call — only the schema is reused.
-_READ_SCHEMA_CACHE: dict = {}
-
-
-def _store_stamp(path: str):
-    """Freshness stamp for a store dir, or None when unreadable."""
-    try:
-        mst = os.stat(os.path.join(path, "_SUCCESS"))
-    except OSError:
-        return None
-    try:
-        met = os.stat(os.path.join(path, META_NAME))
-        meta_id = (met.st_size, met.st_mtime_ns)
-    except OSError:
-        meta_id = None
-    return (mst.st_mtime_ns, mst.st_size, meta_id)
-
-
-def _read_store(spark: SparkSession, path: str):
-    stamp = _store_stamp(path)
-    if stamp is not None:
-        hit = _READ_SCHEMA_CACHE.get(path)
-        if hit is not None and hit[0] == stamp:
-            return spark.read.schema(hit[1]).parquet(path)
-    out = spark.read.parquet(path)
-    if stamp is not None:
-        _READ_SCHEMA_CACHE[path] = (stamp, out.schema)
-    return out
+    return read_store(source.sparkSession, path)[0]
 
 
 def stored_norm_tokens(
@@ -532,18 +534,17 @@ def stored_norm_tokens(
 def recover_index(path: str) -> bool:
     """Recover an index whose compact_index swap crashed between the
     two renames (the live path briefly does not exist). If the staging
-    copy is COMPLETE (parquet _SUCCESS plus the post-write meta JSONs)
-    it becomes the live path; otherwise the pre-compact copy is
-    restored. Returns True when a recovery happened. Called by
-    compact_index and the index readers, so a crashed swap degrades to
-    an automatic recovery instead of requiring a rebuild."""
+    copy is COMPLETE (parquet _SUCCESS plus the store meta) it becomes
+    the live path; otherwise the pre-compact copy is restored. Returns
+    True when a recovery happened. Every store meta read runs it first
+    (:func:`read_store_meta`), so a crashed swap degrades to an
+    automatic recovery instead of requiring a rebuild."""
     if os.path.exists(path):
         return False
     staging = f"{path}.compact.tmp"
     pre = f"{path}.pre_compact.tmp"
-    if (
-        os.path.exists(os.path.join(staging, "_SUCCESS"))
-        and any(n.endswith(".json") for n in os.listdir(staging))
+    if os.path.exists(os.path.join(staging, "_SUCCESS")) and os.path.exists(
+        os.path.join(staging, META_NAME)
     ):
         os.rename(staging, path)
         shutil.rmtree(pre, ignore_errors=True)
@@ -556,24 +557,23 @@ def recover_index(path: str) -> bool:
 
 
 def check_append_schema(
-    spark, path: str, new_df, exclude: tuple[str, ...]
+    meta: dict, new_df: DataFrame, exclude: tuple[str, ...]
 ) -> None:
     """Guard for incremental index appends: the appended frame's
     column names AND types (minus the derived/partition columns in
-    ``exclude``) must match the stored index exactly — appending a
-    schema-divergent frame writes parquet files that later probes
-    surface as NULLs or dropped columns with no error. Footer-level
-    schema read only, no data scan."""
-    stored = {
-        f.name: f.dataType.simpleString()
-        for f in spark.read.parquet(path).schema
-        if f.name not in exclude
-    }
-    incoming = {
-        f.name: f.dataType.simpleString()
-        for f in new_df.schema
-        if f.name not in exclude
-    }
+    ``exclude``) must match the stored index's recorded schema exactly
+    — appending a schema-divergent frame writes parquet files that
+    later probes surface as NULLs or dropped columns with no error."""
+
+    def types(schema: StructType) -> dict[str, str]:
+        return {
+            f.name: f.dataType.simpleString()
+            for f in schema
+            if f.name not in exclude
+        }
+
+    stored = types(StructType.fromJson(meta["schema"]))
+    incoming = types(new_df.schema)
     if stored != incoming:
         raise ValueError(
             "index append schema mismatch: stored index has "
@@ -587,36 +587,25 @@ def compact_index(spark, path: str, part_col: str) -> None:
     index twin of tx_lake.compact(): appends trade write cost for an
     extra file per touched partition per batch, and a periodic compact
     restores the one-file-per-probe read shape. The compacted copy is
-    written to a sibling staging dir and swapped in (never
-    collect()ed through the driver — an index can be arbitrarily
-    large), preserving the JSON meta files. The swap is NOT atomic
-    for concurrent readers (single-writer maintenance window, like
-    the build), but a crash between the two renames is detected and
-    auto-recovered by recover_index() — from the completed staging
+    read through the store meta (so partition values keep their
+    written type and spelling), written to a sibling staging dir with
+    the same meta, and swapped in (never collect()ed through the
+    driver — an index can be arbitrarily large). The swap is NOT
+    atomic for concurrent readers (single-writer maintenance window,
+    like the build), but a crash between the two renames is detected
+    and auto-recovered by recover_index() — from the completed staging
     copy when it finished, else from the pre-compact copy — so no
     crash point requires a rebuild."""
-    import json
-
-    recover_index(path)
-    metas = {
-        name: json.load(open(os.path.join(path, name), encoding="utf-8"))
-        for name in os.listdir(path)
-        if name.endswith(".json")
-    }
+    stored, meta = read_store(spark, path)
     staging = f"{path}.compact.tmp"
     shutil.rmtree(staging, ignore_errors=True)
     (
-        spark.read.parquet(path)
-        .repartition(F.col(part_col))
+        stored.repartition(F.col(part_col))
         .write.mode("overwrite")
         .partitionBy(part_col)
         .parquet(staging)
     )
-    for name, meta in metas.items():
-        with open(
-            os.path.join(staging, name), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(meta, fh)
+    write_store_meta(spark, staging, meta)
     old = f"{path}.pre_compact.tmp"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)

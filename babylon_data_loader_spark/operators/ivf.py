@@ -120,55 +120,31 @@ def ivf_index(
 
 def write_ivf_index(
     indexed: DataFrame, path: str, centroids: list[list[float]]
-) -> None:
+) -> dict:
     """Persist the index partitioned BY cluster_id — a probe then hits
     only its lists' directories (partition pruning at the source,
-    asserted in tests/test_similarity.py). Centroids ride along as
-    JSON metadata (K×d floats — index metadata, not data)."""
-    import json
-    import os
-
-    from babylon_data_loader_spark.operators.index_store import (
-        write_meta_text,
-    )
+    asserted in tests/test_similarity.py). Centroids ride along in
+    the store meta (K×d floats — index metadata, not data). Returns
+    the meta."""
+    from babylon_data_loader_spark.operators.index_store import write_store
 
     # one build-time shuffle on cluster_id so each list is ONE file,
     # not one file per upstream task (see write_lsh_index — same
     # small-files hazard; probes open one file per probed list)
-    (
-        indexed.repartition(F.col("cluster_id"))
-        .write.mode("overwrite")
-        .partitionBy("cluster_id")
-        .parquet(path)
-    )
-    # commit marker: presence implies a complete index, so the write
-    # must be atomic (crash mid-write would poison the store)
-    write_meta_text(
-        indexed.sparkSession,
-        os.path.join(path, "_centroids.json"),
-        json.dumps(centroids),
+    return write_store(
+        indexed.repartition(F.col("cluster_id")),
+        path,
+        ("cluster_id",),
+        centroids=centroids,
     )
 
 
 def read_ivf_index(spark, path: str) -> tuple[DataFrame, list[list[float]]]:
     """(indexed DataFrame, centroids) from a stored IVF index."""
-    import json
-    import os
+    from babylon_data_loader_spark.operators.index_store import read_store
 
-    from babylon_data_loader_spark.operators.index_store import (
-        _read_store,
-        recover_index,
-    )
-
-    recover_index(path)
-
-    with open(
-        os.path.join(path, "_centroids.json"), encoding="utf-8"
-    ) as fh:
-        centroids = json.load(fh)
-    # schema-cached read: appends republish _SUCCESS, so the mtime key
-    # re-infers whenever the store's files (hence schema) could change
-    return _read_store(spark, path), centroids
+    indexed, meta = read_store(spark, path)
+    return indexed, meta["centroids"]
 
 
 def append_ivf_index(
@@ -185,28 +161,22 @@ def append_ivf_index(
     with the same centroids — assignment is deterministic per vector
     and ivf_search re-ranks by exact cosine within the probed lists
     (pinned by tests/test_similarity.py)."""
+    from babylon_data_loader_spark.operators.index_store import (
+        check_append_schema,
+        read_store_meta,
+    )
+
     first = new_vecs.select(vec_col).first()
     if first is None:
         return
-    import json
-    import os
-
-    with open(
-        os.path.join(path, "_centroids.json"), encoding="utf-8"
-    ) as fh:
-        centroids = json.load(fh)
+    meta = read_store_meta(new_vecs.sparkSession, path)
+    centroids = meta["centroids"]
     if len(first[0]) != len(centroids[0]):
         raise ValueError(
             f"append_ivf_index: new vectors have dim {len(first[0])}, "
             f"index was built for dim {len(centroids[0])}"
         )
-    from babylon_data_loader_spark.operators.index_store import (
-        check_append_schema,
-    )
-
-    check_append_schema(
-        new_vecs.sparkSession, path, new_vecs, exclude=("cluster_id",)
-    )
+    check_append_schema(meta, new_vecs, exclude=("cluster_id",))
     (
         _assign(new_vecs, vec_col, centroids)
         .repartition(F.col("cluster_id"))

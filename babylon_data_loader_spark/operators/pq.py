@@ -143,25 +143,14 @@ def pq_encode(
 
 def write_pq_index(
     codes: DataFrame, path: str, codebooks: list[list[list[float]]]
-) -> None:
+) -> dict:
     """Persist the codes table (ids + m-byte codes — the 32×-smaller
     at-rest representation a 100 TB search actually scans) with the
-    codebooks as JSON metadata, mirroring write_ivf_index."""
-    import json
-    import os
+    codebooks in the store meta, mirroring write_ivf_index. Returns
+    the meta."""
+    from babylon_data_loader_spark.operators.index_store import write_store
 
-    from babylon_data_loader_spark.operators.index_store import (
-        write_meta_text,
-    )
-
-    codes.write.mode("overwrite").parquet(path)
-    # commit marker: presence implies a complete index, so the write
-    # must be atomic (crash mid-write would poison the store)
-    write_meta_text(
-        codes.sparkSession,
-        os.path.join(path, "_codebooks.json"),
-        json.dumps(codebooks),
-    )
+    return write_store(codes, path, codebooks=codebooks)
 
 
 def append_pq_index(
@@ -177,16 +166,16 @@ def append_pq_index(
     deterministic per vector (argmin ties to the lowest index) and ADC
     scoring depends only on code content (pinned by
     tests/test_similarity.py)."""
+    from babylon_data_loader_spark.operators.index_store import (
+        check_append_schema,
+        read_store_meta,
+    )
+
     first = new_vecs.select(vec_col).first()
     if first is None:
         return
-    import json
-    import os
-
-    with open(
-        os.path.join(path, "_codebooks.json"), encoding="utf-8"
-    ) as fh:
-        codebooks = json.load(fh)
+    meta = read_store_meta(new_vecs.sparkSession, path)
+    codebooks = meta["codebooks"]
     m = len(codebooks)
     dsub = len(codebooks[0][0])
     if len(first[0]) != m * dsub:
@@ -195,19 +184,10 @@ def append_pq_index(
             f"index was built for dim {m * dsub}"
         )
     cols = [c for c in new_vecs.columns if c != vec_col]
-    from babylon_data_loader_spark.operators.index_store import (
-        check_append_schema,
-    )
-
     # the stored index holds codes, not vectors: compare the appended
     # frame's carried columns (everything but the encoded vec) against
     # the store minus its code column
-    check_append_schema(
-        new_vecs.sparkSession,
-        path,
-        new_vecs.select(*cols),
-        exclude=("pq_code",),
-    )
+    check_append_schema(meta, new_vecs.select(*cols), exclude=("pq_code",))
     (
         pq_encode(new_vecs, codebooks, vec_col=vec_col)
         .select(*cols, "pq_code")
@@ -218,22 +198,10 @@ def append_pq_index(
 
 def read_pq_index(spark, path: str):
     """(codes DataFrame, codebooks) from a stored PQ index."""
-    import json
-    import os
+    from babylon_data_loader_spark.operators.index_store import read_store
 
-    from babylon_data_loader_spark.operators.index_store import (
-        _read_store,
-        recover_index,
-    )
-
-    recover_index(path)
-    with open(
-        os.path.join(path, "_codebooks.json"), encoding="utf-8"
-    ) as fh:
-        codebooks = json.load(fh)
-    # schema-cached read: appends republish _SUCCESS, so the mtime key
-    # re-infers whenever the store's files (hence schema) could change
-    return _read_store(spark, path), codebooks
+    codes, meta = read_store(spark, path)
+    return codes, meta["codebooks"]
 
 
 def pq_search(

@@ -186,7 +186,12 @@ def _cached_totals_rows(totals: DataFrame, cache_dir: str | None, key: str):
                 # Lost a publish race: another writer renamed first.
                 # Their content is the same pure function; drop ours.
                 shutil.rmtree(tmp, ignore_errors=True)
-        return totals.sparkSession.read.parquet(sidecar).collect()
+        # read with the totals' own schema: no footer-inference job
+        return (
+            totals.sparkSession.read.schema(totals.schema)
+            .parquet(sidecar)
+            .collect()
+        )
     except Exception:
         return totals.collect()
 

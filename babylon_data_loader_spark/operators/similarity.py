@@ -372,7 +372,7 @@ def write_lsh_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     fingerprint: str | None = None,
-) -> None:
+) -> dict:
     """Persist the sign-bucket index partitioned BY bucket — the
     write-time half of LSH's economics. Each vector's bucket is
     computed once here (scan-local, no shuffle beyond the partitioned
@@ -381,17 +381,13 @@ def write_lsh_index(
     the full table (the contract an indexed lookup implies —
     /root/reference/apiClient/apiClient.go:188-243 reads by key, it
     does not scan). Hyperplanes are deterministic from (plane, dim),
-    so the index carries only {n_planes, dim} as metadata."""
-    import json
-    import os
-
-    from babylon_data_loader_spark.operators.index_store import (
-        write_meta_text,
-    )
+    so the index carries only {n_planes, dim} as metadata. Returns the
+    store meta."""
+    from babylon_data_loader_spark.operators.index_store import write_store
 
     dim = len(emb.select(vec_col).first()[0])
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
-    (
+    return write_store(
         emb.withColumn("bucket", sign_bucket(F.col(vec_col), planes))
         # ONE build-time hash shuffle on bucket: without it,
         # partitionBy splits EVERY upstream task's output by bucket —
@@ -401,21 +397,12 @@ def write_lsh_index(
         # a probe reads one file per bucket. If single buckets outgrow
         # a task at extreme scale, repartition on (bucket, salt)
         # instead — probes still prune on the bucket directory.
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    # The meta file is a caller-owned index's COMMIT MARKER (written
-    # after the parquet, checked for existence before reuse), so its
-    # write must be atomic: a crash mid-write would otherwise leave
-    # truncated JSON that blocks every future rebuild.
-    write_meta_text(
-        emb.sparkSession,
-        os.path.join(path, "_lsh_meta.json"),
-        json.dumps(
-            {"n_planes": n_planes, "dim": dim, "fingerprint": fingerprint}
-        ),
+        .repartition(F.col("bucket")),
+        path,
+        ("bucket",),
+        n_planes=n_planes,
+        dim=dim,
+        fingerprint=fingerprint,
     )
 
 
@@ -446,19 +433,14 @@ def append_lsh_index(
     fingerprint-keyed session store is invalidated by ANY source-table
     change, by design. The meta's fingerprint is updated (or cleared)
     so a stale-content guard cannot silently pass."""
-    import json
-    import os
-
     from babylon_data_loader_spark.operators.index_store import (
         check_append_schema,
-        recover_index,
-        write_meta_text,
+        read_store_meta,
+        write_store_meta,
     )
 
-    recover_index(path)
-    meta_path = os.path.join(path, "_lsh_meta.json")
-    with open(meta_path, encoding="utf-8") as fh:
-        meta = json.load(fh)
+    spark = new_vecs.sparkSession
+    meta = read_store_meta(spark, path)
     dim = int(meta["dim"])
     planes = [_hyperplane(p, dim) for p in range(int(meta["n_planes"]))]
     first = new_vecs.select(vec_col).first()
@@ -471,9 +453,7 @@ def append_lsh_index(
         )
     # column-set/type guard mirrors the dim check: schema-divergent
     # appended files would surface as NULLs on later probes
-    check_append_schema(
-        new_vecs.sparkSession, path, new_vecs, exclude=("bucket",)
-    )
+    check_append_schema(meta, new_vecs, exclude=("bucket",))
     (
         new_vecs.withColumn("bucket", sign_bucket(F.col(vec_col), planes))
         # same one-shuffle discipline as the full build: one new file
@@ -484,27 +464,14 @@ def append_lsh_index(
         .parquet(path)
     )
     meta["fingerprint"] = fingerprint
-    write_meta_text(new_vecs.sparkSession, meta_path, json.dumps(meta))
+    write_store_meta(spark, path, meta)
 
 
 def read_lsh_index(spark, path: str) -> tuple[DataFrame, dict]:
     """(indexed DataFrame with its `bucket` partition column, meta)."""
-    import json
-    import os
+    from babylon_data_loader_spark.operators.index_store import read_store
 
-    from babylon_data_loader_spark.operators.index_store import (
-        _read_store,
-        recover_index,
-    )
-
-    recover_index(path)
-    with open(
-        os.path.join(path, "_lsh_meta.json"), encoding="utf-8"
-    ) as fh:
-        meta = json.load(fh)
-    # schema-cached read: appends republish _SUCCESS, so the mtime key
-    # re-infers whenever the store's files (hence schema) could change
-    return _read_store(spark, path), meta
+    return read_store(spark, path)
 
 
 def lsh_search(
@@ -571,19 +538,17 @@ def knn_lsh(
     buckets' partitions (pushed-down partition filter) plus one O(1)
     point lookup for the query row — never a full scan.
     """
-    import json
-    import os
-
     from babylon_data_loader_spark.operators.index_store import (
         df_fingerprint,
         get_or_build_store,
         new_staging_dir,
+        published_meta,
     )
 
     spark = emb.sparkSession
 
-    def write(path: str) -> None:
-        write_lsh_index(
+    def write(path: str) -> dict:
+        return write_lsh_index(
             emb,
             path,
             n_planes=n_planes,
@@ -613,16 +578,12 @@ def knn_lsh(
             write(index_path)
     else:
         fp = df_fingerprint(emb)
-        meta_file = os.path.join(index_path, "_lsh_meta.json")
-        stale = True
-        if os.path.exists(meta_file):
-            with open(meta_file, encoding="utf-8") as fh:
-                meta = json.load(fh)
-            stale = meta.get("n_planes") != n_planes or (
-                fp is not None
-                and meta.get("fingerprint") is not None
-                and meta["fingerprint"] != fp
-            )
+        meta = published_meta(index_path)
+        stale = meta is None or meta.get("n_planes") != n_planes or (
+            fp is not None
+            and meta.get("fingerprint") is not None
+            and meta["fingerprint"] != fp
+        )
         if stale:
             write(index_path)
     indexed, meta = read_lsh_index(spark, index_path)

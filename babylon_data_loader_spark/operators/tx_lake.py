@@ -59,6 +59,7 @@ from pyspark.sql import types as T
 from babylon_data_loader_spark.operators.commit_backend import (
     PosixCommitBackend,
 )
+from babylon_data_loader_spark.schemas import as_nullable
 from babylon_data_loader_spark.session import local_frame
 
 # Spark's placeholder subdir value for a NULL partition key; a batch
@@ -73,26 +74,6 @@ RESOLVE_RN = "__bdl_rn"
 
 # Per-version-dir data schema, published when the dir is written.
 SCHEMA_SIDECAR = "_schema.json"
-
-
-def _nullable(dtype: T.DataType) -> T.DataType:
-    """``dtype`` with every field, element and map value nullable, field
-    metadata kept — the schema Spark's file sources report for any
-    stored parquet schema (Scala's ``DataType.asNullable``)."""
-    if isinstance(dtype, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
-                for f in dtype.fields
-            ]
-        )
-    if isinstance(dtype, T.ArrayType):
-        return T.ArrayType(_nullable(dtype.elementType), True)
-    if isinstance(dtype, T.MapType):
-        return T.MapType(
-            _nullable(dtype.keyType), _nullable(dtype.valueType), True
-        )
-    return dtype
 
 
 def _orderable(dtype) -> bool:
@@ -551,7 +532,7 @@ class TransactionalLake:
             T.StructType(
                 [
                     f
-                    for f in _nullable(df.schema).fields
+                    for f in as_nullable(df.schema).fields
                     if f.name != self.partition_col
                 ]
             ).json(),
@@ -1038,6 +1019,7 @@ class TransactionalLake:
             backend=self.backend,
             stats_cols=self.stats_cols,
             cluster_by=self.cluster_by,
+            zorder_by=self.zorder_by,
             cluster_files=self.cluster_files,
             bloom_cols=self.bloom_cols,
         )

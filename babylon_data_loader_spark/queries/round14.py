@@ -356,6 +356,7 @@ def q_incremental_admission(
 
     from babylon_data_loader_spark.operators.decontaminate import (
         append_gram_index,
+        read_gram_index,
         write_gram_index,
     )
     from babylon_data_loader_spark.operators.dedup import (
@@ -388,7 +389,7 @@ def q_incremental_admission(
             )
 
         def _eval_grams() -> DataFrame:
-            return spark.read.parquet(gram_store).select("h")
+            return read_gram_index(spark, gram_store)[0].select("h")
 
         rows1 = _admit_wave(
             spark,

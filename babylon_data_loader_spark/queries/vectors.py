@@ -569,9 +569,9 @@ def _float_pq_store_topk(
         codes = pq_encode(emb, books).select("vec_id", "label", "pq_code")
         return codes, books
 
-    def write(path: str) -> None:
+    def write(path: str) -> dict:
         codes, books = fit_encode()
-        write_pq_index(codes, path, books)
+        return write_pq_index(codes, path, books)
 
     # Train-once/search-many: the codes table is the at-rest index
     # (like the LSH/IVF stores), keyed by the table's CONTENT

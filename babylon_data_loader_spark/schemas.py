@@ -12,13 +12,37 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    DataType,
     DoubleType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+def as_nullable(dtype: DataType) -> DataType:
+    """``dtype`` with every field, element and map value nullable, field
+    metadata kept — the schema Spark's file sources report for any
+    stored parquet schema (Scala's ``DataType.asNullable``). Lake
+    version dirs and stores record their schema this way."""
+    if isinstance(dtype, StructType):
+        return StructType(
+            [
+                StructField(f.name, as_nullable(f.dataType), True, f.metadata)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, ArrayType):
+        return ArrayType(as_nullable(dtype.elementType), True)
+    if isinstance(dtype, MapType):
+        return MapType(
+            as_nullable(dtype.keyType), as_nullable(dtype.valueType), True
+        )
+    return dtype
+
 
 # The 10-field fact row. `posting_date` is deliberately a STRING in
 # MM/dd/yyyy form — the reference stores the re-formatted string and the

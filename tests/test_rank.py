@@ -471,7 +471,8 @@ def test_totals_sidecar_sweeps_retired_versions(spark, tmp_path):
     `_totals_*` dirs of RETIRED versions from the cache dir (r15
     ADVICE: the v1->v2 bump stranded old sidecars forever in
     still-live ranged stores on stable datasets), while leaving
-    current-version sidecars of other keys alone."""
+    current-version sidecars of other keys alone. A warm call reads
+    the sidecar with the totals' schema: one job, no footer read."""
     import os
 
     from babylon_data_loader_spark.operators.rank import (
@@ -493,3 +494,15 @@ def test_totals_sidecar_sweeps_retired_versions(spark, tmp_path):
     assert os.path.exists(
         cache / f"_totals_{_TOTALS_SIDECAR_V}_k1" / "_SUCCESS"
     )
+
+    sc = spark.sparkContext
+    group = "totals-sidecar-warm"
+    sc.setJobGroup(group, group)
+    try:
+        warm = _cached_totals_rows(totals, str(cache), "k1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert warm == rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1

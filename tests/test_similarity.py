@@ -291,6 +291,7 @@ def test_index_store_fingerprint_and_reuse(spark, tmp_path):
     import time
 
     from babylon_data_loader_spark.operators.index_store import (
+        META_NAME,
         df_fingerprint,
         store_path,
     )
@@ -310,11 +311,11 @@ def test_index_store_fingerprint_and_reuse(spark, tmp_path):
 
     out1 = knn_lsh(emb, query_vec_id=0, k=10, n_planes=8).collect()
     assert len(out1) == 10
-    mtime1 = os.path.getmtime(os.path.join(path, "_lsh_meta.json"))
+    mtime1 = os.path.getmtime(os.path.join(path, META_NAME))
     out2 = knn_lsh(emb, query_vec_id=0, k=10, n_planes=8).collect()
     assert out2 == out1
     # second call reused the stored index: no rewrite happened
-    assert os.path.getmtime(os.path.join(path, "_lsh_meta.json")) == mtime1
+    assert os.path.getmtime(os.path.join(path, META_NAME)) == mtime1
 
     # regenerate the dataset in place (same path, new mtime)
     t = time.time() + 10

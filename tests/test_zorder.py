@@ -111,11 +111,12 @@ def test_lake_zorder_by_prunes_both_columns(spark, tmp_path):
 
     n = 40
     rows = [
-        (i, "P" if i % 2 else "Q", float(i % n), float(i // n))
+        (i, "P" if i % 2 else "Q", "R" if i % 3 else "S")
+        + (float(i % n), float(i // n))
         for i in range(n * n)
     ]
     df = spark.createDataFrame(
-        rows, "id LONG, part STRING, a DOUBLE, b DOUBLE"
+        rows, "id LONG, part STRING, region STRING, a DOUBLE, b DOUBLE"
     )
     lake = TransactionalLake(
         os.path.join(str(tmp_path), "zlake"),
@@ -125,15 +126,23 @@ def test_lake_zorder_by_prunes_both_columns(spark, tmp_path):
         cluster_files=8,
     )
     lake.merge(spark, df, key=["id"])
-    total = len(lake.read(spark).inputFiles())
-    for col in ("a", "b"):
-        pruned = lake.read_pruned(spark, [(col, 0.0, 3.0)])
-        # correctness: pruned read equals plain filter
-        assert (
-            pruned.count()
-            == df.where(F.col(col).between(0.0, 3.0)).count()
-        )
-        assert len(pruned.inputFiles()) < total, col
+
+    def assert_prunes(handle):
+        total = len(handle.read(spark).inputFiles())
+        for col in ("a", "b"):
+            pruned = handle.read_pruned(spark, [(col, 0.0, 3.0)])
+            # correctness: pruned read equals plain filter
+            assert (
+                pruned.count()
+                == df.where(F.col(col).between(0.0, 3.0)).count()
+            )
+            assert len(pruned.inputFiles()) < total, col
+
+    assert_prunes(lake)
+    # the migrated handle keeps the Morton layout and so its pruning
+    migrated = lake.migrate_partitioning(spark, "region")
+    assert migrated.zorder_by == ["a", "b"]
+    assert_prunes(migrated)
 
 
 def test_lake_zorder_cluster_by_mutually_exclusive(tmp_path):
