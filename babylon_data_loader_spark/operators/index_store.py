@@ -58,6 +58,7 @@ import time
 import uuid
 from collections.abc import Callable, Iterable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -292,15 +293,16 @@ def read_store(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
     return spark.read.schema(schema).parquet(path), meta
 
 
-def published_meta(path: str) -> dict | None:
-    """The meta of the published store at local ``path``, or None when
-    there is none or it records no schema (a legacy store, rebuilt on
-    its next access). The hit test of :func:`get_or_build_store` and
-    the "another writer won" test of its publish."""
+def published_meta(spark: SparkSession, path: str) -> dict | None:
+    """The meta of the published store at ``path`` (local or URI, read
+    where it lives through :func:`read_meta_text`), or None when there
+    is none or it records no schema (a legacy store, rebuilt on its
+    next access). The hit test of :func:`get_or_build_store`, the
+    "another writer won" test of its publish and the staleness probe
+    of a caller-owned index path."""
     try:
-        with open(os.path.join(path, META_NAME), encoding="utf-8") as fh:
-            meta = json.load(fh)
-    except (OSError, ValueError):
+        meta = json.loads(read_meta_text(spark, _meta_path(path)))
+    except (OSError, ValueError, Py4JJavaError):
         return None
     return meta if isinstance(meta, dict) and "schema" in meta else None
 
@@ -404,7 +406,7 @@ def sweep_dead_stores(spark: SparkSession) -> int:
     return n
 
 
-def _publish(staging: str, path: str) -> None:
+def _publish(spark: SparkSession, staging: str, path: str) -> None:
     """Rename ``staging`` to ``path``; the first writer wins. When
     ``path`` already holds a published store another writer won, and
     ``staging`` is left for the caller to delete. Any other ``path``
@@ -414,7 +416,7 @@ def _publish(staging: str, path: str) -> None:
             os.rename(staging, path)
             return
         except OSError:
-            if published_meta(path) is not None:
+            if published_meta(spark, path) is not None:
                 return
             shutil.rmtree(path, ignore_errors=True)
     raise OSError(f"could not publish store {path}")
@@ -442,7 +444,7 @@ def get_or_build_store(
     if fp is None:
         return None
     path = store_path(spark, kind, fp, params)
-    hit = published_meta(path) is not None
+    hit = published_meta(spark, path) is not None
     ACCESS_LOG.append({"kind": kind, "params": params, "hit": hit})
     if hit:
         return path
@@ -454,7 +456,7 @@ def get_or_build_store(
         meta = {**(write(staging) or {}), "files": files}
         os.makedirs(staging, exist_ok=True)
         write_store_meta(spark, staging, meta)
-        _publish(staging, path)
+        _publish(spark, staging, path)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
     sweep_dead_stores(spark)
@@ -533,12 +535,14 @@ def stored_norm_tokens(
 
 def recover_index(path: str) -> bool:
     """Recover an index whose compact_index swap crashed between the
-    two renames (the live path briefly does not exist). If the staging
-    copy is COMPLETE (parquet _SUCCESS plus the store meta) it becomes
-    the live path; otherwise the pre-compact copy is restored. Returns
-    True when a recovery happened. Every store meta read runs it first
-    (:func:`read_store_meta`), so a crashed swap degrades to an
-    automatic recovery instead of requiring a rebuild."""
+    two renames (the live path briefly does not exist). Local paths
+    only (``os.path``/``os.rename``): a URI path is never recovered.
+    If the staging copy is COMPLETE (parquet _SUCCESS plus the store
+    meta) it becomes the live path; otherwise the pre-compact copy is
+    restored. Returns True when a recovery happened. Every store meta
+    read runs it first (:func:`read_store_meta`), so a crashed swap
+    degrades to an automatic recovery instead of requiring a
+    rebuild."""
     if os.path.exists(path):
         return False
     staging = f"{path}.compact.tmp"
@@ -595,7 +599,8 @@ def compact_index(spark, path: str, part_col: str) -> None:
     like the build), but a crash between the two renames is detected
     and auto-recovered by recover_index() — from the completed staging
     copy when it finished, else from the pre-compact copy — so no
-    crash point requires a rebuild."""
+    crash point requires a rebuild. Local paths only: the swap is two
+    ``os.rename`` calls."""
     stored, meta = read_store(spark, path)
     staging = f"{path}.compact.tmp"
     shutil.rmtree(staging, ignore_errors=True)

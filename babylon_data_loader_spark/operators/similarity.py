@@ -578,7 +578,7 @@ def knn_lsh(
             write(index_path)
     else:
         fp = df_fingerprint(emb)
-        meta = published_meta(index_path)
+        meta = published_meta(spark, index_path)
         stale = meta is None or meta.get("n_planes") != n_planes or (
             fp is not None
             and meta.get("fingerprint") is not None

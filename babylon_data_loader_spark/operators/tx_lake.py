@@ -19,18 +19,24 @@ uses, at partition granularity:
   version dirs holding its live data. Merge collapses a touched
   partition's list to the new dir; append extends it.
 - ``<lake>/_CURRENT`` names the active manifest. Readers resolve it
-  once; writers activate a new version with ``os.replace`` — POSIX
-  rename is atomic, so a reader sees the old state or the new state,
-  never a mix. A crash before the pointer swap leaves the old state
-  fully intact (the half-written version dir is unreachable garbage).
-- Concurrent writers: creating ``v<N+1>.json`` with O_EXCL is the
-  claim on version N+1 — exactly one writer can win it. The loser
-  re-reads the (advanced) state and retries its whole merge on fresh
-  data, so no update is lost. A claim whose writer died before the
-  pointer swap is taken over after ``stale_claim_s`` (set it above the
-  longest plausible commit; a live-but-slower claimant past that bound
-  loses its commit — the classic tradeoff of lock-free file protocols
-  without a lock service).
+  once; writers activate a new version with ``backend.publish`` — an
+  atomic replace (POSIX rename, single-key PUT), so a reader sees the
+  old state or the new state, never a mix. A crash before the pointer
+  swap leaves the old state fully intact (the half-written version dir
+  is unreachable garbage).
+- Concurrent writers: ``backend.create_exclusive`` of ``v<N+1>.json``
+  is the claim on version N+1 — exactly one writer can win it. A claim
+  whose writer died before the pointer swap is taken over after
+  ``stale_claim_s`` (set it above the longest plausible commit; a
+  live-but-slower claimant past that bound loses its commit — the
+  classic tradeoff of lock-free file protocols without a lock service).
+- Every writer commits through one loop (``_commit_loop``): each
+  attempt plans on the current manifest and claims; a lost claim backs
+  off linearly (20 ms × attempt) and re-plans on the advanced state, so
+  no update is lost. Every version dir an attempt planned and did not
+  commit is removed before the call returns or raises.
+- Past manifests and ``_tags.json`` are read and written through the
+  backend too; only the ``fsck``/``vacuum`` listings are local.
 
 Scale notes: rewrite cost per merge is bounded by the touched
 partitions, not the table; the manifest is O(partitions); readers
@@ -48,6 +54,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import time
 import uuid
 from functools import reduce
 from urllib.parse import unquote
@@ -56,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from babylon_data_loader_spark.functions.exprs import referenced_columns
 from babylon_data_loader_spark.operators.commit_backend import (
     PosixCommitBackend,
 )
@@ -82,13 +91,11 @@ def _orderable(dtype) -> bool:
     arrays and structs are orderable iff their element/field types
     are. Used to exclude such columns from merge()'s trailing
     tiebreak instead of letting the whole MERGE raise."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    if isinstance(dtype, MapType):
+    if isinstance(dtype, T.MapType):
         return False
-    if isinstance(dtype, ArrayType):
+    if isinstance(dtype, T.ArrayType):
         return _orderable(dtype.elementType)
-    if isinstance(dtype, StructType):
+    if isinstance(dtype, T.StructType):
         return all(_orderable(f.dataType) for f in dtype.fields)
     return True
 
@@ -237,11 +244,11 @@ class TransactionalLake:
                 f"version {version} not committed "
                 f"(current: {current['version']})"
             )
-        with open(
-            os.path.join(self._manifest_dir, f"v{version}.json"),
-            encoding="utf-8",
-        ) as fh:
-            return json.load(fh)
+        return json.loads(
+            self.backend.read(
+                os.path.join(self._manifest_dir, f"v{version}.json")
+            )
+        )
 
     # -- tags ---------------------------------------------------------------
 
@@ -252,16 +259,15 @@ class TransactionalLake:
     def tags(self) -> dict[str, int]:
         """Named tag → pinned version (empty if none yet)."""
         try:
-            with open(self._tags_path, encoding="utf-8") as fh:
-                return {k: int(v) for k, v in json.load(fh).items()}
+            text = self.backend.read(self._tags_path)
         except FileNotFoundError:
             return {}
+        return {k: int(v) for k, v in json.loads(text).items()}
 
     def _write_tags(self, tags: dict[str, int]) -> None:
-        tmp = f"{self._tags_path}.tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(tags, fh, sort_keys=True)
-        os.replace(tmp, self._tags_path)  # atomic on POSIX
+        self.backend.publish(
+            self._tags_path, json.dumps(tags, sort_keys=True)
+        )
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Pin `name` to a committed version (default: current) —
@@ -597,23 +603,48 @@ class TransactionalLake:
             ) from None
         self.backend.publish(self._current_path, name)
 
+    def _commit_loop(self, plan, max_retries: int = 3):
+        """The one write loop. Each attempt calls ``plan(manifest)`` on
+        the current manifest; the plan returns ``(version dir, next
+        manifest, result)`` — having written that dir or reused one —
+        or None when there is nothing to commit. The attempt then
+        claims; a lost claim backs off and re-plans on the advanced
+        state, up to ``max_retries`` times. Returns the committing
+        plan's result (None if a plan had nothing to commit). Every
+        dir a plan returned whose claim was lost, and that no later
+        attempt committed, is removed before the call returns or
+        raises."""
+        lost: set[str] = set()
+        try:
+            for attempt in range(max_retries + 1):
+                planned = plan(self.current_manifest())
+                if planned is None:
+                    return None
+                rel, manifest, result = planned
+                try:
+                    self._claim_and_commit(manifest)
+                except ConcurrentWriteError:
+                    lost.add(rel)
+                    if attempt == max_retries:
+                        raise
+                    # Linear backoff: a loser that re-reads before the
+                    # winner's pointer publish lands re-plans on the same
+                    # stale version and burns another attempt on the
+                    # same claim (seen under a loaded 32-thread sweep).
+                    time.sleep(0.02 * (attempt + 1))
+                    continue
+                lost.discard(rel)
+                return result
+        finally:
+            for rel in lost:
+                shutil.rmtree(
+                    os.path.join(self.lake_path, rel), ignore_errors=True
+                )
+
     def _subdir_value(self, subdir: str) -> str:
         """Raw partition value of a ``col=value`` subdir name (Spark
         escapes path-special chars as %XX; unquote reverses it)."""
         return unquote(subdir.split("=", 1)[1])
-
-    @staticmethod
-    def _condition_attr_names(condition) -> set[str] | None:
-        """Column names a still-UNRESOLVED Column expression
-        references — the shared walker (functions/exprs.py). Returns
-        None when the walk cannot be trusted (star expansion, walker
-        failure) — callers must then treat the reference set as
-        unknown."""
-        from babylon_data_loader_spark.functions.exprs import (
-            referenced_columns,
-        )
-
-        return referenced_columns(condition)
 
     def _touched_partition_values(
         self, spark: SparkSession, manifest: dict, condition
@@ -634,8 +665,6 @@ class TransactionalLake:
         (a silent NULL there would skip deletions). The fallback scan
         filters then projects just the partition column, so Catalyst
         prunes the parquet read to the columns the condition needs."""
-        from pyspark.sql.types import StringType, StructField, StructType
-
         pc = self.partition_col
         raw = sorted(
             {self._subdir_value(s) for s in manifest["partitions"]}
@@ -654,7 +683,7 @@ class TransactionalLake:
                 .collect()
             }
 
-        refs = self._condition_attr_names(condition)
+        refs = referenced_columns(condition)
         if refs is None or any(r.lower() != pc.lower() for r in refs):
             return _discovery_scan()
         try:
@@ -666,7 +695,9 @@ class TransactionalLake:
                     (None if v == HIVE_NULL_PARTITION else v,)
                     for v in raw
                 ],
-                StructType([StructField("__raw", StringType(), True)]),
+                T.StructType(
+                    [T.StructField("__raw", T.StringType(), True)]
+                ),
             ).select(
                 "__raw", F.col("__raw").cast(ptype).alias(pc)
             )
@@ -760,18 +791,16 @@ class TransactionalLake:
         must be stable per key (true for data_source); migrating
         partitioning onto a mutable value column would let a key's
         old row survive in its former partition."""
-        for attempt in range(max_retries + 1):
-            manifest = self.current_manifest()
-            # NULL partition values land on disk under Spark's
-            # __HIVE_DEFAULT_PARTITION__ subdir; match that, not the
-            # Python repr 'None' (which matches nothing and would let
-            # same-key null-partition rows survive the anti-join).
-            touched_values = {
-                HIVE_NULL_PARTITION if r[0] is None else str(r[0])
-                for r in batch.select(self.partition_col)
-                .distinct()
-                .collect()
-            }
+        # NULL partition values land on disk under Spark's
+        # __HIVE_DEFAULT_PARTITION__ subdir; match that, not the
+        # Python repr 'None' (which matches nothing and would let
+        # same-key null-partition rows survive the anti-join).
+        touched_values = {
+            HIVE_NULL_PARTITION if r[0] is None else str(r[0])
+            for r in batch.select(self.partition_col).distinct().collect()
+        }
+
+        def plan(manifest: dict):
             stored_subdirs = {
                 subdir: dirs
                 for subdir, dirs in manifest["partitions"].items()
@@ -864,37 +893,13 @@ class TransactionalLake:
             else:
                 merged = batch
             rel, new_subdirs = self._write_version_dir(merged)
-            new_manifest = self._next_manifest(
-                manifest,
-                {
-                    **manifest["partitions"],
-                    **{s: [rel] for s in new_subdirs},
-                },
-            )
-            try:
-                self._claim_and_commit(new_manifest)
-                return
-            except ConcurrentWriteError:
-                # Someone else advanced the table: our merged output is
-                # stale. Drop the orphan dir and redo on fresh state.
-                import shutil
-                import time
+            parts = {
+                **manifest["partitions"],
+                **{s: [rel] for s in new_subdirs},
+            }
+            return rel, self._next_manifest(manifest, parts), None
 
-                shutil.rmtree(
-                    os.path.join(self.lake_path, rel), ignore_errors=True
-                )
-                if attempt == max_retries:
-                    raise
-                # Linear backoff before re-reading the manifest: a
-                # loser that retries before the winner's pointer
-                # publish lands rebuilds on the SAME stale version and
-                # burns another attempt on the SAME claim — one
-                # opponent commit could exhaust the whole budget
-                # (observed once under a fully-loaded 32-thread sweep,
-                # r12). Milliseconds against a commit that just wrote
-                # a version directory.
-                time.sleep(0.02 * (attempt + 1))
-
+        self._commit_loop(plan, max_retries)
 
     def delete_where(
         self,
@@ -917,15 +922,15 @@ class TransactionalLake:
         partition whose rows all match is DROPPED from the manifest.
         A no-match delete returns 0 without committing a version."""
         survives = ~F.coalesce(condition, F.lit(False))
-        for attempt in range(max_retries + 1):
-            manifest = self.current_manifest()
+
+        def plan(manifest: dict):
             if not manifest["partitions"]:
-                return 0
+                return None
             touched_values = self._touched_partition_values(
                 spark, manifest, condition
             )
             if not touched_values:
-                return 0
+                return None
             stored_subdirs = {
                 subdir: dirs
                 for subdir, dirs in manifest["partitions"].items()
@@ -937,17 +942,15 @@ class TransactionalLake:
             # VOID and the survivor write would reject it — recover
             # the canonical type from the whole manifest (footer-level
             # metadata, no data scan)
-            from pyspark.sql.types import NullType
-
             if isinstance(
-                stored.schema[self.partition_col].dataType, NullType
+                stored.schema[self.partition_col].dataType, T.NullType
             ):
                 canonical = (
                     self._read_partitions(spark, manifest["partitions"])
                     .schema[self.partition_col]
                     .dataType
                 )
-                if isinstance(canonical, NullType):
+                if isinstance(canonical, T.NullType):
                     canonical = "string"
                 stored = stored.withColumn(
                     self.partition_col,
@@ -968,32 +971,20 @@ class TransactionalLake:
                 # partition-value pruning can over-approximate when it
                 # falls back to the discovery scan mid-race; nothing
                 # to delete means nothing to commit
-                return 0
+                return None
             survivors = stored.where(survives)
             rel, new_subdirs = self._write_version_dir(survivors)
-            new_manifest = self._next_manifest(
-                manifest,
-                {
-                    **{
-                        s: d
-                        for s, d in manifest["partitions"].items()
-                        if s not in stored_subdirs
-                    },
-                    **{s: [rel] for s in new_subdirs},
+            parts = {
+                **{
+                    s: d
+                    for s, d in manifest["partitions"].items()
+                    if s not in stored_subdirs
                 },
-            )
-            try:
-                self._claim_and_commit(new_manifest)
-                return n_deleted
-            except ConcurrentWriteError:
-                import shutil
+                **{s: [rel] for s in new_subdirs},
+            }
+            return rel, self._next_manifest(manifest, parts), n_deleted
 
-                shutil.rmtree(
-                    os.path.join(self.lake_path, rel), ignore_errors=True
-                )
-                if attempt == max_retries:
-                    raise
-        return 0
+        return self._commit_loop(plan, max_retries) or 0
 
     def migrate_partitioning(
         self,
@@ -1023,26 +1014,22 @@ class TransactionalLake:
             cluster_files=self.cluster_files,
             bloom_cols=self.bloom_cols,
         )
-        for attempt in range(max_retries + 1):
-            manifest = self.current_manifest()
-            df = self._read_partitions(spark, manifest["partitions"])
-            rel, new_subdirs = migrated._write_version_dir(df)
-            new_manifest = {
-                "version": manifest["version"] + 1,
-                "partition_col": new_partition_col,
-                "partitions": {s: [rel] for s in new_subdirs},
-            }
-            try:
-                migrated._claim_and_commit(new_manifest)
-                return migrated
-            except ConcurrentWriteError:
-                import shutil
 
-                shutil.rmtree(
-                    os.path.join(self.lake_path, rel), ignore_errors=True
-                )
-                if attempt == max_retries:
-                    raise
+        def plan(manifest: dict):
+            rel, new_subdirs = migrated._write_version_dir(
+                self._read_partitions(spark, manifest["partitions"])
+            )
+            return (
+                rel,
+                {
+                    "version": manifest["version"] + 1,
+                    "partition_col": new_partition_col,
+                    "partitions": {s: [rel] for s in new_subdirs},
+                },
+                migrated,
+            )
+
+        return self._commit_loop(plan, max_retries)
 
     def append(self, spark: SparkSession, batch: DataFrame, max_retries: int = 3) -> None:
         """Plain append (no key collapse): a new version dir extends
@@ -1052,46 +1039,37 @@ class TransactionalLake:
         current state, so a lost claim race only needs the manifest
         recomputed against the advanced state and a re-claim — no
         data rewrite. Concurrent single-row adds (api.add_transaction)
-        therefore all land, like plain-parquet append mode did. On
-        final failure the orphan dir is removed, not leaked."""
+        therefore all land, like plain-parquet append mode did: the dir
+        is written once, and every attempt's plan re-uses it."""
         rel, new_subdirs = self._write_version_dir(batch)
-        for attempt in range(max_retries + 1):
-            manifest = self.current_manifest()
-            new_manifest = self._next_manifest(
-                manifest,
-                {
-                    **manifest["partitions"],
-                    **{
-                        s: manifest["partitions"].get(s, []) + [rel]
-                        for s in new_subdirs
-                    },
-                },
-            )
-            try:
-                self._claim_and_commit(new_manifest)
-                return
-            except ConcurrentWriteError:
-                if attempt == max_retries:
-                    import shutil
 
-                    shutil.rmtree(
-                        os.path.join(self.lake_path, rel),
-                        ignore_errors=True,
-                    )
-                    raise
+        def plan(manifest: dict):
+            parts = {
+                **manifest["partitions"],
+                **{
+                    s: manifest["partitions"].get(s, []) + [rel]
+                    for s in new_subdirs
+                },
+            }
+            return rel, self._next_manifest(manifest, parts), None
+
+        self._commit_loop(plan, max_retries)
 
     def compact(self, spark: SparkSession) -> None:
         """Fold every partition back to a single version dir (appends
-        accumulate dirs; merge already collapses what it touches)."""
-        manifest = self.current_manifest()
-        if not manifest["partitions"]:
-            return
-        rel, new_subdirs = self._write_version_dir(
-            self._read_partitions(spark, manifest["partitions"])
-        )
-        self._claim_and_commit(
-            self._next_manifest(manifest, {s: [rel] for s in new_subdirs})
-        )
+        accumulate dirs; merge already collapses what it touches). A
+        lost claim re-reads and re-folds the advanced state."""
+
+        def plan(manifest: dict):
+            if not manifest["partitions"]:
+                return None
+            rel, new_subdirs = self._write_version_dir(
+                self._read_partitions(spark, manifest["partitions"])
+            )
+            parts = {s: [rel] for s in new_subdirs}
+            return rel, self._next_manifest(manifest, parts), None
+
+        self._commit_loop(plan)
 
     def diff(
         self,
@@ -1238,9 +1216,6 @@ class TransactionalLake:
         ``stale_claim_s`` the writer has either committed (dir now
         referenced) or lost its claim window.
         """
-        import shutil
-        import time as _time
-
         current = self.current_manifest()
         keep_from = max(1, current["version"] - keep_versions + 1)
         # Tagged versions are pinned OUTSIDE the retention window —
@@ -1263,7 +1238,7 @@ class TransactionalLake:
             for dirs in m["partitions"].values():
                 live.update(dirs)
         removed = []
-        now = _time.time()
+        now = time.time()
         if os.path.isdir(self._versions_dir):
             for entry in sorted(os.listdir(self._versions_dir)):
                 rel = os.path.join("_versions", entry)

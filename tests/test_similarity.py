@@ -341,6 +341,35 @@ def test_index_store_fingerprint_and_reuse(spark, tmp_path):
     assert len(got) <= 5
 
 
+def test_knn_lsh_uri_index_path_is_probed_in_place(spark, tmp_path):
+    """A caller-owned index_path given as a URI is probed where it
+    lives: the second call reuses the index instead of rewriting it."""
+    import os
+
+    from babylon_data_loader_spark.operators.index_store import META_NAME
+    from babylon_data_loader_spark.operators.similarity import knn_lsh
+    from babylon_data_loader_spark.schemas import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    local = tmp_path / "lsh"
+    uri = local.as_uri()
+    assert uri.startswith("file://")
+
+    def search():
+        return sorted(
+            tuple(r)
+            for r in knn_lsh(
+                emb, query_vec_id=0, k=10, n_planes=8, index_path=uri
+            ).collect()
+        )
+
+    out1 = search()
+    assert len(out1) == 10
+    mtime1 = os.stat(local / META_NAME).st_mtime_ns
+    assert search() == out1
+    assert os.stat(local / META_NAME).st_mtime_ns == mtime1
+
+
 def test_store_sweep_keeps_live_cross_sf_siblings(spark, tmp_path):
     """Alternating store access across two scale-factor dirs of the
     same table must NOT evict each other's stores (r8 VERDICT: the

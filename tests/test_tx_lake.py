@@ -481,42 +481,86 @@ def test_merge_null_partition_value(spark, tmp_path):
     assert state(spark, lake) == [(1, "a2", None), (2, "b", "chase")]
 
 
-def test_append_retries_on_claim_race(spark, tmp_path):
-    """append's lost claim race only needs a manifest recompute and
-    re-claim (the data dir content is state-independent); the add
-    must land, and a terminal failure must not leak the orphan dir."""
-    import os as _os
+def _seed_lake(spark, path):
+    lake = TransactionalLake(path)
+    lake.merge(
+        spark, frame(spark, [(1, "a", "chase"), (2, "b", "amex")]), KEY
+    )
+    return lake
 
-    path = str(tmp_path / "lake")
-    a = TransactionalLake(path)
-    a.merge(spark, frame(spark, [(1, "a", "chase")]), KEY)
 
-    # Simulate a racing writer taking every version A tries, twice,
-    # by wrapping create_exclusive to fail the first two attempts
-    # while ANOTHER lake advances the table in between.
+# Each writer's call, and the rows it leaves on top of the seed's
+# (1, a, chase), (2, b, amex) plus the racers' rows.
+WRITERS = {
+    "merge": (
+        lambda spark, lake: lake.merge(
+            spark, frame(spark, [(1, "mine", "chase")]), KEY
+        ),
+        lambda rows: [r for r in rows if r[0] != 1] + [(1, "mine", "chase")],
+    ),
+    "append": (
+        lambda spark, lake: lake.append(
+            spark, frame(spark, [(3, "mine", "chase")])
+        ),
+        lambda rows: rows + [(3, "mine", "chase")],
+    ),
+    "delete_where": (
+        lambda spark, lake: lake.delete_where(spark, F.col("k") == 1),
+        lambda rows: [r for r in rows if r[0] != 1],
+    ),
+    "migrate_partitioning": (
+        lambda spark, lake: lake.migrate_partitioning(spark, "v"),
+        lambda rows: rows,
+    ),
+    "compact": (lambda spark, lake: lake.compact(spark), lambda rows: rows),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(WRITERS))
+def test_writers_retry_on_claim_race(spark, tmp_path, writer):
+    """Every writer commits through the one write loop: a lost claim
+    re-plans on the advanced state, so the call lands on top of the
+    racer's commits; when every claim is lost the call raises and
+    leaves no orphan version dir behind."""
+    call, expect = WRITERS[writer]
+
+    # A racing writer commits before each of A's first two claims.
+    path = str(tmp_path / "race")
+    a = _seed_lake(spark, path)
     b = TransactionalLake(path)
     real_create = a.backend.create_exclusive
-    fails = {"n": 2}
+    racers = [(9, "race0", "chase"), (10, "race1", "amex")]
+    pending = list(racers)
 
     def flaky(key, payload):
-        if fails["n"] > 0:
-            fails["n"] -= 1
-            b.append(spark, frame(spark, [(9, "race", "chase")]))
+        if pending:
+            b.append(spark, frame(spark, [pending.pop(0)]))
             return False
         return real_create(key, payload)
 
     a.backend.create_exclusive = flaky
-    a.append(spark, frame(spark, [(2, "mine", "chase")]))
-    vals = {r[1] for r in state(spark, a)}
-    assert "mine" in vals and "race" in vals
+    call(spark, a)
+    landed = TransactionalLake.open(path)
+    assert landed.current_manifest()["version"] == 4
+    want = expect([(1, "a", "chase"), (2, "b", "amex"), *racers])
+    assert state(spark, landed) == sorted(want)
+    assert landed.fsck()["orphan_dirs"] == []
+    if writer == "migrate_partitioning":
+        assert landed.partition_col == "v"
+    if writer == "compact":
+        assert all(
+            len(dirs) == 1
+            for dirs in landed.current_manifest()["partitions"].values()
+        )
 
-    # Terminal failure: every attempt loses → raises AND cleans orphan
-    a.backend.create_exclusive = lambda key, payload: False
-    dirs_before = set(_os.listdir(a._versions_dir))
+    # Every claim lost: raises, commits nothing, leaks no dir.
+    doomed = _seed_lake(spark, str(tmp_path / "doomed"))
+    doomed.backend.create_exclusive = lambda key, payload: False
+    dirs_before = set(os.listdir(doomed._versions_dir))
     with pytest.raises(ConcurrentWriteError):
-        a.append(spark, frame(spark, [(3, "doomed", "chase")]), max_retries=1)
-    assert set(_os.listdir(a._versions_dir)) == dirs_before
-    a.backend.create_exclusive = real_create
+        call(spark, doomed)
+    assert set(os.listdir(doomed._versions_dir)) == dirs_before
+    assert doomed.current_manifest()["version"] == 1
 
 
 def test_vacuum_spares_young_inflight_dirs(spark, tmp_path):
@@ -917,9 +961,10 @@ def test_condition_attr_names_prechecks_fast_path(spark):
     probe analysis failure, no logged AnalysisException). The walker
     must name exactly the condition's columns and return None only
     when the tree cannot be trusted."""
-    from pyspark.sql import functions as F
+    from babylon_data_loader_spark.functions.exprs import (
+        referenced_columns as names,
+    )
 
-    names = TransactionalLake._condition_attr_names
     assert names(F.col("data_source") == "chase") == {"data_source"}
     assert names(F.col("data_source").isNull()) == {"data_source"}
     assert names(
@@ -1104,3 +1149,79 @@ def test_column_order_independent_of_dir_names(spark, tmp_path, monkeypatch):
     first = history(str(tmp_path / "a"), ["0" * 12, "f" * 12])
     second = history(str(tmp_path / "b"), ["f" * 12, "0" * 12])
     assert first == second == ["k", "v", "data_source", "t"]
+
+
+def test_lake_metadata_on_object_store_backend(spark, tmp_path):
+    """Past manifests and tags live where the backend keeps them: on
+    an object-store backend (data files local, every metadata key an
+    object) time travel, tags and diff all work, and no metadata file
+    reaches the local disk."""
+    from babylon_data_loader_spark.operators.commit_backend import (
+        ObjectStoreCommitBackend,
+    )
+    from tests.test_commit_backend import FakeObjectClient
+
+    lake = TransactionalLake(
+        str(tmp_path / "lake"),
+        backend=ObjectStoreCommitBackend(FakeObjectClient()),
+    )
+    lake.merge(
+        spark, frame(spark, [(1, "a", "chase"), (2, "b", "chase")]), KEY
+    )
+    lake.merge(spark, frame(spark, [(1, "a2", "chase")]), KEY)
+    v1 = [(1, "a", "chase"), (2, "b", "chase")]
+    assert sorted(
+        (r["k"], r["v"], r["data_source"])
+        for r in lake.read(spark, version=1).collect()
+    ) == v1
+    assert lake.tag("t", 1) == 1
+    assert lake.tags() == {"t": 1}
+    assert sorted(
+        (r["k"], r["v"], r["data_source"])
+        for r in lake.read(spark, tag="t").collect()
+    ) == v1
+    assert sorted(
+        (r["k"], r["v"], r["change_type"])
+        for r in lake.diff(spark, 1, 2, KEY).collect()
+    ) == [(1, "a", "delete"), (1, "a2", "insert")]
+    lake.delete_tag("t")
+    assert lake.tags() == {}
+    for name in ("_CURRENT", "_tags.json"):
+        assert not os.path.exists(os.path.join(lake.lake_path, name))
+    assert os.listdir(lake._manifest_dir) == []
+
+
+def test_tx_lake_does_its_own_io_only_through_the_backend():
+    """Guard: ``operators/tx_lake.py`` opens and replaces no file
+    itself (metadata goes through ``self.backend``), and lost claims
+    are handled in one place, the write loop."""
+    import ast
+
+    path = os.path.join(
+        os.path.dirname(__file__),
+        "..",
+        "babylon_data_loader_spark",
+        "operators",
+        "tx_lake.py",
+    )
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    direct_io, handlers = [], 0
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            if (isinstance(f, ast.Name) and f.id == "open") or (
+                isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name)
+                and (f.value.id, f.attr)
+                in {("os", "replace"), ("os", "open"), ("io", "open")}
+            ):
+                direct_io.append(node.lineno)
+        if (
+            isinstance(node, ast.ExceptHandler)
+            and node.type is not None
+            and "ConcurrentWriteError" in ast.unparse(node.type)
+        ):
+            handlers += 1
+    assert direct_io == []
+    assert handlers == 1
