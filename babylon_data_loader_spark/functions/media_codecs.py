@@ -5,13 +5,12 @@ formats are decodable from first principles with only the stdlib and
 numpy — which is what these are: actual byte-level codecs, not stubs.
 
 - BMP  : 24-bit uncompressed BI_RGB, full encode + decode
-- PPM  : binary P6, full encode + decode
+- PPM  : binary P6 decode
 - PNG  : 8-bit gray/RGB/RGBA non-interlaced decode (zlib inflate +
-         scanline unfilter, incl. Paeth) and filter-0 encode
+         scanline unfilter, incl. Paeth)
 - WAV  : PCM16 RIFF encode + decode
-- JPEG / GIF : header walk for dimensions only (entropy decode needs a
-         DCT pipeline; `decode_image` falls back to Pillow for these
-         when it is importable)
+- JPEG / GIF and anything else: `decode_image` falls back to Pillow
+         when it is importable
 
 `decode_image` sniffs the magic bytes and dispatches; unsupported
 payloads raise ValueError so callers fail loudly instead of producing
@@ -77,12 +76,6 @@ def decode_bmp(data: bytes) -> np.ndarray:
 # -- PPM (binary P6) ---------------------------------------------------------
 
 
-def encode_ppm(pixels: np.ndarray) -> bytes:
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w, _ = px.shape
-    return f"P6\n{w} {h}\n255\n".encode() + px.tobytes()
-
-
 def decode_ppm(data: bytes) -> np.ndarray:
     if data[:2] != b"P6":
         raise ValueError("not a binary PPM payload")
@@ -115,29 +108,6 @@ def decode_ppm(data: bytes) -> np.ndarray:
 # -- PNG ---------------------------------------------------------------------
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def encode_png(pixels: np.ndarray) -> bytes:
-    """HxWx3 uint8 RGB → PNG (8-bit truecolor, filter 0)."""
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w, _ = px.shape
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + ctype
-            + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    raw = b"".join(b"\x00" + px[r].tobytes() for r in range(h))
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
 
 
 def decode_png(data: bytes) -> np.ndarray:
@@ -199,61 +169,11 @@ def decode_png(data: bytes) -> np.ndarray:
     return px[:, :, :3].copy()
 
 
-# -- dimension sniffing (JPEG/GIF: headers only) -----------------------------
-
-
-def jpeg_dims(data: bytes) -> tuple[int, int]:
-    """Walk JPEG markers to the first SOF frame header."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = data[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        length = struct.unpack_from(">H", data, pos + 2)[0]
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            h, w = struct.unpack_from(">HH", data, pos + 5)
-            return (w, h)
-        pos += 2 + length
-    raise ValueError("no JPEG SOF marker found")
-
-
-def gif_dims(data: bytes) -> tuple[int, int]:
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    w, h = struct.unpack_from("<HH", data, 6)
-    return (w, h)
-
-
-def image_dims(data: bytes) -> tuple[int, int]:
-    """(width, height) from the header of any recognized format."""
-    if data[:2] == b"BM":
-        w, h = struct.unpack_from("<ii", data, 18)
-        return (w, abs(h))
-    if data[:8] == _PNG_MAGIC:
-        w, h = struct.unpack_from(">II", data, 16)
-        return (w, h)
-    if data[:2] == b"P6":
-        px = decode_ppm(data)
-        return (px.shape[1], px.shape[0])
-    if data[:2] == b"\xff\xd8":
-        return jpeg_dims(data)
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        return gif_dims(data)
-    raise ValueError("unsupported image format")
-
-
 def decode_image(data: bytes) -> np.ndarray:
     """Payload bytes → HxWx3 uint8 RGB, dispatched on magic bytes.
 
-    BMP/PPM/PNG decode natively; JPEG/GIF fall back to Pillow when
-    importable, else raise (dimensions for those are still available
-    via `image_dims`)."""
+    BMP/PPM/PNG decode natively; other formats fall back to Pillow
+    when importable, else raise."""
     if data[:2] == b"BM":
         return decode_bmp(data)
     if data[:2] == b"P6":

@@ -1,8 +1,7 @@
-"""The UDF / UDAF / UDTF surface — escape hatches for semantics
-built-ins can't express, all Arrow-batched (never row-at-a-time
-Python in a hot path):
+"""The UDF / UDTF surface — escape hatches for semantics built-ins
+can't express, all Arrow-batched (never row-at-a-time Python in a hot
+path):
 
-- :func:`weighted_avg` — pandas GROUPED_AGG UDAF.
 - :class:`NGrams` — Python UDTF (Spark 4): one row in, n rows out,
   with lateral-join composition.
 
@@ -15,16 +14,6 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf, udtf
-from pyspark.sql.types import DoubleType
-
-
-@pandas_udf(DoubleType())
-def weighted_avg(values: pd.Series, weights: pd.Series) -> float:
-    """UDAF: Σ(v·w)/Σw per group, vectorized over Arrow batches."""
-    total_weight = float(weights.sum())
-    if total_weight == 0.0:
-        return float("nan")
-    return float((values * weights).sum() / total_weight)
 
 
 @udtf(returnType="pos: int, gram: string")

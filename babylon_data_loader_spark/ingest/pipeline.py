@@ -168,7 +168,8 @@ class IngestResult:
 def ingest(spark: SparkSession, config: EngineConfig) -> IngestResult:
     """Run the full ingest pipeline once (batch mode).
 
-    Streaming-shaped variant lives in streaming/ingest_stream.py.
+    The streaming shape of the same upsert (readStream -> foreachBatch
+    MERGE -> AvailableNow) is the ``q_stream_replay`` lane.
     """
     result = IngestResult()
     directory = config.unprocessed_dir

@@ -66,6 +66,8 @@ class PosixCommitBackend:
         os.replace(tmp, key)  # atomic on POSIX
 
     def create_exclusive(self, key: str, payload: str) -> bool:
+        # the first claim of a lake creates its manifest dir
+        os.makedirs(os.path.dirname(key), exist_ok=True)
         try:
             fd = os.open(key, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError:

@@ -73,8 +73,8 @@ def stored_doc_fingerprints(
 def dedup_exact_ids(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """The kept-id frame of :func:`dedup_exact` (min id per
-    normalized-text fingerprint), id-width. Callers that only need
+    """The kept ids of exact dedup (min id per normalized-text
+    fingerprint), id-width. Callers that only need
     the survivor id SET (to semi-join several consumers) should use
     this and persist it once instead of re-deriving the full
     fingerprint aggregate per consumer — the md5-over-text scan is
@@ -110,14 +110,6 @@ def stored_exact_survivor_ids(
         f"i_{id_col}_t_{text_col}",
         lambda: dedup_exact_ids(docs, text_col, id_col),
     )
-
-
-def dedup_exact(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep one row per normalized-text fingerprint (min id wins)."""
-    keep = dedup_exact_ids(docs, text_col, id_col)
-    return docs.join(keep, on=id_col, how="left_semi")
 
 
 def minhash_signatures(
@@ -597,78 +589,6 @@ def jaccard_verify(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-
-
-def dedup_near(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    signatures: DataFrame | None = None,
-    shingles_df: DataFrame | None = None,
-) -> DataFrame:
-    """Full near-dup pipeline: signatures → LSH candidates → Jaccard
-    verify → drop the higher id of each surviving pair (greedy,
-    deterministic). For CHAINED duplicates (A≈B≈C where A≉C directly)
-    prefer :func:`dedup_clustered`, which keeps exactly one doc per
-    connected component.
-
-    `signatures` / `shingles_df` let the caller feed at-rest tables
-    computed once for the FULL corpus (operators/index_store.py); a
-    superset signature table is restricted to `docs`' ids with a
-    semi-join so pairs can only form within the input."""
-    sig = (
-        signatures.join(docs.select(id_col), on=id_col, how="left_semi")
-        if signatures is not None
-        else minhash_signatures(docs, text_col, id_col)
-    )
-    pairs = lsh_candidate_pairs(sig, id_col)
-    dup = jaccard_verify(
-        docs, pairs, text_col, id_col, threshold, shingles_df=shingles_df
-    )
-    losers = dup.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs.join(losers, on=id_col, how="left_anti")
-
-
-def dedup_clustered(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.8,
-    signatures: DataFrame | None = None,
-    shingles_df: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup removal with CLUSTER semantics: verified pairs become
-    edges, connected components assign every doc its component's min
-    id, and exactly the component representative survives. Handles
-    duplicate chains correctly where greedy pair-dropping keeps
-    either too many docs (A≈B, B≈C, A≉C: greedy keeps A and may keep
-    C) or — with unluckier id orderings — drops transitively-linked
-    originals. `signatures`/`shingles_df` as in :func:`dedup_near`."""
-    from babylon_data_loader_spark.operators.graph import (
-        connected_components,
-    )
-
-    sig = (
-        signatures.join(docs.select(id_col), on=id_col, how="left_semi")
-        if signatures is not None
-        else minhash_signatures(docs, text_col, id_col)
-    )
-    pairs = lsh_candidate_pairs(sig, id_col)
-    dup = jaccard_verify(
-        docs, pairs, text_col, id_col, threshold, shingles_df=shingles_df
-    )
-    labels = connected_components(
-        docs.select(id_col),
-        dup.select("doc_a", "doc_b"),
-        id_col=id_col,
-        src_col="doc_a",
-        dst_col="doc_b",
-    )
-    keepers = labels.filter(F.col("id") == F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    return docs.join(keepers, on=id_col, how="left_semi")
 
 
 # ---------------------------------------------------------------------------

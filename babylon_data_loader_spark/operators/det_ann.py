@@ -1,12 +1,12 @@
 """Deterministic, cross-engine-exact ANN primitives.
 
-The float ANN operators (operators/similarity.py, ivf.py, kmeans.py)
-are the production paths, but their randomness (seeded numpy
-hyperplanes) and float accumulation order make them impossible for an
-independent SQL engine to reproduce bit-for-bit — which is why their
+The float ANN operators (operators/similarity.py, pq.py, kmeans.py)
+depend on seeded numpy hyperplanes and float accumulation order, which
+no independent SQL engine reproduces bit-for-bit — which is why their
 queries carried rows-only self-certification through r10. This module
-re-derives the same three algorithm families from INTEGER arithmetic
-that any engine evaluates identically (r10 VERDICT ask #3):
+re-derives the same algorithm families from INTEGER arithmetic that
+any engine evaluates identically (r10 VERDICT ask #3), and it is the
+one IVF, IVF-PQ and Lloyd k-means the lanes run:
 
 - hyperplanes: component c[p][d] = md5("tag:p:d")[:6 hex] − 2^23 — a
   centered 24-bit integer both hashlib and DuckDB ``md5()`` agree on
@@ -373,26 +373,6 @@ def adc_distance_per_list(
     )
 
 
-def det_seed_codebook(
-    emb: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[int]]]:
-    """The sampled-seed coarse codebook: quantized vectors of the k
-    LOWEST ids (ids are contiguous from 0 in the corpus tables, so
-    ``id < k`` selects them with a pushed-down scan filter).
-    Driver-side k×dim ints — index metadata, not a data collect."""
-    rows = (
-        emb.where(F.col(id_col) < k)
-        .select(id_col, quantize_vec(F.col(vec_col)).alias("q"))
-        .collect()
-    )
-    return sorted(
-        (int(r[id_col]), [int(x) for x in r["q"]]) for r in rows
-    )
-
-
 def det_assigned_store(
     emb: DataFrame,
     tag: str,
@@ -410,10 +390,9 @@ def det_assigned_store(
     was ~2 s of q_ivf_nprobe_curve's plan construction per run, r13
     VERDICT ask #2). Keyed by (content fingerprint, codebook
     digest): a different codebook — retrained, different k — gets
-    its own store; regenerated data sweeps the old one. This is the
-    det-ANN twin of ivf.write_ivf_index with the index_store's
-    invalidation discipline; at 100 TB it is the cluster-partitioned
-    layout the docstrings of the IVF lanes describe."""
+    its own store; regenerated data sweeps the old one. At 100 TB it
+    is the cluster-partitioned layout the docstrings of the IVF lanes
+    describe."""
     import json
 
     from babylon_data_loader_spark.operators.index_store import (

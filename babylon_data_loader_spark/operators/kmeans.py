@@ -1,46 +1,25 @@
-"""Distributed k-means (Lloyd) over embedding columns.
+"""Nearest-centroid assignment over embedding columns.
 
-The clustering workhorse of LLM-corpus curation: SemDeDup-style
-semantic grouping, cluster-balanced (diversity) sampling, and IVF
-coarse quantizers all start from a k-means partition of the embedding
-space. Everything here is DataFrame-native:
+The float half of k-means: every vector labeled with its nearest
+centroid by squared L2 (``assign_clusters``). The codebook collapses
+to ONE broadcast row holding an array of (cid, centroid) structs, and
+each vector's argmin is ``array_min`` over a scored copy of that
+array: a per-row projection, so per-vector work shuffles NOTHING (the
+only exchange is the O(k)-row collect_list feeding the broadcast),
+the property that matters when the codebook is a coarse quantizer
+with thousands of centroids.
 
-- **assign**: nearest-centroid by squared L2 — the k×dim codebook
-  collapses to ONE broadcast row holding an array of (cid, centroid)
-  structs, and each vector's argmin is `array_min` over a scored
-  copy of that array: a per-row projection, so per-vector work
-  shuffles NOTHING (the only exchange is the O(k)-row collect_list
-  feeding the broadcast) — the property that matters when the
-  codebook is an IVF coarse quantizer with thousands of centroids.
-  (The r8 version ranked N×k scored rows through an id-partitioned
-  window: an N×k-row shuffle.)
-- **update**: new centroids are per-dimension means — posexplode to
-  (cid, dim, value) and ONE map-combinable grouped average; k×dim
-  result rows are codebook-scale (driver-safe metadata, the same
-  materialization the IVF/PQ trainers use, operators/ivf.py).
-- **iterate**: a driver loop over assign/update. Iteration count is
-  a small constant (Lloyd converges fast and curation pipelines cap
-  it); each iteration is two distributed jobs, so the driver never
-  holds more than the k×dim codebook.
+The round-8 lanes assign against fixed codebooks with it. Lloyd
+iterations (assign, update, repeat) run on the integer grid in
+operators/det_ann.py, whose trajectory an independent engine
+reproduces exactly.
 
-At 100 TB the vector table stays partitioned by id throughout; the
-only data that ever reaches the driver is the codebook and the
-per-iteration inertia scalar. Mini-batching (sampling a fraction per
-update) drops in by filtering the assign input — the update algebra
-is unchanged.
-
-Determinism: centroid init is the k smallest-id vectors (not a random
-sample), assignment ties break toward the smallest centroid id on an
-integer-quantized distance key, and the update's mean and the
-recorded inertia route their cross-row sums through DECIMAL on a
-rounded grid (the repo's float-sum rule) — so a fixed input yields a
-fixed clustering and a fixed trajectory on any partitioning and
-executor count.
+Determinism: assignment ties break toward the smallest centroid id on
+an integer-quantized distance key, so a fixed input yields a fixed
+labeling on any partitioning and executor count.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -182,155 +161,4 @@ def assign_clusters(
         F.col("_best")["cid"].alias(cid_col),
         F.col("_best")["dist"].alias("dist"),
         F.col("_best")["dist_e9"].alias("dist_e9"),
-    )
-
-
-def update_centroids(
-    assigned: DataFrame,
-    cid_col: str = "cid",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(cid, centroid): per-dimension mean of each cluster's members —
-    one posexplode + one grouped average (map-combinable), then the
-    k×dim rows fold back into arrays. Emits only non-empty clusters
-    (Lloyd's empty-cluster case keeps its previous centroid; callers
-    that need that join this result against the old codebook)."""
-    dims = assigned.select(
-        cid_col, F.posexplode(vec_col).alias("d", "v")
-    )
-    # round-to-grid-then-DECIMAL (the repo's cross-row float-sum
-    # rule): a plain double avg's summation order depends on the
-    # partition layout, so iteration-2+ centroids — and therefore
-    # assignments near a quantization boundary — could differ between
-    # environments. The DECIMAL numerator makes the mean a function
-    # of the data alone.
-    cent = dims.groupBy(cid_col, "d").agg(
-        (
-            F.sum(
-                F.round(F.col("v").cast("double"), 9).cast(
-                    "decimal(28,12)"
-                )
-            ).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("c")
-    )
-    return (
-        cent.groupBy(cid_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("d", "c"))
-            ).alias("_dc")
-        )
-        .select(
-            cid_col,
-            F.transform(F.col("_dc"), lambda s: s["c"]).alias(
-                "centroid"
-            ),
-        )
-    )
-
-
-@dataclass
-class KMeansResult:
-    assignment: DataFrame  # (id, cid, dist, dist_e9)
-    centroids: DataFrame  # (cid, centroid)
-    history: list[dict]  # per-iteration {"iter", "inertia", "n_shifted"}
-
-
-def kmeans(
-    vecs: DataFrame,
-    k: int = 8,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> KMeansResult:
-    """Fixed-iteration Lloyd k-means with deterministic first-k-ids
-    init. Records inertia (sum of assigned squared distances) and the
-    number of vectors that changed cluster per iteration; Lloyd
-    guarantees inertia is non-increasing, which the self-certifying
-    refine query asserts."""
-    first_ids = [
-        r[0]
-        for r in vecs.select(id_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(k)
-        .collect()
-    ]
-    cid_map = {v: i for i, v in enumerate(first_ids)}
-    cents = (
-        vecs.where(F.col(id_col).isin(first_ids))
-        .select(
-            F.col(id_col),
-            F.col(vec_col).alias("centroid"),
-        )
-        .withColumn(
-            "cid",
-            F.element_at(
-                F.create_map(
-                    *[
-                        F.lit(x)
-                        for kv in cid_map.items()
-                        for x in kv
-                    ]
-                ),
-                F.col(id_col),
-            ).cast("long"),
-        )
-        .select("cid", "centroid")
-    )
-    history: list[dict] = []
-    prev = None
-    assigned = None
-    for it in range(n_iters):
-        assigned = assign_clusters(
-            vecs, cents, id_col, vec_col
-        ).persist()
-        # dist is already round-9, so the DECIMAL sum is exact and
-        # the recorded inertia is partition-order-proof
-        stats = assigned.agg(
-            F.sum(F.col("dist").cast("decimal(28,12)"))
-            .cast("double")
-            .alias("inertia"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        if prev is not None:
-            n_shifted = (
-                assigned.select(id_col, "cid")
-                .join(
-                    prev.select(
-                        id_col, F.col("cid").alias("_prev_cid")
-                    ),
-                    id_col,
-                )
-                .where(F.col("cid") != F.col("_prev_cid"))
-                .count()
-            )
-        else:
-            n_shifted = int(stats["n"])
-        history.append(
-            {
-                "iter": it,
-                "inertia": float(stats["inertia"] or 0.0),
-                "n_shifted": int(n_shifted),
-            }
-        )
-        if prev is not None:
-            prev.unpersist()
-        prev = assigned
-        if it < n_iters - 1:
-            new_cents = update_centroids(
-                assigned.join(
-                    vecs.select(id_col, vec_col), id_col
-                ),
-                vec_col=vec_col,
-            )
-            # empty clusters keep their previous centroid
-            cents = new_cents.unionByName(
-                cents.join(
-                    new_cents.select("cid"), "cid", "left_anti"
-                )
-            )
-    assert assigned is not None  # n_iters >= 1
-    return KMeansResult(
-        assignment=assigned, centroids=cents, history=history
     )

@@ -1,10 +1,9 @@
 """Product quantization (PQ) — compressed ANN codes for 100 TB-scale
 embedding tables.
 
-Third ANN strategy next to sign-LSH (operators/similarity.py) and
-IVF-Flat (operators/ivf.py), attacking a different bottleneck: the
-BYTES. At 100 TB an fp32 embedding column dominates storage and scan
-I/O; PQ stores each vector as `m` small codebook indices (here m bytes
+The float ANN strategy next to sign-LSH (operators/similarity.py),
+attacking a different bottleneck: the BYTES. At 100 TB an fp32
+embedding column dominates storage and scan I/O; PQ stores each vector as `m` small codebook indices (here m bytes
 against 4·d float bytes — 32× for d=64, m=8) and answers distance
 queries from the codes alone:
 
@@ -12,10 +11,9 @@ queries from the codes alone:
   k-means runs over ALL subspaces simultaneously — one assignment
   projection (the same expression pq_encode uses) plus one
   map-side-combinable (position, code) mean per iteration, so
-  training is 1 shuffle per iteration regardless of m. Deterministic
-  like operators/ivf.py::kmeans_fit: init is the ksub lowest-id
-  vectors' slices, fixed iteration count, no RNG. Codebooks are
-  O(m·ksub·d/m) driver metadata.
+  training is 1 shuffle per iteration regardless of m. Deterministic:
+  init is the ksub lowest-id vectors' slices, fixed iteration count,
+  no RNG. Codebooks are O(m·ksub·d/m) driver metadata.
 - **encode**: per subspace, argmin over ksub squared-L2 distances on
   the slice, as an Arrow-batched pandas UDF — the (batch, m, dsub) ×
   (m, ksub, dsub) distance tensor is one numpy einsum-shaped op per
@@ -146,54 +144,10 @@ def write_pq_index(
 ) -> dict:
     """Persist the codes table (ids + m-byte codes — the 32×-smaller
     at-rest representation a 100 TB search actually scans) with the
-    codebooks in the store meta, mirroring write_ivf_index. Returns
-    the meta."""
+    codebooks in the store meta. Returns the meta."""
     from babylon_data_loader_spark.operators.index_store import write_store
 
     return write_store(codes, path, codebooks=codebooks)
-
-
-def append_pq_index(
-    new_vecs: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-) -> None:
-    """Incrementally extend a stored PQ index: encode new vectors with
-    the EXISTING codebooks (no refit — stored codes stay valid; train
-    drift is a periodic-rebuild decision) and append the new m-byte
-    codes. Search over (base ++ appended) equals a single encode of
-    the union with the same codebooks — the Arrow encode kernel is
-    deterministic per vector (argmin ties to the lowest index) and ADC
-    scoring depends only on code content (pinned by
-    tests/test_similarity.py)."""
-    from babylon_data_loader_spark.operators.index_store import (
-        check_append_schema,
-        read_store_meta,
-    )
-
-    first = new_vecs.select(vec_col).first()
-    if first is None:
-        return
-    meta = read_store_meta(new_vecs.sparkSession, path)
-    codebooks = meta["codebooks"]
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    if len(first[0]) != m * dsub:
-        raise ValueError(
-            f"append_pq_index: new vectors have dim {len(first[0])}, "
-            f"index was built for dim {m * dsub}"
-        )
-    cols = [c for c in new_vecs.columns if c != vec_col]
-    # the stored index holds codes, not vectors: compare the appended
-    # frame's carried columns (everything but the encoded vec) against
-    # the store minus its code column
-    check_append_schema(meta, new_vecs.select(*cols), exclude=("pq_code",))
-    (
-        pq_encode(new_vecs, codebooks, vec_col=vec_col)
-        .select(*cols, "pq_code")
-        .write.mode("append")
-        .parquet(path)
-    )
 
 
 def read_pq_index(spark, path: str):
@@ -254,162 +208,6 @@ def pq_search(
 
     qcol = double_array_lit(query_vec)
     sim = F.round(cosine(F.col(vec_col), qcol), 9).alias("sim")
-    cand = F.broadcast(ranked.select(id_col))
-    return (
-        rerank.join(cand, on=id_col)
-        .select(*[c for c in (id_col, "label") if c in rerank.columns], sim)
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def ivfpq_build(
-    emb: DataFrame,
-    k_coarse: int = 16,
-    m: int = 8,
-    ksub: int = 16,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """IVF-PQ: coarse k-means partitions the space (IVF), PQ encodes
-    each vector's RESIDUAL from its coarse centroid — the composed
-    FAISS-standard at-rest ANN layout. A search prunes to nprobe
-    coarse lists (partition pruning when written partitioned by
-    cluster_id) and scans only m-byte residual codes inside them:
-    both the I/O axis (PQ compression) and the candidate axis (IVF
-    pruning) cut at once.
-
-    Returns (codes DataFrame with cluster_id + pq_code, coarse
-    centroids, residual codebooks). Deterministic end to end.
-    """
-    from babylon_data_loader_spark.operators.ivf import kmeans_fit
-
-    centroids = kmeans_fit(
-        emb, k=k_coarse, n_iters=n_iters, id_col=id_col, vec_col=vec_col
-    )
-    with_res = _with_residuals(emb, centroids, id_col, vec_col)
-    books = pq_fit(
-        with_res.select(id_col, F.col("_res").alias(vec_col)),
-        m=m,
-        ksub=ksub,
-        n_iters=n_iters,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    return ivfpq_encode(emb, centroids, books, id_col, vec_col), centroids, books
-
-
-def _with_residuals(emb, centroids, id_col, vec_col):
-    """Assign each vector to its nearest coarse centroid and attach
-    the residual vector (Arrow-batched, no shuffle)."""
-    from babylon_data_loader_spark.operators.ivf import ivf_index
-
-    assigned = ivf_index(emb, centroids, vec_col=vec_col)
-    cen = np.asarray(centroids, dtype=np.float64)
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def _residual(vecs, cids):
-        import pandas as pd
-
-        if len(vecs) == 0:
-            return pd.Series([], dtype=object)
-        x = np.stack(vecs.to_numpy()).astype(np.float64)
-        r = x - cen[cids.to_numpy().astype(np.int64)]
-        return pd.Series(list(r))
-
-    return assigned.withColumn(
-        "_res", _residual(F.col(vec_col), F.col("cluster_id"))
-    )
-
-
-def ivfpq_encode(
-    new_vecs: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Encode vectors against EXISTING IVF-PQ parameters — the
-    incremental-maintenance half: assign to the stored coarse
-    centroids, residual-encode with the stored codebooks, no refit.
-    ivfpq_build's own encode stage IS this function, so
-    codes(base) ++ ivfpq_encode(extra) is code-for-code identical to a
-    single build's encode of the union under the same parameters
-    (pinned by tests/test_similarity.py)."""
-    with_res = _with_residuals(new_vecs, centroids, id_col, vec_col)
-    return pq_encode(
-        with_res.select(
-            id_col,
-            "cluster_id",
-            *(["label"] if "label" in with_res.columns else []),
-            F.col("_res").alias(vec_col),
-        ),
-        codebooks,
-        vec_col=vec_col,
-    ).drop(vec_col)
-
-
-def ivfpq_search(
-    codes: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    rerank: DataFrame | None = None,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Top-k via per-cluster ADC over residual codes within the
-    nprobe nearest coarse lists. Each probed cluster gets its own
-    lookup table (the query's residual differs per cluster); the
-    cluster filter is a pushable IN / partition-pruning predicate,
-    and per-cluster frames union before one TakeOrdered."""
-    cen = np.asarray(centroids, dtype=np.float64)
-    q = np.asarray(query_vec, dtype=np.float64)
-    cb = np.asarray(codebooks, dtype=np.float64)  # m × ksub × dsub
-    m, ksub, dsub = cb.shape
-    order = np.argsort(((cen - q) ** 2).sum(axis=1), kind="stable")
-    probes = [int(c) for c in order[:nprobe]]
-
-    frames = []
-    for c in probes:
-        qres = (q - cen[c]).reshape(m, 1, dsub)
-        lut = ((cb - qres) ** 2).sum(axis=2)  # m × ksub
-        lut_lit = F.array(
-            *[double_array_lit(lut[i]) for i in range(m)]
-        )
-        code = F.col(code_col)
-        adc = F.round(
-            sum(
-                F.element_at(F.element_at(lut_lit, i + 1), code[i] + 1)
-                for i in range(m)
-            ),
-            9,
-        ).alias("adc_dist2")
-        keep = [col for col in (id_col, "label") if col in codes.columns]
-        frames.append(
-            codes.filter(F.col("cluster_id") == c).select(*keep, adc)
-        )
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    pool = k * rerank_factor if rerank is not None else k
-    ranked = out.orderBy(
-        F.col("adc_dist2").asc(), F.col(id_col).asc()
-    ).limit(pool)
-    if rerank is None:
-        return ranked
-
-    from babylon_data_loader_spark.functions.vectors import cosine as _cos
-
-    qcol = double_array_lit(query_vec)
-    sim = F.round(_cos(F.col(vec_col), qcol), 9).alias("sim")
     cand = F.broadcast(ranked.select(id_col))
     return (
         rerank.join(cand, on=id_col)

@@ -593,27 +593,21 @@ def grouped_running_totals_with_input(
     )
 
 
-def _extreme_scan(
-    df: DataFrame,
-    order: list[Column],
-    cols: dict[str, Column],
-    kind: str,
+def running_max(
+    df: DataFrame, order: list[Column], cols: dict[str, Column]
 ) -> DataFrame:
-    """Distributed running MAX/MIN under a total order — the prefix
-    scan generalized from sums to extremes. Same two-pass shape as
-    ``_scan``: range repartition, per-partition window extreme,
-    O(#partitions) exclusive per-partition extremes broadcast back.
-    NULL semantics come free: ``greatest``/``least`` ignore NULLs (the
-    result is NULL only before the first non-null value globally),
-    which is exactly SQL's window MAX/MIN, so no non-null-count
+    """MAX(col) OVER (ORDER BY order ROWS UNBOUNDED PRECEDING) for
+    each ``cols`` entry, without the single-partition global window:
+    the prefix scan generalized from sums to the running maximum. Same
+    two-pass shape as ``_scan``: range repartition, per-partition
+    window MAX, O(#partitions) exclusive per-partition maxima
+    broadcast back. NULL semantics come free: ``greatest`` ignores
+    NULLs (the result is NULL only before the first non-null value
+    globally), which is exactly SQL's window MAX, so no non-null-count
     carrier is needed."""
     from pyspark.sql.types import StructField, StructType
 
-    if kind not in ("max", "min"):
-        raise ValueError(f"kind must be 'max' or 'min', got {kind!r}")
     _check_collisions(df, [PID, *cols])
-    agg_f = F.max if kind == "max" else F.min
-    combine = F.greatest if kind == "max" else F.least
     part, cache_dir = _ranged(df, order)
     w = (
         Window.partitionBy(PID)
@@ -622,10 +616,10 @@ def _extreme_scan(
     )
     local = part
     for name, col in cols.items():
-        local = local.withColumn(name, agg_f(col).over(w))
+        local = local.withColumn(name, F.max(col).over(w))
 
     totals = part.groupBy(PID).agg(
-        *[agg_f(c).alias(n) for n, c in cols.items()]
+        *[F.max(c).alias(n) for n, c in cols.items()]
     )
     types = {
         f.name: f.dataType for f in totals.schema if f.name != PID
@@ -638,7 +632,7 @@ def _extreme_scan(
         _cached_totals_rows(
             totals,
             cache_dir,
-            _spec_key(kind, *[f"{n}={c}" for n, c in cols.items()]),
+            _spec_key("max", *[f"{n}={c}" for n, c in cols.items()]),
         ),
         key=lambda r: r[PID],
     )
@@ -648,9 +642,7 @@ def _extreme_scan(
         for n in cols:
             if r[n] is not None:
                 running[n] = (
-                    r[n]
-                    if running[n] is None
-                    else (max if kind == "max" else min)(running[n], r[n])
+                    r[n] if running[n] is None else max(running[n], r[n])
                 )
     if not out:
         out = [(0, *[None] * len(cols))]
@@ -658,21 +650,6 @@ def _extreme_scan(
     local = local.join(off, PID)
     for name in cols:
         local = local.withColumn(
-            name, combine(F.col(name), F.col(f"__off_{name}"))
+            name, F.greatest(F.col(name), F.col(f"__off_{name}"))
         ).drop(f"__off_{name}")
     return local.drop(PID)
-
-
-def running_max(
-    df: DataFrame, order: list[Column], cols: dict[str, Column]
-) -> DataFrame:
-    """MAX(col) OVER (ORDER BY order ROWS UNBOUNDED PRECEDING) for
-    each ``cols`` entry, without the single-partition global window."""
-    return _extreme_scan(df, order, cols, "max")
-
-
-def running_min(
-    df: DataFrame, order: list[Column], cols: dict[str, Column]
-) -> DataFrame:
-    """MIN twin of :func:`running_max`."""
-    return _extreme_scan(df, order, cols, "min")

@@ -577,7 +577,6 @@ class TransactionalLake:
         atomically publish _CURRENT. Raises ConcurrentWriteError if
         the claim is held by a live writer (or this writer loses a
         stale-claim takeover race)."""
-        os.makedirs(self._manifest_dir, exist_ok=True)
         name = f"v{manifest['version']}.json"
         claim = os.path.join(self._manifest_dir, name)
         payload = json.dumps(manifest, indent=1, sort_keys=True)

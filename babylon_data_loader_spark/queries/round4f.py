@@ -1283,8 +1283,9 @@ def q_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('cold ring' ~ 'old ring' ~ 'red ring' even when the ends differ
     by 3 edits) collapse into ONE cluster with a deterministic
     min-name representative and the total record mass it absorbs.
-    Exactly the dedup_clustered recipe applied to fuzzy name matching;
-    the RECURSIVE-CTE oracle re-derives the same transitive closure.
+    Cluster-semantics dedup (verified pairs -> components -> one
+    representative) applied to fuzzy name matching; the RECURSIVE-CTE
+    oracle re-derives the same transitive closure.
     Clusters of one (no variants) are excluded — they are not
     resolution work."""
     from babylon_data_loader_spark.operators.graph import (

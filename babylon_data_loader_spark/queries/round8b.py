@@ -680,8 +680,8 @@ def q_lake_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB oracle (r10 VERDICT ask #3). Sampled-seed IVF is the
 # standard no-training coarse quantizer (FAISS's random-subsample
 # training degenerates to it at nlist == sample size); the float
-# k-means path keeps its own coverage via q_kmeans_assign and the
-# operators/ivf.py unit tests.
+# assignment (operators/kmeans.py) keeps its own coverage via
+# q_kmeans_assign.
 
 _IVF_DIM = 64
 _IVF_K = 16

@@ -228,10 +228,8 @@ def q_embedding_dup_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- q_knn_ivf: oracle-backed since r12 ------------------------------------
-# Through r11 this was rows-only ("k-means float averaging is not
-# reproducible in SQL") — true for operators/ivf.py's float Lloyd,
-# which keeps its coverage via tests/test_ivf*.py and the float
-# operators' unit suite. This lane now trains the coarse quantizer on
+# Through r11 this was rows-only: float k-means averaging is not
+# reproducible in SQL. This lane now trains the coarse quantizer on
 # the INTEGER grid (operators/det_ann.py, the q_kmeans_refine
 # machinery: first-k-ids init, exact BIGINT squared-L2 assignment
 # with centroid-id tiebreaks, floor-div mean refinement that lands

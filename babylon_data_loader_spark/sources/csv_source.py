@@ -124,14 +124,14 @@ DISTRIBUTED_SNIFF_THRESHOLD = 4096
 def group_by_header(
     paths: list[str],
     spark: SparkSession | None = None,
-    distributed_threshold: int = DISTRIBUTED_SNIFF_THRESHOLD,
 ) -> list[HeaderGroup]:
     """Group files by lower-cased header signature.
 
-    Header sniffs are one-line reads. Up to `distributed_threshold`
-    files they run as driver-side threaded I/O (latency-bound, no job
-    overhead); past it — 10⁵⁻⁶-file lake directories — they become a
-    small Spark job whose partitions AGGREGATE locally: each executor
+    Header sniffs are one-line reads. Below
+    `DISTRIBUTED_SNIFF_THRESHOLD` files they run as driver-side
+    threaded I/O (latency-bound, no job overhead); from it on —
+    10⁵⁻⁶-file lake directories — they become a small Spark job whose
+    partitions AGGREGATE locally: each executor
     partition sniffs its paths and returns {signature: [path indices]}
     — K signatures and integer indices per partition — so the collect
     carries no per-file header strings back to the driver (the paths
@@ -142,7 +142,7 @@ def group_by_header(
     """
     if not paths:
         return []
-    if spark is not None and len(paths) >= distributed_threshold:
+    if spark is not None and len(paths) >= DISTRIBUTED_SNIFF_THRESHOLD:
         n_slices = max(32, min(len(paths) // 256, 1024))
 
         def sniff_partition(it):

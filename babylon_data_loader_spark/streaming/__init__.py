@@ -1,22 +1,6 @@
-"""Structured Streaming surfaces: streaming ingest (the reference's
-directory-sweep-with-archival made properly incremental) and windowed
-event analytics."""
+"""Structured Streaming operators: static enrichment, stream-stream
+joins, per-user stateful running totals and windowed event analytics.
 
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-def enable_rocksdb_state(spark) -> None:
-    """Switch streaming state to the RocksDB provider.
-
-    The default in-memory (HDFS-backed) store holds every key in
-    executor heap — at 100 TB keyspaces (per-user dedup/session
-    state) that OOMs; RocksDB spills state to local disk with
-    changelog checkpointing. Must be set BEFORE the streaming query
-    starts; applies to new queries only."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
+There is no separate streaming ingest: batch ``ingest()`` is the
+reference path, and the ``q_stream_replay`` lane runs the same
+readStream -> foreachBatch MERGE -> AvailableNow shape over a lake."""

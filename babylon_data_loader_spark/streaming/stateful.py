@@ -15,57 +15,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
     LongType,
     StructField,
     StructType,
 )
-
-RUNNING_TOTALS_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = "n BIGINT, total DOUBLE"
-
-
-def _update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterable[pd.DataFrame]:
-    (user_id,) = key
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_events": [n], "total_value": [total]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Streaming per-user running (count, sum) with explicit state.
-
-    Works on a grouped stream: each micro-batch emits the updated
-    totals for users seen in that batch. On a static frame, use a
-    plain groupBy — this operator exists for the streaming case.
-    """
-    # "append" output: each micro-batch EMITS the updated snapshot rows
-    # for the users it touched (state still accumulates across
-    # batches); this composes with append-only sinks like parquet.
-    return events.select("user_id", "value").groupBy("user_id").applyInPandasWithState(
-        _update,
-        outputStructType=RUNNING_TOTALS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 RUNNING_CENTS_SCHEMA = StructType(
     [
@@ -93,8 +46,10 @@ def _update_cents(
 
 
 def running_user_cents(events: DataFrame) -> DataFrame:
-    """Exact-arithmetic variant of running_user_totals: per-user
-    running (count, integer-cents sum). int64 state makes every
+    """Streaming per-user running (count, integer-cents sum) with
+    explicit state: each micro-batch emits the updated totals for the
+    users it touched ("append" output, so it composes with
+    append-only sinks like parquet). int64 state makes every
     emission independent of batch shape and summation order — the
     property a cross-engine oracle needs (float accumulation order
     varies with batching; integers don't care). Input must carry a

@@ -17,13 +17,6 @@ def docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"]).cache()
 
 
-def test_dedup_exact(spark, docs):
-    from babylon_data_loader_spark.operators.dedup import dedup_exact
-
-    kept = sorted(r["doc_id"] for r in dedup_exact(docs).collect())
-    assert kept == [1, 3, 4, 5]  # 2 collapses into 1
-
-
 def test_lsh_candidates_find_near_dup(spark, docs):
     from babylon_data_loader_spark.operators.dedup import (
         lsh_candidate_pairs,
@@ -54,18 +47,6 @@ def test_jaccard_verify_scores(spark, docs):
     assert verified[(1, 2)] == pytest.approx(1.0)
     # doc3 differs in the final token: 6 of 7 shingles shared → 6/8
     assert verified[(1, 3)] == pytest.approx(0.75)
-
-
-def test_dedup_near_pipeline(spark, docs):
-    from babylon_data_loader_spark.operators.dedup import dedup_near
-
-    kept = sorted(r["doc_id"] for r in dedup_near(docs, threshold=0.8).collect())
-    # 2 (jaccard 1.0 to 1) dropped; 3 (0.75 < 0.8) kept
-    assert kept == [1, 3, 4, 5]
-    strict = sorted(
-        r["doc_id"] for r in dedup_near(docs, threshold=0.6).collect()
-    )
-    assert strict == [1, 4, 5]  # 0.75 ≥ 0.6 ⇒ 3 dropped too
 
 
 def test_stored_verified_pairs_forwards_id_col_and_bands(spark, tmp_path):

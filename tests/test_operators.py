@@ -1,5 +1,5 @@
 """Operator-level tests: similarity search, multimodal plumbing,
-synthetic generator round-trip, streaming ingest."""
+synthetic generator round-trip, streaming operators."""
 
 from __future__ import annotations
 
@@ -82,7 +82,6 @@ def test_multimodal_real_decode_roundtrip(spark):
 
     from babylon_data_loader_spark.functions.media_codecs import (
         encode_bmp,
-        encode_png,
         encode_wav,
     )
     from babylon_data_loader_spark.multimodal import (
@@ -90,6 +89,7 @@ def test_multimodal_real_decode_roundtrip(spark):
         extract_audio_features,
         extract_image_features,
     )
+    from tests.fixtures import encode_png
 
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, (10, 17, 3), dtype=np.uint8)
@@ -175,46 +175,6 @@ def test_synthetic_csv_roundtrip(spark, tmp_path):
     amounts = {r["description"]: r["amount"] for r in lake.collect()}
     originals = {r["description"]: r["amount"] for r in df.collect()}
     assert amounts == originals
-
-
-def test_streaming_ingest_available_now(spark, tmp_path):
-    from babylon_data_loader_spark.streaming.ingest_stream import stream_ingest
-
-    in_dir = tmp_path / "stream_in"
-    in_dir.mkdir()
-    (in_dir / "chase1234.csv").write_text(
-        "Details,Posting Date,Description,Category,Amount,Type,Balance,"
-        "Check or Slip #\n"
-        'DEBIT,01/01/2024,"row one",Shopping,-75.77,DEBIT_CARD,11190.76,\n'
-        'CREDIT,01/02/2024,"row two",Payment,1000.00,PAYMENT,10114.36,\n'
-    )
-    lake = str(tmp_path / "lake")
-    q = stream_ingest(
-        spark,
-        str(in_dir),
-        lake,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    from babylon_data_loader_spark.sources.parquet_lake import (
-        read_transactions,
-    )
-
-    stored = read_transactions(spark, lake)
-    assert stored.count() == 2
-    assert set(stored.select("data_source").distinct().toPandas()["data_source"]) == {"chase"}
-
-    # second drain with no new files: no duplicates (checkpoint dedup)
-    q2 = stream_ingest(
-        spark,
-        str(in_dir),
-        lake,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q2.awaitTermination(120)
-    assert read_transactions(spark, lake).count() == 2
 
 
 def test_streaming_windows_batch_parity(spark):
@@ -350,13 +310,16 @@ def test_export_corpus_sharding(spark, tmp_path):
 def test_streaming_with_rocksdb_state_store(spark, tmp_path):
     """The watermarked streaming aggregation runs on the RocksDB state
     store (the 100 TB keyspace path) and produces the same counts."""
-    from babylon_data_loader_spark.streaming import enable_rocksdb_state
     from babylon_data_loader_spark.streaming.windows import tumbling_counts
 
     prev = spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass", None
     )
-    enable_rocksdb_state(spark)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
     try:
         src_dir = tmp_path / "ev"
         ev = load_table(spark, "/root/testdata/sf0.001", "events")
@@ -530,53 +493,3 @@ def test_resize_images_gradient_matches_numpy(spark):
     expect = px[yi][:, xi]
     assert got.shape == (6, 4, 3)
     assert np.array_equal(got, expect)
-
-
-def test_streaming_ingest_with_contract_quarantine(spark, tmp_path):
-    """Streaming ingest with a DLT-style contract: rows violating a
-    quarantine-action expectation land in the quarantine dir (tagged
-    with violation names + batch id) and never reach the lake."""
-    from babylon_data_loader_spark.operators.expectations import (
-        Expectation,
-    )
-    from babylon_data_loader_spark.sources.parquet_lake import (
-        read_transactions,
-    )
-    from babylon_data_loader_spark.streaming.ingest_stream import (
-        stream_ingest,
-    )
-
-    in_dir = tmp_path / "stream_in"
-    in_dir.mkdir()
-    (in_dir / "chase1234.csv").write_text(
-        "Details,Posting Date,Description,Category,Amount,Type,Balance,"
-        "Check or Slip #\n"
-        'DEBIT,01/01/2024,"ok row",Shopping,-75.77,DEBIT_CARD,11190.76,\n'
-        'DEBIT,01/02/2024,"huge debit",Shopping,-99999.00,DEBIT_CARD,1.00,\n'
-        'CREDIT,01/03/2024,"ok credit",Payment,1000.00,PAYMENT,10114.36,\n'
-    )
-    lake = str(tmp_path / "lake")
-    qdir = str(tmp_path / "quarantine")
-    q = stream_ingest(
-        spark,
-        str(in_dir),
-        lake,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-        contract=[
-            Expectation("amount_sane", "abs(amount) < 50000", "quarantine")
-        ],
-        quarantine_dir=qdir,
-    )
-    q.awaitTermination(120)
-    stored = read_transactions(spark, lake)
-    assert stored.count() == 2
-    assert stored.filter(
-        F.col("description") == "huge debit"
-    ).count() == 0
-    quar = spark.read.parquet(qdir)
-    rows = quar.collect()
-    assert len(rows) == 1
-    assert rows[0]["description"] == "huge debit"
-    assert rows[0]["violations"] == "amount_sane"
-    assert rows[0]["_batch_id"] == 0

@@ -324,13 +324,13 @@ def test_det_assigned_store_matches_inline_and_hits(spark, tmp_path):
     the store (no rebuild)."""
     from babylon_data_loader_spark.operators.det_ann import (
         det_assigned_store,
-        det_seed_codebook,
         int_assign,
         quantize_vec,
     )
     from babylon_data_loader_spark.operators.index_store import (
         ACCESS_LOG,
     )
+    from tests.fixtures import det_seed_codebook
 
     emb = _emb_fixture(spark, tmp_path)
     codebook = det_seed_codebook(emb, 4)

@@ -1,9 +1,9 @@
-"""Unit tests for the round-8 operators: distributed k-means
+"""Unit tests for the round-8 operators: nearest-centroid assignment
 (operators/kmeans.py) and the squared-L2 vector fold. The round-8
 QUERIES are covered by the registry-driven oracle test
 (tests/test_oracle.py); these pin the operator semantics the oracle
-comparison can't see — tie-breaks, empty-cluster handling, the Lloyd
-invariant, and the deterministic init."""
+comparison can't see — tie-breaks, degenerate-input raises, and the
+refine lane's Lloyd-invariant check."""
 
 from __future__ import annotations
 
@@ -12,11 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from babylon_data_loader_spark.operators.kmeans import (
-    assign_clusters,
-    kmeans,
-    update_centroids,
-)
+from babylon_data_loader_spark.operators.kmeans import assign_clusters
 
 
 def _vecs(spark, rows):
@@ -112,68 +108,6 @@ def test_assign_raises_on_null_or_nan_distance(spark):
         assign_clusters(null_vec, cents).collect()
 
 
-def test_update_centroids_mean(spark):
-    assigned = spark.createDataFrame(
-        [
-            (0, [0.0, 2.0]),
-            (0, [2.0, 0.0]),
-            (1, [4.0, 4.0]),
-        ],
-        "cid LONG, embedding ARRAY<FLOAT>",
-    )
-    got = {
-        r["cid"]: r["centroid"]
-        for r in update_centroids(assigned).collect()
-    }
-    assert got[0] == [1.0, 1.0]
-    assert got[1] == [4.0, 4.0]
-
-
-def test_kmeans_inertia_non_increasing(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    res = kmeans(emb, k=4, n_iters=3)
-    inertias = [h["inertia"] for h in res.history]
-    assert len(inertias) == 3
-    for prev, cur in zip(inertias, inertias[1:]):
-        assert cur <= prev * (1 + 1e-9)
-    # first iteration "shifts" every vector (from nothing), later
-    # iterations shift at most all of them
-    n = emb.count()
-    assert res.history[0]["n_shifted"] == n
-    assert all(h["n_shifted"] <= n for h in res.history)
-    res.assignment.unpersist()
-
-
-def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
-    # two far groups, FOUR centroids seeded from ids 0..3 (all in the
-    # left group): after one update at least one centroid loses all
-    # members; the codebook must still hold k entries.
-    rows = [(i, [0.0 + i * 0.01, 0.0]) for i in range(4)] + [
-        (10 + i, [100.0, 0.0]) for i in range(4)
-    ]
-    res = kmeans(_vecs(spark, rows), k=4, n_iters=2)
-    cents = res.centroids.collect()
-    assert len(cents) == 4
-    assert len({r["cid"] for r in cents}) == 4
-    res.assignment.unpersist()
-
-
-def test_kmeans_deterministic_init_and_assignment(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = kmeans(emb, k=4, n_iters=2)
-    b = kmeans(emb, k=4, n_iters=2)
-    rows_a = sorted(
-        (r["vec_id"], r["cid"]) for r in a.assignment.collect()
-    )
-    rows_b = sorted(
-        (r["vec_id"], r["cid"]) for r in b.assignment.collect()
-    )
-    assert rows_a == rows_b
-    assert a.history == b.history
-    a.assignment.unpersist()
-    b.assignment.unpersist()
-
-
 def test_squared_l2_matches_duckdb_fold(spark):
     import duckdb
 
@@ -195,19 +129,6 @@ def test_squared_l2_matches_duckdb_fold(spark):
         "0.0078125] AS a, [1.0, 2.0, -3.0, 0.5] AS b)"
     ).fetchone()[0]
     assert got == want
-
-
-def test_kmeans_custom_column_names(spark):
-    """kmeans() must forward id/vec column names into the update step
-    (regression: iteration 2 resolved the default 'embedding' column
-    on a frame that didn't have one)."""
-    rows = [(i, [float(i % 3), float(i % 5)]) for i in range(12)]
-    vecs = spark.createDataFrame(rows, "rid LONG, vec ARRAY<FLOAT>")
-    res = kmeans(vecs, k=2, n_iters=3, id_col="rid", vec_col="vec")
-    assert len(res.history) == 3
-    assert res.assignment.count() == 12
-    assert set(res.assignment.columns) >= {"rid", "cid", "dist"}
-    res.assignment.unpersist()
 
 
 def test_assign_matches_bruteforce_argmin(spark):

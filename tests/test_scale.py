@@ -83,7 +83,9 @@ def test_distributed_header_sniff_many_files(spark, tmp_path):
     assert elapsed < 120, f"distributed sniff too slow: {elapsed:.1f}s"
 
 
-def test_distributed_sniff_keeps_header_strings_off_driver(spark, tmp_path):
+def test_distributed_sniff_keeps_header_strings_off_driver(
+    spark, tmp_path, monkeypatch
+):
     """The distributed grouping returns signatures + path assignments
     only (header_lines=None — per-file raw lines stay on executors),
     and read_header_group re-derives the header build side with a
@@ -91,10 +93,13 @@ def test_distributed_sniff_keeps_header_strings_off_driver(spark, tmp_path):
     each file's header line must still be dropped."""
     import os as _os
 
+    from babylon_data_loader_spark.sources import csv_source
     from babylon_data_loader_spark.sources.csv_source import (
         group_by_header,
         read_header_group,
     )
+
+    monkeypatch.setattr(csv_source, "DISTRIBUTED_SNIFF_THRESHOLD", 10)
 
     in_dir = tmp_path / "dist"
     in_dir.mkdir()
@@ -105,7 +110,7 @@ def test_distributed_sniff_keeps_header_strings_off_driver(spark, tmp_path):
             f"{hdr}\nD{i},-{i}.0\n"
         )
     paths = [str(in_dir / f) for f in sorted(_os.listdir(in_dir))]
-    groups = group_by_header(paths, spark=spark, distributed_threshold=10)
+    groups = group_by_header(paths, spark=spark)
     assert len(groups) == 1
     assert groups[0].header_lines is None  # no raw lines at the driver
 

@@ -61,74 +61,6 @@ def test_lsh_no_false_pairs_on_random(spark, planted):
         assert r["sim"] >= 0.9999
 
 
-def test_ivf_recall_and_determinism(spark):
-    """IVF search must (a) be deterministic across fits and (b) recover
-    a solid share of the true top-10; full-probe IVF (nprobe=k) must
-    equal brute force exactly — the index never changes similarity,
-    only candidate pruning."""
-    from babylon_data_loader_spark.operators.ivf import (
-        ivf_index,
-        ivf_search,
-        kmeans_fit,
-    )
-    from babylon_data_loader_spark.operators.similarity import knn_bruteforce
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    c1 = kmeans_fit(emb, k=8, n_iters=2)
-    c2 = kmeans_fit(emb, k=8, n_iters=2)
-    assert c1 == c2  # deterministic init + fixed iterations
-
-    indexed = ivf_index(emb, c1).cache()
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    exact = [
-        r["vec_id"] for r in knn_bruteforce(emb, query_vec_id=0, k=10).collect()
-    ]
-
-    probed = ivf_search(
-        indexed.filter("vec_id <> 0"), c1, qvec, k=10, nprobe=3
-    ).collect()
-    assert len(probed) == 10
-    recall = len(set(exact) & {r["vec_id"] for r in probed}) / 10
-    assert recall >= 0.3, f"recall {recall}"
-
-    full = ivf_search(
-        indexed.filter("vec_id <> 0"), c1, qvec, k=10, nprobe=8
-    ).collect()
-    assert [r["vec_id"] for r in full] == exact  # nprobe=K ⇒ exhaustive
-
-
-def test_ivf_stored_index_prunes_partitions(spark, tmp_path):
-    """A probe against the STORED index must prune at the source:
-    the scan's partition filters carry cluster_id, so only the probed
-    lists' directories are read."""
-    from babylon_data_loader_spark.operators.ivf import (
-        ivf_index,
-        ivf_search,
-        kmeans_fit,
-        read_ivf_index,
-        write_ivf_index,
-    )
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    centroids = kmeans_fit(emb, k=8, n_iters=1)
-    write_ivf_index(ivf_index(emb, centroids), str(tmp_path / "ivf"), centroids)
-
-    stored, loaded_centroids = read_ivf_index(spark, str(tmp_path / "ivf"))
-    assert loaded_centroids == centroids
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    out = ivf_search(
-        stored.filter("vec_id <> 0"), loaded_centroids, qvec, k=5, nprobe=2
-    )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert pf and "cluster_id" in pf[0]  # probe prunes directories
-    assert len(out.collect()) == 5
-
-
 def test_lsh_stored_index_prunes_and_recalls(spark, tmp_path):
     """knn_lsh must search an AT-REST bucketed index: the probe scan's
     partition filters carry `bucket` (directory pruning, strictly
@@ -243,42 +175,6 @@ def test_pq_recall_determinism_and_compression(spark):
     assert recall >= 0.5, f"recall {recall}"
     emb.unpersist()
     codes.unpersist()
-
-
-def test_ivfpq_recall_and_determinism(spark):
-    """IVF-PQ composes coarse pruning with residual codes; with exact
-    re-rank and a healthy nprobe it must recover most of the true
-    top-10, and the build must be deterministic."""
-    from babylon_data_loader_spark.operators.pq import (
-        ivfpq_build,
-        ivfpq_search,
-    )
-    from babylon_data_loader_spark.operators.similarity import knn_bruteforce
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    codes1, cen1, books1 = ivfpq_build(emb, k_coarse=8, m=8, ksub=16)
-    _codes2, cen2, books2 = ivfpq_build(emb, k_coarse=8, m=8, ksub=16)
-    assert cen1 == cen2 and books1 == books2
-
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    exact = [
-        r["vec_id"]
-        for r in knn_bruteforce(emb, query_vec_id=0, k=10).collect()
-    ]
-    got = ivfpq_search(
-        codes1.filter("vec_id <> 0"),
-        cen1,
-        books1,
-        qvec,
-        k=10,
-        nprobe=4,
-        rerank=emb.filter("vec_id <> 0"),
-    ).collect()
-    assert len(got) == 10
-    recall = len(set(exact) & {r["vec_id"] for r in got}) / 10
-    assert recall >= 0.4, f"recall {recall}"
-    emb.unpersist()
 
 
 def test_index_store_fingerprint_and_reuse(spark, tmp_path):
@@ -564,172 +460,6 @@ def test_append_lsh_index_equals_full_build(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="dim"):
         append_lsh_index(bad, inc_path)
-
-
-def test_append_ivf_and_compact_index(spark, tmp_path):
-    """IVF incremental append: assign to EXISTING centroids, append
-    into list dirs — search equals a single build with the same
-    centroids. compact_index folds the appended files back to one per
-    list, preserving meta and results."""
-    from babylon_data_loader_spark.operators.index_store import (
-        compact_index,
-    )
-    from babylon_data_loader_spark.operators.ivf import (
-        append_ivf_index,
-        ivf_index,
-        ivf_search,
-        kmeans_fit,
-        read_ivf_index,
-        write_ivf_index,
-    )
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    centroids = kmeans_fit(emb, k=8, n_iters=2)
-    base = emb.filter("vec_id % 2 = 0")
-    extra = emb.filter("vec_id % 2 = 1")
-
-    inc_path = str(tmp_path / "ivf_inc")
-    write_ivf_index(ivf_index(base, centroids), inc_path, centroids)
-    append_ivf_index(extra, inc_path)
-
-    full_path = str(tmp_path / "ivf_full")
-    write_ivf_index(ivf_index(emb, centroids), full_path, centroids)
-
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-
-    def topk(path):
-        stored, cents = read_ivf_index(spark, path)
-        return [
-            tuple(r)
-            for r in ivf_search(
-                stored.filter("vec_id <> 0"), cents, qvec, k=10, nprobe=3
-            ).collect()
-        ]
-
-    assert topk(inc_path) == topk(full_path)
-
-    # appended lists have 2 files; compaction folds to 1, results equal
-    import glob
-    import os
-
-    def max_files_per_list(path):
-        return max(
-            len(glob.glob(os.path.join(d, "*.parquet")))
-            for d in glob.glob(os.path.join(path, "cluster_id=*"))
-        )
-
-    before = topk(inc_path)
-    assert max_files_per_list(inc_path) >= 2
-    compact_index(spark, inc_path, "cluster_id")
-    assert max_files_per_list(inc_path) == 1
-    assert topk(inc_path) == before
-    _, cents = read_ivf_index(spark, inc_path)  # meta survived
-    assert cents == centroids
-
-
-def test_append_pq_index_equals_full_encode(spark, tmp_path):
-    """PQ incremental append: encode the second half with the STORED
-    codebooks and append — ADC search results equal a single full
-    encode (the encode kernel is deterministic per vector and ADC
-    scoring sees only code content)."""
-    from babylon_data_loader_spark.operators.pq import (
-        append_pq_index,
-        pq_encode,
-        pq_fit,
-        pq_search,
-        read_pq_index,
-        write_pq_index,
-    )
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    books = pq_fit(emb, m=8, ksub=16, n_iters=2)
-    base = emb.filter("vec_id % 2 = 0")
-    extra = emb.filter("vec_id % 2 = 1")
-
-    inc_path = str(tmp_path / "pq_inc")
-    write_pq_index(
-        pq_encode(base, books).select("vec_id", "label", "pq_code"),
-        inc_path,
-        books,
-    )
-    append_pq_index(extra, inc_path)
-
-    full_path = str(tmp_path / "pq_full")
-    write_pq_index(
-        pq_encode(emb, books).select("vec_id", "label", "pq_code"),
-        full_path,
-        books,
-    )
-
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-
-    def topk(path):
-        codes, cb = read_pq_index(spark, path)
-        return [
-            tuple(r)
-            for r in pq_search(
-                codes.filter("vec_id <> 0"), cb, qvec, k=10,
-                rerank=emb.filter("vec_id <> 0"),
-            ).collect()
-        ]
-
-    assert topk(inc_path) == topk(full_path)
-
-    import pytest as _pytest
-
-    import pyspark.sql.functions as _F
-
-    bad = extra.limit(1).select(
-        "vec_id", _F.slice("embedding", 1, 3).alias("embedding"), "label"
-    )
-    with _pytest.raises(ValueError, match="dim"):
-        append_pq_index(bad, inc_path)
-
-
-def test_ivfpq_encode_increment_equals_full(spark):
-    """IVF-PQ incremental encode: encoding the second half against the
-    stored (centroids, codebooks) and unioning with the base codes
-    must equal a single build's encode of the union, and search
-    results must match."""
-    from babylon_data_loader_spark.operators.pq import (
-        ivfpq_build,
-        ivfpq_encode,
-        ivfpq_search,
-    )
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    codes_full, cents, books = ivfpq_build(emb, k_coarse=8, m=8, ksub=16)
-
-    base = emb.filter("vec_id % 2 = 0")
-    extra = emb.filter("vec_id % 2 = 1")
-    inc = ivfpq_encode(base, cents, books).unionAll(
-        ivfpq_encode(extra, cents, books)
-    )
-    want = {
-        r["vec_id"]: (r["cluster_id"], tuple(r["pq_code"]))
-        for r in codes_full.collect()
-    }
-    got = {
-        r["vec_id"]: (r["cluster_id"], tuple(r["pq_code"]))
-        for r in inc.collect()
-    }
-    assert got == want
-
-    qvec = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-
-    def topk(codes):
-        return [
-            tuple(r)
-            for r in ivfpq_search(
-                codes.filter("vec_id <> 0"), cents, books, qvec, k=10,
-                rerank=emb.filter("vec_id <> 0"),
-            ).collect()
-        ]
-
-    assert topk(inc) == topk(codes_full)
 
 
 def test_append_schema_guard_and_crashed_swap_recovery(spark, tmp_path):

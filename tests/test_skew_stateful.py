@@ -1,127 +1,8 @@
-"""Skew-salting utilities + custom stateful streaming operator."""
+"""Bounded-state streaming dedup under a watermark."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from babylon_data_loader_spark.schemas import load_table
-
-
-def test_salted_count_matches_plain(spark):
-    from babylon_data_loader_spark.operators.skew import salted_count
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    plain = {
-        (r["event_type"],): r["n"]
-        for r in ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    salted = {
-        (r["event_type"],): r["n"]
-        for r in salted_count(ev, ["event_type"], n_salts=8).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_sum_matches_plain(spark):
-    from babylon_data_loader_spark.operators.skew import salted_sum
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    plain = {
-        r["event_type"]: r["t"]
-        for r in ev.groupBy("event_type")
-        .agg(
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("t")
-        )
-        .collect()
-    }
-    salted = {
-        r["event_type"]: r["total"]
-        for r in salted_sum(ev, ["event_type"], F.col("value"), n_salts=8).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_broadcast_join_matches_plain(spark):
-    from babylon_data_loader_spark.operators.skew import salted_broadcast_join
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    dim = spark.createDataFrame(
-        [("click", 1.0), ("purchase", 2.0), ("view", 0.5)],
-        ["event_type", "weight"],
-    )
-    plain = ev.join(dim, on="event_type").count()
-    salted = salted_broadcast_join(ev, dim, on=["event_type"], n_salts=4)
-    assert salted.count() == plain
-    # weights attached correctly
-    row = salted.filter(F.col("event_type") == "purchase").first()
-    assert row["weight"] == 2.0
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    """State must carry across micro-batches: two files arriving in two
-    availableNow drains accumulate per-user totals."""
-    import json
-    
-    from babylon_data_loader_spark.streaming.stateful import (
-        RUNNING_TOTALS_SCHEMA,
-        running_user_totals,
-    )
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-
-    def drain():
-        stream = (
-            spark.readStream.schema("user_id BIGINT, value DOUBLE")
-            .json(str(src))
-        )
-        totals = running_user_totals(stream)
-        q = (
-            totals.writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    (src / "b1.json").write_text(
-        "\n".join(
-            json.dumps(r)
-            for r in [
-                {"user_id": 1, "value": 10.0},
-                {"user_id": 1, "value": 5.0},
-                {"user_id": 2, "value": 1.0},
-            ]
-        )
-    )
-    drain()
-    (src / "b2.json").write_text(
-        json.dumps({"user_id": 1, "value": 2.5})
-    )
-    drain()
-
-    rows = (
-        spark.read.schema(RUNNING_TOTALS_SCHEMA)
-        .parquet(str(out))
-        .collect()
-    )
-    # append sink accumulates snapshots; the LAST snapshot per user is
-    # the running state. Batch 2 only touched user 1: state carried
-    # 15.0 + 2.5 across micro-batches.
-    snapshots = sorted(
-        (r["user_id"], r["n_events"], r["total_value"]) for r in rows
-    )
-    assert (1, 2, 15.0) in snapshots  # after batch 1
-    assert (1, 3, 17.5) in snapshots  # after batch 2 (state carried)
-    assert (2, 1, 1.0) in snapshots
 
 
 def test_stream_dedup_watermarked(spark, tmp_path):

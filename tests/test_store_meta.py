@@ -185,7 +185,6 @@ def test_lsh_index_store(spark, emb, tmp_path):
 
 def test_pq_index_store(spark, emb, tmp_path):
     from babylon_data_loader_spark.operators.pq import (
-        append_pq_index,
         pq_encode,
         pq_fit,
         read_pq_index,
@@ -195,45 +194,15 @@ def test_pq_index_store(spark, emb, tmp_path):
     books = pq_fit(emb, m=4, ksub=4, n_iters=1)
     path = str(tmp_path / "pq")
     write_pq_index(
-        pq_encode(emb.where("vec_id % 2 = 0"), books).select(
-            "vec_id", "label", "pq_code"
-        ),
+        pq_encode(emb, books).select("vec_id", "label", "pq_code"),
         path,
         books,
     )
     assert_first_read_starts_no_job(spark, lambda: read_pq_index(spark, path))
     assert_declared_read(spark, path, {})
-    append_pq_index(emb.where("vec_id % 2 = 1"), path)
-    assert_declared_read(spark, path, {})
     codes, stored_books = read_pq_index(spark, path)
     assert stored_books == books
     assert codes.count() == emb.count()
-
-
-def test_ivf_index_store(spark, emb, tmp_path):
-    from babylon_data_loader_spark.operators.ivf import (
-        append_ivf_index,
-        ivf_index,
-        kmeans_fit,
-        read_ivf_index,
-        write_ivf_index,
-    )
-
-    centroids = kmeans_fit(emb, k=4, n_iters=1)
-    path = str(tmp_path / "ivf")
-    indexed = ivf_index(emb.where("vec_id % 2 = 0"), centroids)
-    cluster_type = indexed.schema["cluster_id"].dataType
-    write_ivf_index(indexed, path, centroids)
-    assert_first_read_starts_no_job(spark, lambda: read_ivf_index(spark, path))
-    cluster = {"cluster_id": cluster_type}
-    assert_declared_read(spark, path, cluster)
-    append_ivf_index(emb.where("vec_id % 2 = 1"), path)
-    assert_declared_read(spark, path, cluster)
-    compact_index(spark, path, "cluster_id")
-    assert_declared_read(spark, path, cluster)
-    stored, stored_centroids = read_ivf_index(spark, path)
-    assert stored_centroids == centroids
-    assert stored.count() == emb.count()
 
 
 def test_token_window_store(spark, docs, tmp_path):
@@ -331,7 +300,6 @@ STORE_MODULES = (
     "index_store",
     "dedup",
     "pq",
-    "ivf",
     "similarity",
     "decontaminate",
     "rank",

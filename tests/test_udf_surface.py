@@ -1,35 +1,6 @@
-"""UDF/UDAF/UDTF surface + streaming dedup with watermark."""
+"""UDF/UDTF surface + streaming dedup with watermark."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from babylon_data_loader_spark.schemas import load_table
-
-
-def test_udaf_weighted_avg(spark):
-    from babylon_data_loader_spark.functions.udfs import weighted_avg
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    got = {
-        r["l_returnflag"]: r["wavg"]
-        for r in li.groupBy("l_returnflag")
-        .agg(weighted_avg("l_extendedprice", "l_quantity").alias("wavg"))
-        .collect()
-    }
-    # independent computation
-    ref = {
-        r["l_returnflag"]: r["s"] / r["w"]
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("s"),
-            F.sum("l_quantity").alias("w"),
-        )
-        .collect()
-    }
-    assert set(got) == set(ref)
-    for k in got:
-        assert abs(got[k] - ref[k]) < 1e-6
 
 
 def test_udtf_ngrams(spark):
