@@ -32,13 +32,12 @@ def get_transaction_history(
     transaction_type: str,
     start_epoch_s: int,
     end_epoch_s: int,
-    ts_col: str = "ts_us",
 ) -> DataFrame:
     """Q2 time-range scan by type (apiClient.go:305-358): epoch-second
     bounds, inclusive, matching the UtcTimestamp contract."""
     return transactions.filter(
         (F.col("type") == transaction_type)
-        & F.col(ts_col).between(
+        & F.col("ts_us").between(
             start_epoch_s * 1_000_000, end_epoch_s * 1_000_000
         )
     )

@@ -24,11 +24,9 @@ from pyspark.storagelevel import StorageLevel
 _TRACKED: list[DataFrame] = []
 
 
-def persist_tracked(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
+def persist_tracked(df: DataFrame) -> DataFrame:
     """persist() + register for release at the next query boundary."""
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(out)
     return out
 

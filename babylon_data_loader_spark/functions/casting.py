@@ -60,7 +60,7 @@ def required_double(col: Column) -> Column:
     return go_float(col)
 
 
-def optional_double(col: Column, default: float = 0.0) -> Column:
-    """Balance semantics: value when parseable, else the default —
-    row is always kept."""
-    return F.coalesce(go_float(col), F.lit(default))
+def optional_double(col: Column) -> Column:
+    """Balance semantics: value when parseable, else 0.0 — row is
+    always kept."""
+    return F.coalesce(go_float(col), F.lit(0.0))

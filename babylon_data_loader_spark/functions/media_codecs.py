@@ -238,15 +238,13 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
 # -- Y4M (YUV4MPEG2) video ---------------------------------------------------
 
 
-def encode_y4m(
-    frames: np.ndarray, fps_num: int, fps_den: int = 1
-) -> bytes:
+def encode_y4m(frames: np.ndarray, fps_num: int) -> bytes:
     """(n_frames, H, W, 3) uint8 YUV (C444 planar order per frame) →
     YUV4MPEG2 bytes. The simplest real video container: a text header
     then `FRAME\\n` + raw planes per frame — no entropy coding, which
     is exactly why it is decodable from first principles here."""
     n, h, w, _ = frames.shape
-    header = f"YUV4MPEG2 W{w} H{h} F{fps_num}:{fps_den} Ip A1:1 C444\n"
+    header = f"YUV4MPEG2 W{w} H{h} F{fps_num}:1 Ip A1:1 C444\n"
     out = [header.encode("ascii")]
     for f in range(n):
         out.append(b"FRAME\n")

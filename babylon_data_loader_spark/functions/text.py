@@ -59,9 +59,9 @@ def minhash_band(sh: Column, seed: int) -> Column:
     return F.array_min(hashed)
 
 
-def stopword_hits(tok: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    """Count of tokens that are stopwords (not distinct)."""
-    return F.size(F.filter(tok, lambda t: t.isin(*stopwords)))
+def stopword_hits(tok: Column) -> Column:
+    """Count of tokens that are English stopwords (not distinct)."""
+    return F.size(F.filter(tok, lambda t: t.isin(*STOPWORDS_EN)))
 
 
 def hex_char_parity(col_name: str, pos: int) -> Column:

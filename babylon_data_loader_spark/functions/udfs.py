@@ -14,9 +14,17 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf, udtf
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 
-@udtf(returnType="pos: int, gram: string")
+# Module-level UDF return types are DataTypes, not DDL strings: the
+# decorators parse DDL through the JVM, so the module would need an
+# active session to import.
+@udtf(
+    returnType=StructType(
+        [StructField("pos", IntegerType()), StructField("gram", StringType())]
+    )
+)
 class NGrams:
     """UDTF: emit word n-grams of a text with positions.
 
@@ -76,7 +84,7 @@ def robust_zscore(df, key_col: str = "user_id", value_col: str = "value"):
     return out.withColumn("z", F.round("z", 9))
 
 
-@pandas_udf("string")
+@pandas_udf(StringType())
 def nfc_casefold(s: pd.Series) -> pd.Series:
     """Unicode NFC + casefold + whitespace collapse — the
     normalization pass a corpus runs BEFORE dedup (CCNet/Dolma

@@ -53,7 +53,7 @@ STATUS_SCHEMA = StructType(
 )
 
 
-@dataclass
+@dataclass(init=False)
 class IngestResult:
     """Run stats (reference Stats, datalake/stats.go:9-14).
 
@@ -65,7 +65,8 @@ class IngestResult:
     the hot path, and a 10⁸-file backfill's audit trail lives where
     audit data belongs, in a queryable table (reference
     Stats.Failures, datalake/stats.go:13, persisted instead of
-    in-process)."""
+    in-process). ``IngestResult()`` is an empty result; ``ingest()``
+    sets the fields as the run counts them."""
 
     total_files: int = 0
     processed_files: int = 0
@@ -76,25 +77,6 @@ class IngestResult:
     _status_spark: SparkSession | None = field(default=None, repr=False)
     _status_path: str | None = field(default=None, repr=False)
     _run_id: str | None = field(default=None, repr=False)
-
-    def __init__(
-        self,
-        total_files: int = 0,
-        processed_files: int = 0,
-        failed_files: int = 0,
-        skipped_entries: int = 0,
-        records_uploaded: int = 0,
-        failures: dict[str, str] | None = None,
-    ) -> None:
-        self.total_files = total_files
-        self.processed_files = processed_files
-        self.failed_files = failed_files
-        self.skipped_entries = skipped_entries
-        self.records_uploaded = records_uploaded
-        self._failures = failures if failures is not None else {}
-        self._status_spark = None
-        self._status_path = None
-        self._run_id = None
 
     def _bind_status(
         self, spark: SparkSession, path: str, run_id: str

@@ -325,14 +325,12 @@ VIDEO_FEATURES_SCHEMA = StructType(
 )
 
 
-def extract_video_features(
-    media: DataFrame, sample_frames: int = 3
-) -> DataFrame:
+def extract_video_features(media: DataFrame) -> DataFrame:
     """BINARY column → video feature rows (real Y4M container parse).
 
     Container metadata (dims / frame count / duration) is O(1) header
     arithmetic per payload — no pixel decode; `mean_y` comes from
-    FRAME-SAMPLING: up to `sample_frames` frames (first / evenly
+    FRAME-SAMPLING: up to 3 frames (first / evenly
     spaced / last) are random-access decoded, never the whole clip.
     That is the shape a 100 TB video table needs: metadata pass cheap,
     pixel pass bounded per row regardless of clip length.
@@ -354,7 +352,7 @@ def extract_video_features(
                 data = bytes(payload) if payload is not None else b""
                 info = y4m_info(data)
                 n = info["n_frames"]
-                k = min(sample_frames, n)
+                k = min(3, n)
                 idxs = sorted(
                     {int(round(j * (n - 1) / max(k - 1, 1))) for j in range(k)}
                 )

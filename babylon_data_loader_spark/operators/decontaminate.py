@@ -17,7 +17,7 @@ family's width discipline; per-doc ``distinct`` bounds join fan-out at
 the map side. Eval sets are benchmark-scale, not corpus-scale, so the
 eval gram set BROADCASTS — but the hint is guarded by Catalyst's
 plan-size statistics (no job at plan-construction time): past the
-``broadcast_max_rows`` size budget, or when the input carries no
+``BROADCAST_MAX_ROWS`` size budget, or when the input carries no
 statistics, the probe is left unhinted and AQE's runtime
 auto-broadcast decides from the actual size — degrading to a plain
 hash-partitioned join on the gram hash (both sides shuffle by ``h`` —
@@ -38,9 +38,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: the documents' id and text columns the contamination report reads
+DOC_ID_COL = "doc_id"
+DOC_TEXT_COL = "text"
+
 #: internal working columns — double-underscore-prefixed so a caller
-#: frame with ordinary column names can never collide (this is a
-#: public operator API taking caller-supplied column names).
+#: frame with ordinary column names can never collide.
 _TOK = "__decon_tok"
 _EVAL_H = "__decon_eh"
 _IS_EVAL = "__decon_is_eval"
@@ -119,57 +122,39 @@ def gram_hashes(
     n: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, *carry_cols, h): md5 of every stride-1 n-token window of
+    """(id, h): md5 of every stride-1 n-token window of
     the normalized text (``tokens(lower(text))`` — trim, lowercase,
     ``\\s+`` split), with the substring-family whole-doc fallback for
     sub-n-token documents (a short doc is one span, not zero) — the
     gram convention is functions/text.py::shingles, the ONE place the
     family's window/fallback semantics live. Duplicated grams within
     a doc are kept — callers that need set semantics apply
-    ``distinct`` themselves. ``carry_cols`` ride the explode so
-    consumers never pay an id-keyed join to recover doc-level
-    attributes. Raises if a caller column collides with the output
-    gram column ``h`` or an internal working name. Tokenizes inline —
-    the right shape for batch-scale frames (an arriving batch is
-    gram-hashed in flight); corpus-scale consumers go through
+    ``distinct`` themselves. Raises if a caller column collides with
+    the output gram column ``h`` or an internal working name.
+    Tokenizes inline — the right shape for batch-scale frames (an
+    arriving batch is gram-hashed in flight); corpus-scale consumers go through
     :func:`gram_hashes_from_tokens` over the at-rest token store."""
     from babylon_data_loader_spark.functions.text import tokens
 
-    _check_free({id_col, *carry_cols}, "h", _TOK)
-    toks = docs.select(
-        id_col,
-        *carry_cols,
-        tokens(F.lower(F.col(text_col))).alias(_TOK),
-    )
-    return gram_hashes_from_tokens(
-        toks, n=n, id_col=id_col, tok_col=_TOK, carry_cols=carry_cols
-    )
+    _check_free({id_col}, "h", _TOK)
+    toks = docs.select(id_col, tokens(F.lower(F.col(text_col))).alias(_TOK))
+    return gram_hashes_from_tokens(toks, n=n, id_col=id_col, tok_col=_TOK)
 
 
-def write_gram_index(
-    docs: DataFrame,
-    path: str,
-    n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
+def write_gram_index(docs: DataFrame, path: str) -> None:
     """Persist the DISTINCT n-gram hash set of ``docs`` at an
     explicit path — the MAINTAINED (write/append) twin of the
     fingerprint-keyed ``evalgrams`` store: a growing benchmark suite
     appends each newly-registered eval shard's grams instead of
     re-hashing the whole suite (the append_token_windows lifecycle,
-    applied to the decontamination gate's probe side). Meta records
-    (n, cols) so appends hash identically."""
+    applied to the decontamination gate's probe side). 4-token grams
+    of ``doc_id``/``text``; the meta records (n, cols) so appends hash
+    identically."""
     from babylon_data_loader_spark.operators.index_store import write_store
 
-    grams = (
-        gram_hashes(docs, n=n, id_col=id_col, text_col=text_col)
-        .select("h")
-        .distinct()
-    )
-    write_store(grams, path, n=n, id_col=id_col, text_col=text_col)
+    grams = gram_hashes(docs).select("h").distinct()
+    write_store(grams, path, n=4, id_col="doc_id", text_col="text")
 
 
 def append_gram_index(new_docs: DataFrame, path: str) -> None:
@@ -210,10 +195,7 @@ def read_gram_index(spark, path: str) -> tuple[DataFrame, dict]:
 
 
 def contamination_census(
-    train_grams: DataFrame,
-    eval_hashes: DataFrame,
-    id_col: str = "doc_id",
-    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
+    train_grams: DataFrame, eval_hashes: DataFrame
 ) -> DataFrame:
     """The census join both report shapes share: DISTINCT training
     (id, h) grams left-joined against the DISTINCT eval hash set
@@ -222,22 +204,24 @@ def contamination_census(
     ordered by id. The broadcast guard is PLAN-STATISTICS based — no
     Spark job runs at construction time (bare library callers build
     the frame for free; r12 ADVICE): when Catalyst's file-stats size
-    estimate says the eval side fits ``broadcast_max_rows`` gram
+    estimate says the eval side fits ``BROADCAST_MAX_ROWS`` gram
     rows, the probe is hinted broadcast; when it does not — or the
     input has no statistics (in-flight shuffled frames) — the join is
     left unhinted and AQE's runtime auto-broadcast conversion picks
     the strategy from the eval side's ACTUAL size, which is strictly
     better information than an eager count. Same rows out either way
     (pinned by a test), different shuffle economics. Nothing is
-    persisted: the eval side is probed exactly once."""
+    persisted: the eval side is probed exactly once. Training grams
+    are keyed by ``DOC_ID_COL``."""
+    id_col = DOC_ID_COL
     train = train_grams.select(id_col, "h").distinct()
     eval_g = eval_hashes.select("h").distinct()
     probe = eval_g.withColumnRenamed("h", _EVAL_H)
     est = _plan_size_estimate(eval_g)
     if (
-        broadcast_max_rows > 0
+        BROADCAST_MAX_ROWS > 0
         and est is not None
-        and est <= broadcast_max_rows * _EST_GRAM_ROW_BYTES
+        and est <= BROADCAST_MAX_ROWS * _EST_GRAM_ROW_BYTES
     ):
         probe = F.broadcast(probe)
     hit = F.when(F.col(_EVAL_H).isNotNull(), F.lit(1)).otherwise(
@@ -262,24 +246,23 @@ def contamination_report(
     docs: DataFrame,
     eval_pred: Column,
     n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Per-TRAINING-doc contamination census against the eval slice
     selected by ``eval_pred`` (a boolean Column over ``docs``'s
     columns): distinct grams in the doc, distinct grams shared with
     the eval set, and the shared ratio — only contaminated docs
-    (n_eval_grams > 0) are emitted, ordered by id. The report is what
-    a curation pipeline acts on: drop the doc, or strip the spans.
+    (n_eval_grams > 0) are emitted, ordered by id. Documents are
+    keyed by ``DOC_ID_COL`` and carry their text in ``DOC_TEXT_COL``.
+    The report is what a curation pipeline acts on: drop the doc, or
+    strip the spans.
 
     Tokenization rides the shared at-rest normalized-token store
     (index_store.stored_norm_tokens): the corpus's regex pass runs
     once per dataset version, and each report run derives grams from
     the (id, tok) store scan — not a fresh full-text tokenization
     (r12 VERDICT ask #2). When ``eval_pred`` references only
-    ``id_col`` (the common deterministic-slice case) it is evaluated
-    DIRECTLY on the store frame — zero joins; a predicate over other
+    the id column (the common deterministic-slice case) it is
+    evaluated DIRECTLY on the store frame — zero joins; a predicate over other
     doc columns costs one id-keyed join with a TEXT-FREE pruned scan
     of ``docs`` for the eval flag. Frames with no file lineage fall
     back to inline tokenization inside the store helper.
@@ -304,8 +287,9 @@ def contamination_report(
         stored_norm_tokens,
     )
 
+    id_col = DOC_ID_COL
     _check_free(set(docs.columns), _IS_EVAL, _TOK)
-    toks = stored_norm_tokens(docs, text_col=text_col, id_col=id_col)
+    toks = stored_norm_tokens(docs, text_col=DOC_TEXT_COL, id_col=id_col)
     refs = referenced_columns(eval_pred)
     if refs is not None and {r.lower() for r in refs} <= {
         id_col.lower()
@@ -326,8 +310,5 @@ def contamination_report(
         carry_cols=(_IS_EVAL,),
     )
     return contamination_census(
-        grams.where(~F.col(_IS_EVAL)),
-        grams.where(F.col(_IS_EVAL)),
-        id_col=id_col,
-        broadcast_max_rows=broadcast_max_rows,
+        grams.where(~F.col(_IS_EVAL)), grams.where(F.col(_IS_EVAL))
     )

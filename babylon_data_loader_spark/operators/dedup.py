@@ -46,12 +46,11 @@ def _norm_tok(
     ).select(id_col, F.col("tok").alias(alias))
 
 
-def stored_doc_fingerprints(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id_col, _fp) exact-dup fingerprint table through the at-rest
-    store: the md5-over-normalized-text scan — the expensive part of
-    every exact-dedup consumer — runs once per dataset version
+def stored_doc_fingerprints(docs: DataFrame) -> DataFrame:
+    """(doc_id, _fp) exact-dup fingerprint table of the ``text``
+    column through the at-rest store: the md5-over-normalized-text
+    scan — the expensive part of every exact-dedup consumer — runs
+    once per dataset version
     (r15; the stored_minhash_signatures economics applied one level
     down). Params fold the derivation columns (the r14 store-keying
     discipline); no-lineage frames fall back to the inline
@@ -63,18 +62,16 @@ def stored_doc_fingerprints(
     return get_or_build_parquet(
         docs,
         "doc_fp",
-        f"i_{id_col}_t_{text_col}",
+        "i_doc_id_t_text",
         lambda: docs.select(
-            F.col(id_col), fingerprint(F.col(text_col)).alias("_fp")
+            F.col("doc_id"), fingerprint(F.col("text")).alias("_fp")
         ),
     )
 
 
-def dedup_exact_ids(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The kept ids of exact dedup (min id per normalized-text
-    fingerprint), id-width. Callers that only need
+def dedup_exact_ids(docs: DataFrame) -> DataFrame:
+    """The kept ``doc_id``s of exact dedup (min id per normalized
+    ``text`` fingerprint), id-width. Callers that only need
     the survivor id SET (to semi-join several consumers) should use
     this and persist it once instead of re-deriving the full
     fingerprint aggregate per consumer — the md5-over-text scan is
@@ -82,16 +79,14 @@ def dedup_exact_ids(
     payloads); r15 moves that scan behind the at-rest fingerprint
     store, so a warm run shuffles a stored 16-byte key table."""
     return (
-        stored_doc_fingerprints(docs, text_col, id_col)
+        stored_doc_fingerprints(docs)
         .groupBy("_fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
     )
 
 
-def stored_exact_survivor_ids(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def stored_exact_survivor_ids(docs: DataFrame) -> DataFrame:
     """:func:`dedup_exact_ids` through the at-rest store: the survivor
     ID SET (min id per normalized-text fingerprint) is a pure function
     of the corpus version, so consumers that only PROBE the set
@@ -107,20 +102,18 @@ def stored_exact_survivor_ids(
     return get_or_build_parquet(
         docs,
         "xsurv_ids",
-        f"i_{id_col}_t_{text_col}",
-        lambda: dedup_exact_ids(docs, text_col, id_col),
+        "i_doc_id_t_text",
+        lambda: dedup_exact_ids(docs),
     )
 
 
 def minhash_signatures(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bands: int = 4,
-    shingle_k: int = 3,
     tok_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, b0..b{n-1}) deterministic MinHash signature table.
+    """(doc_id, b0..b{n-1}) deterministic MinHash signature table of
+    the ``text`` column's 3-token shingles.
 
     Shingles come from lower-cased text: near-dup detection should not
     distinguish case (exact dedup already normalizes).
@@ -131,7 +124,7 @@ def minhash_signatures(
     full regex splits PER SHINGLE per band — a measured 50×
     slowdown); CollapseProject keeps multiply-referenced non-cheap
     aliases in their own stage, so this shape evaluates each step
-    once per row. ``tok_df`` (an (id_col, _tok) frame) substitutes a
+    once per row. ``tok_df`` (a (doc_id, _tok) frame) substitutes a
     pre-tokenized source — the stored builder passes the shared
     at-rest token store here; bare calls tokenize inline (the right
     shape for batch slices and streaming frames)."""
@@ -139,12 +132,12 @@ def minhash_signatures(
         tok_df
         if tok_df is not None
         else docs.select(
-            id_col, tokens(F.lower(F.col(text_col))).alias("_tok")
+            "doc_id", tokens(F.lower(F.col("text"))).alias("_tok")
         )
     )
-    sh = tok.select(id_col, shingles(F.col("_tok"), shingle_k).alias("_sh"))
+    sh = tok.select("doc_id", shingles(F.col("_tok"), 3).alias("_sh"))
     return sh.select(
-        id_col,
+        "doc_id",
         *[
             minhash_band(F.col("_sh"), i).alias(f"b{i}")
             for i in range(n_bands)
@@ -152,14 +145,9 @@ def minhash_signatures(
     )
 
 
-def stored_minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """:func:`minhash_signatures` through the at-rest store
+def stored_minhash_signatures(docs: DataFrame, n_bands: int = 4) -> DataFrame:
+    """:func:`minhash_signatures` (3-token shingles of ``doc_id``'s
+    ``text``) through the at-rest store
     (operators/index_store.py): the md5 shingle pipeline runs ONCE per
     dataset version and every consumer — band listing, near-dup pairs,
     cluster dedup, the composed curation pipeline — reads the same
@@ -177,51 +165,39 @@ def stored_minhash_signatures(
     return get_or_build_parquet(
         docs,
         "mh_sigs",
-        f"b{n_bands}s{shingle_k}",
+        f"b{n_bands}s3",
         lambda: minhash_signatures(
             docs,
-            text_col,
-            id_col,
-            n_bands,
-            shingle_k,
-            tok_df=_norm_tok(docs, text_col, id_col, "_tok"),
+            n_bands=n_bands,
+            tok_df=_norm_tok(docs, "text", "doc_id", "_tok"),
         ),
     )
 
 
 def doc_shingles(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-    tok_df: DataFrame | None = None,
+    docs: DataFrame, tok_df: DataFrame | None = None
 ) -> DataFrame:
-    """(_id, _sh) DISTINCT exploded shingle table — the set
-    representation :func:`jaccard_verify` joins on. ``tok_df``
-    substitutes a pre-tokenized (id_col, _tok) source (the stored
-    builder passes the shared token store)."""
+    """(_id, _sh) DISTINCT exploded 3-token shingle table of
+    (doc_id, text) rows — the set representation
+    :func:`jaccard_verify` joins on. ``tok_df`` substitutes a
+    pre-tokenized (doc_id, _tok) source (the stored builder passes the
+    shared token store)."""
     tok = (
         tok_df
         if tok_df is not None
         else docs.select(
-            id_col, tokens(F.lower(F.col(text_col))).alias("_tok")
+            "doc_id", tokens(F.lower(F.col("text"))).alias("_tok")
         )
-    ).select(F.col(id_col).alias("_id"), "_tok")
+    ).select(F.col("doc_id").alias("_id"), "_tok")
     return tok.select(
         "_id",
-        F.explode(
-            F.array_distinct(shingles(F.col("_tok"), shingle_k))
-        ).alias("_sh"),
+        F.explode(F.array_distinct(shingles(F.col("_tok"), 3))).alias("_sh"),
     )
 
 
-def stored_doc_shingles(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """:func:`doc_shingles` through the at-rest store — tokenization
+def stored_doc_shingles(docs: DataFrame) -> DataFrame:
+    """:func:`doc_shingles` (3-token shingles of ``doc_id``'s ``text``)
+    through the at-rest store — tokenization
     and shingling run once per dataset version; Jaccard verification
     becomes joins against a parquet read. The build derives from the
     shared at-rest normalized-token store.
@@ -243,11 +219,7 @@ def stored_doc_shingles(
 
     def _build() -> DataFrame:
         base = doc_shingles(
-            docs,
-            text_col,
-            id_col,
-            shingle_k,
-            tok_df=_norm_tok(docs, text_col, id_col, "_tok"),
+            docs, tok_df=_norm_tok(docs, "text", "doc_id", "_tok")
         )
         dfreq = base.groupBy("_sh").agg(
             F.count(F.lit(1)).alias("_df")
@@ -257,7 +229,7 @@ def stored_doc_shingles(
     return get_or_build_parquet(
         docs,
         "mh_shingles",
-        f"s{shingle_k}v2",  # v2 = +_df derivation column
+        "s3v2",  # v2 = +_df derivation column
         _build,
     )
 
@@ -327,14 +299,10 @@ def token_windows(
     )
 
 
-def stored_token_windows(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-) -> DataFrame:
-    """:func:`token_windows` through the at-rest store — the window
-    hashing runs once per dataset version; the substring-dedup family
+def stored_token_windows(docs: DataFrame) -> DataFrame:
+    """:func:`token_windows` (16-token windows of ``doc_id``/``text``)
+    through the at-rest store — the window hashing runs once per
+    dataset version; the substring-dedup family
     (rates, per-doc spans, provenance breadth) reads the parquet."""
     from babylon_data_loader_spark.operators.index_store import (
         get_or_build_parquet,
@@ -344,22 +312,14 @@ def stored_token_windows(
         docs,
         "tokwin",
         # p1 = positioned layout (the pos-less k16 layout predates it)
-        f"k{k}p1",
+        "k16p1",
         lambda: token_windows(
-            docs,
-            text_col,
-            id_col,
-            k,
-            tok_df=_norm_tok(docs, text_col, id_col, "_t"),
+            docs, tok_df=_norm_tok(docs, "text", "doc_id", "_t")
         ),
     )
 
 
-def doc_terms(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_terms(docs: DataFrame) -> DataFrame:
     """(doc_id, term) DISTINCT lower-cased unigram table — the
     inverted-index set representation lexical-overlap scorers join
     on (k=1 analogue of :func:`doc_shingles`). Tokenizes inline: its
@@ -367,8 +327,7 @@ def doc_terms(
     a store roundtrip would cost more than the regex."""
     return (
         docs.select(
-            id_col,
-            F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+            "doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("term")
         )
         .distinct()
     )
@@ -431,17 +390,11 @@ def verified_pairs_params(
     )
 
 
-def stored_verified_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    n_bands: int = 4,
-    shingle_k: int = 3,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """The VERIFIED near-duplicate pair set (doc_a, doc_b, jaccard)
-    through the at-rest store: LSH candidate generation + exact
+def stored_verified_pairs(docs: DataFrame) -> DataFrame:
+    """The VERIFIED near-duplicate pair set (doc_a, doc_b, jaccard) of
+    (doc_id, text) rows — MinHash LSH over 3-token shingles in 4 bands,
+    buckets of more than 1000 ids dropped, Jaccard ≥ 0.5 — through the
+    at-rest store: LSH candidate generation + exact
     Jaccard verification run ONCE per dataset version, and every
     composition query — clusters, duplication-aware loss weights,
     split leakage, per-source dup rates — reads the same parquet
@@ -454,48 +407,23 @@ def stored_verified_pairs(
     )
 
     def build() -> DataFrame:
-        sig = stored_minhash_signatures(
-            docs, text_col, id_col, n_bands, shingle_k
-        )
-        cand = lsh_candidate_pairs(
-            sig,
-            id_col=id_col,
-            n_bands=n_bands,
-            max_bucket_size=max_bucket_size,
-        )
+        cand = lsh_candidate_pairs(stored_minhash_signatures(docs))
         return jaccard_verify(
             docs,
             cand,
-            text_col,
-            id_col,
-            threshold,
-            shingle_k,
-            shingles_df=stored_doc_shingles(
-                docs, text_col, id_col, shingle_k
-            ),
+            threshold=0.5,
+            shingles_df=stored_doc_shingles(docs),
         )
 
     return get_or_build_parquet(
-        docs,
-        "mh_pairs",
-        verified_pairs_params(
-            threshold, n_bands, shingle_k, max_bucket_size
-        ),
-        build,
+        docs, "mh_pairs", verified_pairs_params(0.5, 4, 3, 1000), build
     )
 
 
-def stored_doc_components(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    n_bands: int = 4,
-    shingle_k: int = 3,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """(id, component) connected-component labels of the verified
-    near-dup graph through the at-rest store (r16): the min-label
+def stored_doc_components(docs: DataFrame) -> DataFrame:
+    """(doc_id, component) connected-component labels of the verified
+    near-dup graph (the default :func:`stored_verified_pairs`) through
+    the at-rest store (r16): the min-label
     propagation over :func:`stored_verified_pairs` is a pure function
     of the corpus version (component = min reachable id — a unique
     value, so the stored and inline labels are bit-identical), yet
@@ -514,19 +442,10 @@ def stored_doc_components(
     )
 
     def build() -> DataFrame:
-        pairs = stored_verified_pairs(
-            docs,
-            text_col,
-            id_col,
-            threshold,
-            n_bands,
-            shingle_k,
-            max_bucket_size,
-        )
         return connected_components(
-            docs.select(id_col),
-            pairs.select("doc_a", "doc_b"),
-            id_col=id_col,
+            docs.select("doc_id"),
+            stored_verified_pairs(docs).select("doc_a", "doc_b"),
+            id_col="doc_id",
             src_col="doc_a",
             dst_col="doc_b",
         )
@@ -534,10 +453,7 @@ def stored_doc_components(
     return get_or_build_parquet(
         docs,
         "mh_comp",
-        verified_pairs_params(
-            threshold, n_bands, shingle_k, max_bucket_size
-        )
-        + f"_{id_col}",
+        verified_pairs_params(0.5, 4, 3, 1000) + "_doc_id",
         build,
     )
 
@@ -545,13 +461,11 @@ def stored_doc_components(
 def jaccard_verify(
     docs: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.8,
-    shingle_k: int = 3,
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs; keeps pairs ≥ threshold.
+    """Exact 3-token-shingle Jaccard of (doc_id, text) rows on
+    candidate pairs; keeps pairs ≥ threshold.
 
     Set-based: explode distinct shingles, join twice, |A∩B| / (|A|+|B|−|A∩B|).
     Pass `shingles_df` (a :func:`doc_shingles` / :func:`stored_doc_shingles`
@@ -561,7 +475,7 @@ def jaccard_verify(
     sh = (
         shingles_df
         if shingles_df is not None
-        else doc_shingles(docs, text_col, id_col, shingle_k)
+        else doc_shingles(docs)
     )
     sizes = sh.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
     inter = (
@@ -602,47 +516,40 @@ def jaccard_verify(
 # ---------------------------------------------------------------------------
 
 
-def write_token_window_store(
-    docs: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    prefix_chars: int = 1,
-) -> None:
-    """Persist :func:`token_windows` hive-partitioned by the first
-    ``prefix_chars`` hex chars of the window hash (`hp`). Dup-hash
-    probes then prune to 1/16^prefix_chars of the files (the bench
+#: hex chars of the window hash a caller-owned token-window store is
+#: partitioned by (`hp`): 1 char is 16 dirs; at 100 TB use 2-3
+#: (256-4096 dirs — SCALING.md round-10 notes)
+TOKWIN_PREFIX_CHARS = 1
+
+
+def write_token_window_store(docs: DataFrame, path: str) -> None:
+    """Persist :func:`token_windows` (16-token windows of
+    ``doc_id``/``text``) hive-partitioned by the first
+    ``TOKWIN_PREFIX_CHARS`` hex chars of the window hash (`hp`).
+    Dup-hash probes then prune to 1/16^prefix_chars of the files (the bench
     `tokwin_layout` supplement measures the ratio); full-scan
     consumers union the partition dirs at no extra cost. One
     build-time shuffle on hp so each prefix lives in one task's
     files, not #tasks x #prefixes fragments (the write_lsh_index
     discipline). Meta records (k, prefix_chars, cols) so appends hash
-    and partition identically. Locally 1 char (16 dirs); at 100 TB
-    use 2-3 (256-4096 dirs — SCALING.md round-10 notes; the bench
-    `tokwin_layout` supplement measures BOTH widths). Meta I/O is
+    and partition identically (the bench `tokwin_layout` supplement
+    measures both prefix widths). Meta I/O is
     scheme-aware (index_store.read/write_meta_text), so the store
     works on hdfs://-style paths, not just the local filesystem."""
     from babylon_data_loader_spark.operators.index_store import write_store
 
     # corpus-scale write-once build: derive from the shared at-rest
     # token store (one regex pass per dataset version, r12 ask #2)
-    win = token_windows(
-        docs,
-        text_col,
-        id_col,
-        k,
-        tok_df=_norm_tok(docs, text_col, id_col, "_t"),
-    )
+    win = token_windows(docs, tok_df=_norm_tok(docs, "text", "doc_id", "_t"))
     write_store(
-        win.withColumn("hp", F.substring("_h", 1, prefix_chars))
+        win.withColumn("hp", F.substring("_h", 1, TOKWIN_PREFIX_CHARS))
         .repartition(F.col("hp")),
         path,
         ("hp",),
-        k=k,
-        prefix_chars=prefix_chars,
-        text_col=text_col,
-        id_col=id_col,
+        k=16,
+        prefix_chars=TOKWIN_PREFIX_CHARS,
+        text_col="text",
+        id_col="doc_id",
     )
 
 

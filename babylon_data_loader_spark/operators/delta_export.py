@@ -3,7 +3,7 @@
 The tx lake (operators/tx_lake.py) is a faithful homegrown Delta
 analog — atomic manifest swap, time travel, CDF, vacuum — but its
 manifest format is private. This module emits the EQUIVALENT Delta
-Lake transaction log for any committed version, so external engines
+Lake transaction log for the current version, so external engines
 that speak the open Delta protocol (Spark+delta-rs, DuckDB `delta`,
 Trino, Polars) can read the lake's current state without copying a
 byte of data: `add` actions use absolute file URIs into the lake's
@@ -19,7 +19,7 @@ Log layout written under `<out_path>/_delta_log/`:
 
 Only the actions a static snapshot needs are emitted (protocol v1
 reader: no deletion vectors, no column mapping); each export is a
-fresh single-commit table describing one lake version.
+fresh single-commit table describing the lake's current version.
 """
 
 from __future__ import annotations
@@ -32,14 +32,9 @@ from urllib.parse import quote
 from pyspark.sql import DataFrame, SparkSession
 
 
-def _live_files(lake, version: int | None) -> list[tuple[str, str, str]]:
+def _live_files(manifest: dict, lake) -> list[tuple[str, str, str]]:
     """[(abs_file_path, partition_subdir, partition_value)] for every
-    live parquet file of the given lake version."""
-    manifest = (
-        lake.current_manifest()
-        if version is None
-        else lake.manifest_at(version)
-    )
+    live parquet file of ``lake`` at ``manifest``."""
     out = []
     for subdir, dirs in sorted(manifest["partitions"].items()):
         pval = lake._subdir_value(subdir)
@@ -58,14 +53,9 @@ def _live_files(lake, version: int | None) -> list[tuple[str, str, str]]:
     return out
 
 
-def export_delta_log(
-    spark: SparkSession,
-    lake,
-    out_path: str,
-    version: int | None = None,
-) -> dict:
-    """Write a Delta transaction log describing `lake`'s state at
-    `version` (default: current) under `out_path/_delta_log/`.
+def export_delta_log(spark: SparkSession, lake, out_path: str) -> dict:
+    """Write a Delta transaction log describing `lake`'s current state
+    under `out_path/_delta_log/`.
 
     Data files are NOT copied — `add.path` entries are absolute
     `file:` URIs into the lake's immutable version dirs (allowed by
@@ -73,10 +63,8 @@ def export_delta_log(
     the referenced files outlive the export). Returns a summary dict
     {version, n_files, n_bytes, log_path}. O(live files) driver work:
     one os.stat per file, no data read."""
-    files = _live_files(lake, version)
-    manifest_version = (
-        lake.current_manifest()["version"] if version is None else version
-    )
+    manifest = lake.current_manifest()
+    files = _live_files(manifest, lake)
     # Schema comes from one representative file via Spark (column
     # pruning means this reads footer metadata only), plus the
     # partition column the directory layout encodes.
@@ -149,7 +137,7 @@ def export_delta_log(
                 + "\n"
             )
     return {
-        "version": manifest_version,
+        "version": manifest["version"],
         "n_files": len(files),
         "n_bytes": n_bytes,
         "log_path": commit,

@@ -174,10 +174,8 @@ def det_signature_store(
     emb: DataFrame,
     tag: str,
     planes: list[list[int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """The at-rest (id, bucket) sign-LSH signature table for ``emb``,
+    """The at-rest (vec_id, bucket) sign-LSH signature table for ``emb``,
     BUCKET-PARTITIONED on disk so a Hamming-ball probe
     (``.where(bucket.isin(ball))``) is a partition-pruned read — at
     100 TB the probe lists ~|ball| directories instead of scanning
@@ -190,10 +188,10 @@ def det_signature_store(
 
     def _build() -> DataFrame:
         return emb.select(
-            id_col,
-            sign_bucket(
-                quantize_vec(F.col(vec_col)), planes
-            ).alias("bucket"),
+            "vec_id",
+            sign_bucket(quantize_vec(F.col("embedding")), planes).alias(
+                "bucket"
+            ),
         )
 
     return get_or_build_parquet(
@@ -377,13 +375,11 @@ def det_assigned_store(
     emb: DataFrame,
     tag: str,
     codebook: list[tuple[int, list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """The at-rest IVF-Flat index: every vector stored WITH its
     quantization and nearest-centroid assignment,
-    (id, *extra_cols, vec, q, cid, dist), PARTITIONED BY cid — a
+    (vec_id, *extra_cols, embedding, q, cid, dist), PARTITIONED BY cid — a
     probe of ``nprobe`` lists is a partition-pruned read of
     nprobe/k-ths of the table, and no consumer re-pays the
     quantize + k·dim assignment fold (the fold's giant expression
@@ -401,25 +397,24 @@ def det_assigned_store(
 
     # The digest folds in the DERIVATION columns, not just the
     # codebook: two callers sharing a tag but deriving from different
-    # id/vec/extra columns must get distinct stores — the silent-
-    # aliasing class the r13 advisor flagged on stored_norm_tokens
-    # (a different id_col fails noisily on select; a different
-    # vec_col would be silent wrong data). Old-format dirs become
-    # dead-data when the driver regenerates the tables and are swept
-    # then.
+    # extra columns must get distinct stores — the silent-aliasing
+    # class the r13 advisor flagged on stored_norm_tokens. The fixed
+    # id/vec column names stay in it so the key is unchanged.
+    # Old-format dirs become dead-data when the driver regenerates
+    # the tables and are swept then.
     key = hashlib.md5(
         json.dumps(
-            [codebook, id_col, vec_col, list(extra_cols)],
+            [codebook, "vec_id", "embedding", list(extra_cols)],
             separators=(",", ":"),
         ).encode()
     ).hexdigest()[:10]
 
     def _build() -> DataFrame:
         qdf = emb.select(
-            id_col,
+            "vec_id",
             *extra_cols,
-            vec_col,
-            quantize_vec(F.col(vec_col)).alias("q"),
+            "embedding",
+            quantize_vec(F.col("embedding")).alias("q"),
         )
         return int_assign(qdf, "q", codebook)
 
@@ -438,8 +433,6 @@ def int_lloyd_trajectory_store(
     k: int,
     n_iters: int,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """The TRAINED integer-Lloyd model as a tiny at-rest table: one
     row per iteration with (iter, inertia, n_shifted, codebook),
@@ -475,14 +468,12 @@ def int_lloyd_trajectory_store(
 
         spark = emb.sparkSession
         qdf = persist_tracked(
-            emb.select(
-                id_col, quantize_vec(F.col(vec_col)).alias("q")
-            )
+            emb.select("vec_id", quantize_vec(F.col("embedding")).alias("q"))
         )
         codebooks = [
             sorted(
-                (int(r[id_col]), [int(x) for x in r["q"]])
-                for r in qdf.where(F.col(id_col) < k).collect()
+                (int(r["vec_id"]), [int(x) for x in r["q"]])
+                for r in qdf.where(F.col("vec_id") < k).collect()
             )
         ]
         dim_sums = [
@@ -576,12 +567,12 @@ def int_lloyd_trajectory_store(
 
     # Params carry the full derivation spec (dim and the source
     # columns, not just k/iters): same aliasing discipline as
-    # det_assigned_store — a shared tag must never serve a model
-    # trained over different columns or a different dimensionality.
+    # det_assigned_store — a shared tag must never serve a model of a
+    # different dimensionality.
     return get_or_build_parquet(
         emb,
         "detlloyd",
-        f"{tag}_k{k}i{n_iters}d{dim}_{id_col}_{vec_col}",
+        f"{tag}_k{k}i{n_iters}d{dim}_vec_id_embedding",
         _build,
     )
 

@@ -39,12 +39,12 @@ def connected_components(
     id_col: str = "id",
     src_col: str = "src",
     dst_col: str = "dst",
-    max_iterations: int = 25,
 ) -> DataFrame:
     """(id, component) — component = min node id reachable via edges.
 
     `nodes` lists every vertex (isolated ones keep their own id);
-    `edges` is undirected (each pair listed once is enough).
+    `edges` is undirected (each pair listed once is enough). Label
+    propagation stops at convergence or after 25 iterations.
     """
     sym = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
@@ -62,7 +62,7 @@ def connected_components(
     comp_type = dict(labels.dtypes)["component"]
     persisted = labels  # the cached frame backing `labels`
     try:
-        for _ in range(max_iterations):
+        for _ in range(25):
             # neighbor-label candidates: edge (a,b) offers label(a) to b
             cand = sym.join(labels, sym.a == labels.id).select(
                 F.col("b").alias("id"),
@@ -108,15 +108,13 @@ def pagerank(
     edges: DataFrame,
     n_iters: int = 2,
     damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
-    """PageRank by power iteration, DataFrame-native and exactly
-    reproducible: per-edge contributions are rounded to 12 decimals
-    then summed as DECIMAL(38,12), and each iteration's rank is
-    re-rounded — so the result is independent of partition/accumulation
-    order and a SQL engine unrolling the same iterations agrees digit
-    for digit.
+    """PageRank over (src, dst) edges by power iteration,
+    DataFrame-native and exactly reproducible: per-edge contributions
+    are rounded to 12 decimals then summed as DECIMAL(38,12), and each
+    iteration's rank is re-rounded — so the result is independent of
+    partition/accumulation order and a SQL engine unrolling the same
+    iterations agrees digit for digit.
 
     Scale shape: each iteration is one join (ranks ⋈ edges on src —
     co-partitioned after the first shuffle) plus one groupBy(dst) with
@@ -129,8 +127,7 @@ def pagerank(
     from babylon_data_loader_spark.functions.cache import persist_tracked
 
     e = persist_tracked(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
+        edges.select("src", "dst").distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     nodes = e.select(F.col("src").alias("node")).distinct()

@@ -36,16 +36,15 @@ def heavy_hitters(
     items: DataFrame,
     item_col: str,
     phi: float = 0.005,
-    slack_factor: int = 2,
 ) -> DataFrame:
     """Tokens occurring in > phi fraction of rows, with exact counts.
 
     `items` is a one-column-of-interest DataFrame (one row per item
     occurrence). Returns (item, n) for every item with n > phi·N,
-    exactly. slack_factor ≥ 2 sizes the MG capacity so no true heavy
-    hitter can be pruned before the exact recount.
+    exactly. The MG capacity is 2/phi, so no true heavy hitter can be
+    pruned before the exact recount.
     """
-    cap = max(1, int(slack_factor / phi))
+    cap = max(1, int(2 / phi))
     # Partial schema derives the item column's type from the input —
     # BIGINT ids summarize as correctly as STRING tokens; hardcoding
     # STRING would silently coerce (or fail Arrow conversion on)

@@ -63,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from babylon_data_loader_spark.schemas import as_nullable
+from babylon_data_loader_spark.schemas import stored_schema
 
 # The one meta file of every store dir (fingerprint-keyed or at a
 # caller-owned path), written after its data. It holds ``schema``, the
@@ -76,16 +76,16 @@ from babylon_data_loader_spark.schemas import as_nullable
 # dir" (keep).
 META_NAME = "_store_meta.json"
 
-# Name prefix of unpublished builds (and of knn_lsh's throwaway
-# indexes) in the warehouse — deliberately not ``idx_``, so a staging
-# dir is never taken for a store. ``lsh_staging_`` is the throwaway
-# prefix used before the shared lifecycle; the sweep still ages it out.
+# Name prefix of unpublished builds in the warehouse — deliberately not
+# ``idx_``, so a staging dir is never taken for a store. Older
+# warehouses may still hold ``lsh_staging_`` dirs (knn_lsh's former
+# throwaway indexes); the sweep ages them out too.
 STAGING_PREFIX = "staging_"
 _STAGING_PREFIXES = (STAGING_PREFIX, "lsh_staging_")
 
 # Age in seconds after which a staging dir counts as abandoned (a
-# killed build, or a throwaway index no live plan reads any more) and
-# is swept. A build still running after this long loses its dir.
+# killed build) and is swept. A build still running after this long
+# loses its dir.
 STAGING_TTL_S = 3600
 
 # Per-process access trail appended by get_or_build_store:
@@ -266,11 +266,7 @@ def write_store(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-    cols = as_nullable(df.schema).fields
-    schema = StructType(
-        [f for f in cols if f.name not in partition_by]
-        + [f for c in partition_by for f in cols if f.name == c]
-    )
+    schema = stored_schema(df.schema, partition_by)
     meta = {"schema": schema.jsonValue(), **fields}
     write_store_meta(df.sparkSession, path, meta)
     return meta
@@ -297,9 +293,8 @@ def published_meta(spark: SparkSession, path: str) -> dict | None:
     """The meta of the published store at ``path`` (local or URI, read
     where it lives through :func:`read_meta_text`), or None when there
     is none or it records no schema (a legacy store, rebuilt on its
-    next access). The hit test of :func:`get_or_build_store`, the
-    "another writer won" test of its publish and the staleness probe
-    of a caller-owned index path."""
+    next access). The hit test of :func:`get_or_build_store` and the
+    "another writer won" test of its publish."""
     try:
         meta = json.loads(read_meta_text(spark, _meta_path(path)))
     except (OSError, ValueError, Py4JJavaError):

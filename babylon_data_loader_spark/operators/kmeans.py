@@ -30,12 +30,9 @@ from babylon_data_loader_spark.functions.vectors import squared_l2
 def assign_clusters(
     vecs: DataFrame,
     cents: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cid_col: str = "cid",
-    cent_col: str = "centroid",
 ) -> DataFrame:
-    """(id, cid, dist): every vector labeled with its nearest centroid.
+    """(vec_id, cid, dist, dist_e9): every ``embedding`` labeled with
+    its nearest ``centroid`` of ``cents`` (cid, centroid).
 
     ``dist`` is the squared L2 distance rounded to 9 dp; the argmin
     minimizes (dist_e9, cid) lexicographically — e9-quantized BIGINT
@@ -85,10 +82,7 @@ def assign_clusters(
     # projection. raise_error's NullType coerces to the array type.
     codebook = cents.agg(
         F.collect_list(
-            F.struct(
-                F.col(cid_col).alias("cid"),
-                F.col(cent_col).alias("centroid"),
-            )
+            F.struct("cid", "centroid")
         ).alias("_cb_raw")
     ).select(
         F.when(F.size("_cb_raw") > 0, F.col("_cb_raw"))
@@ -138,7 +132,7 @@ def assign_clusters(
         F.col("_codebook"),
         lambda c: F.struct(
             F.round(
-                squared_l2(F.col(vec_col), c["centroid"]), 9
+                squared_l2(F.col("embedding"), c["centroid"]), 9
             ).alias("dist"),
             c["cid"].alias("cid"),
         ),
@@ -152,13 +146,13 @@ def assign_clusters(
         ),
     )
     best = (
-        vecs.select(id_col, vec_col)
+        vecs.select("vec_id", "embedding")
         .crossJoin(F.broadcast(codebook))
-        .select(id_col, F.array_min(ranked).alias("_best"))
+        .select("vec_id", F.array_min(ranked).alias("_best"))
     )
     return best.select(
-        id_col,
-        F.col("_best")["cid"].alias(cid_col),
+        "vec_id",
+        F.col("_best")["cid"].alias("cid"),
         F.col("_best")["dist"].alias("dist"),
         F.col("_best")["dist_e9"].alias("dist_e9"),
     )

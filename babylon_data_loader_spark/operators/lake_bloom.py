@@ -52,13 +52,14 @@ BLOOM_SCHEMA = T.StructType(
 )
 
 
-def bloom_positions(value: object, n_bits: int = N_BITS) -> list[int]:
-    """k bit positions for a value (md5-derived, engine-independent:
-    values hash by their canonical string form)."""
+def bloom_positions(value: object) -> list[int]:
+    """The N_HASHES bit positions (of N_BITS) for a value
+    (md5-derived, engine-independent: values hash by their canonical
+    string form)."""
     digest = hashlib.md5(str(value).encode("utf-8")).digest()
     digest += hashlib.md5((str(value) + "#salt2").encode("utf-8")).digest()
     return [
-        int.from_bytes(digest[i * 4 : (i + 1) * 4], "big") % n_bits
+        int.from_bytes(digest[i * 4 : (i + 1) * 4], "big") % N_BITS
         for i in range(N_HASHES)
     ]
 

@@ -36,13 +36,9 @@ def _tree_bytes(path: str) -> int:
     return total
 
 
-def zorder_column(
-    df: DataFrame,
-    cols: list[str],
-    bits_per_col: int = 10,
-) -> Column:
+def zorder_column(df: DataFrame, cols: list[str]) -> Column:
     """Morton (Z-order) key over `cols`: each column is linearly
-    bucketed into 2^bits_per_col cells between its min and max (one
+    bucketed into 2^10 cells between its min and max (one
     tiny agg — metadata, not data), and the cell indices' bits are
     interleaved JVM-side. Sorting by this key clusters rows so that
     per-file min/max footers are selective on EVERY participating
@@ -76,10 +72,8 @@ def zorder_column(
                 "(all-NULL or not castable to double) — it cannot "
                 "contribute to a Z-order key"
             )
-        cells.append(
-            quantize(F.col(c).cast("double"), mn, mx, bits_per_col)
-        )
-    return interleave(cells, bits_per_col)
+        cells.append(quantize(F.col(c).cast("double"), mn, mx, 10))
+    return interleave(cells, 10)
 
 
 def optimize_layout(
@@ -90,7 +84,6 @@ def optimize_layout(
     sort_by: list[str] | None = None,
     zorder_by: list[str] | None = None,
     n_files: int | None = None,
-    row_group_bytes: int | None = None,
 ) -> DataFrame:
     """Rewrite `src_path` into `dst_path` with files of roughly
     `target_file_bytes` (compressed) each.
@@ -103,10 +96,6 @@ def optimize_layout(
       column at once (mutually exclusive with `sort_by`).
     - `n_files`: override the size-based file count (e.g. match core
       count for a hot table far smaller than target_file_bytes).
-    - `row_group_bytes`: parquet block size inside each file (defaults
-      to the writer default, 128 MB): row groups are the scan-split
-      unit, so files larger than one task's appetite should carry
-      several.
 
     Returns the reader of the optimized copy.
     """
@@ -131,8 +120,5 @@ def optimize_layout(
         )
     else:
         df = df.repartition(n_files)
-    writer = df.write.mode("overwrite")
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    writer.parquet(dst_path)
+    df.write.mode("overwrite").parquet(dst_path)
     return spark.read.parquet(dst_path)

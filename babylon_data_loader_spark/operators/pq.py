@@ -49,10 +49,9 @@ def pq_fit(
     m: int = 8,
     ksub: int = 16,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
-    """Train `m` per-subspace codebooks of `ksub` centroids each.
+    """Train `m` per-subspace codebooks of `ksub` centroids each over
+    the ``embedding`` column.
 
     All subspaces train together: each Lloyd iteration is ONE
     assignment projection (m·ksub fold expressions, JVM-side) and ONE
@@ -62,11 +61,11 @@ def pq_fit(
     iteration count, ties to the lowest code. The input dimension
     must divide evenly by `m`.
     """
-    d = len(emb.select(vec_col).first()[0])
+    d = len(emb.select("embedding").first()[0])
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
-    seed_rows = emb.orderBy(id_col).limit(ksub).select(vec_col).collect()
+    seed_rows = emb.orderBy("vec_id").limit(ksub).select("embedding").collect()
     books: list[list[list[float]]] = [
         [
             [float(x) for x in r[0][i * dsub : (i + 1) * dsub]]
@@ -75,10 +74,10 @@ def pq_fit(
         for i in range(m)
     ]
     for _ in range(n_iters):
-        coded = pq_encode(emb, books, vec_col=vec_col, code_col="_code")
+        coded = pq_encode(emb, books, code_col="_code")
         means = (
             coded.select(
-                "_code", F.posexplode(F.col(vec_col)).alias("pos", "v")
+                "_code", F.posexplode(F.col("embedding")).alias("pos", "v")
             )
             .withColumn(
                 "code",
@@ -111,12 +110,12 @@ def pq_fit(
 def pq_encode(
     emb: DataFrame,
     codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
     code_col: str = "pq_code",
 ) -> DataFrame:
     """Add `code_col`: array<int> of length m, the per-subspace argmin
-    codebook index. Arrow-batched vectorized kernel, no shuffle;
-    numpy argmin ties go to the lowest index (deterministic)."""
+    codebook index of the ``embedding`` column. Arrow-batched
+    vectorized kernel, no shuffle; numpy argmin ties go to the lowest
+    index (deterministic)."""
     from pyspark.sql.functions import pandas_udf
 
     cb = np.asarray(codebooks, dtype=np.float64)  # m × ksub × dsub
@@ -136,7 +135,7 @@ def pq_encode(
         codes = d2.argmin(axis=2).astype(np.int32)  # n × m
         return pd.Series(list(codes))
 
-    return emb.withColumn(code_col, _encode(F.col(vec_col)))
+    return emb.withColumn(code_col, _encode(F.col("embedding")))
 
 
 def write_pq_index(
@@ -164,15 +163,12 @@ def pq_search(
     query_vec: list[float],
     k: int = 10,
     rerank: DataFrame | None = None,
-    rerank_factor: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
 ) -> DataFrame:
-    """Top-k by asymmetric distance (ADC) over the codes.
+    """Top-k ``vec_id`` by asymmetric distance (ADC) over the
+    ``pq_code`` column.
 
     `rerank`: optionally pass the raw-vector table — the top
-    `k*rerank_factor` ADC candidates (ids only) are joined back and
+    `4*k` ADC candidates (ids only) are joined back and
     re-ranked by exact cosine, trading one broadcast join for
     near-exact recall while the SCAN still reads only codes.
     """
@@ -188,7 +184,7 @@ def pq_search(
             for i in range(m)
         ]
     )
-    code = F.col(code_col)
+    code = F.col("pq_code")
     adc = F.round(
         sum(
             F.element_at(F.element_at(lut_lit, i + 1), code[i] + 1)
@@ -197,21 +193,21 @@ def pq_search(
         9,
     ).alias("adc_dist2")
 
-    keep = [c for c in (id_col, "label") if c in codes.columns]
+    keep = [c for c in ("vec_id", "label") if c in codes.columns]
     ranked = (
         codes.select(*keep, adc)
-        .orderBy(F.col("adc_dist2").asc(), F.col(id_col).asc())
-        .limit(k * rerank_factor if rerank is not None else k)
+        .orderBy(F.col("adc_dist2").asc(), F.col("vec_id").asc())
+        .limit(4 * k if rerank is not None else k)
     )
     if rerank is None:
         return ranked
 
     qcol = double_array_lit(query_vec)
-    sim = F.round(cosine(F.col(vec_col), qcol), 9).alias("sim")
-    cand = F.broadcast(ranked.select(id_col))
+    sim = F.round(cosine(F.col("embedding"), qcol), 9).alias("sim")
+    cand = F.broadcast(ranked.select("vec_id"))
     return (
-        rerank.join(cand, on=id_col)
-        .select(*[c for c in (id_col, "label") if c in rerank.columns], sim)
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
+        rerank.join(cand, on="vec_id")
+        .select(*[c for c in ("vec_id", "label") if c in rerank.columns], sim)
+        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )

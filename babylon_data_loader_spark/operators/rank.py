@@ -360,11 +360,7 @@ def global_row_number_with_total(
     )
 
 
-def value_ranks(
-    df: DataFrame,
-    cols: list[str],
-    descending: bool = False,
-) -> DataFrame:
+def value_ranks(df: DataFrame, cols: list[str]) -> DataFrame:
     """Per-DISTINCT-value rank statistics for ``cols`` — the compact
     form every tie-aware rank derives from. Returns one row per
     distinct value with:
@@ -393,10 +389,7 @@ def value_ranks(
             "ranked value columns; rename them before calling"
         )
     vals = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("cnt"))
-    order = [
-        (F.col(c).desc() if descending else F.col(c).asc())
-        for c in cols
-    ]
+    order = [F.col(c).asc() for c in cols]
     out = running_totals(vals, order, {"cum_cnt": F.col("cnt")})
     return (
         out.withColumn("cum_cnt", F.col("cum_cnt").cast("long"))

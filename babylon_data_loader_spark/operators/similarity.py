@@ -6,7 +6,7 @@ Two strategies:
 - :func:`knn_lsh` — random-hyperplane LSH with multi-probe. Each
   vector gets a sign-bit bucket from `n_planes` deterministic
   hyperplanes; the query probes all buckets within Hamming distance
-  `probe_hamming`, then exact cosine re-ranks the candidates. At
+  2, then exact cosine re-ranks the candidates. At
   100 TB: the bucket column is computed once at write time (cheap,
   scan-local), candidate selection is a pushed-down IN filter on a
   low-cardinality column (partition/bucket prunable), and the exact
@@ -28,6 +28,16 @@ from babylon_data_loader_spark.functions.vectors import (
     cosine,
     double_array_lit,
 )
+
+#: banded sign-LSH of the embedding near-dup family: N_BANDS buckets
+#: of N_PLANES sign bits each; a bucket holding more than
+#: MAX_BUCKET_SIZE ids (None: no cap) is dropped before pairing
+N_PLANES = 8
+N_BANDS = 4
+MAX_BUCKET_SIZE: int | None = 1000
+
+#: the exact all-pairs baseline refuses inputs of more rows than this
+MAX_EXACT_ROWS = 50_000
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -69,22 +79,19 @@ def _probe_buckets(bucket: str, hamming: int) -> list[str]:
 
 
 def knn_bruteforce(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, query_vec_id: int, k: int = 10
 ) -> DataFrame:
-    """Exact cosine top-k (excluding the query itself)."""
-    qvec = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("_q")
+    """Exact cosine top-k (excluding the query itself) of
+    (vec_id, embedding) rows."""
+    qvec = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("_q")
     )
-    sim = F.round(cosine(F.col(vec_col), F.col("_q")), 9).alias("sim")
+    sim = F.round(cosine(F.col("embedding"), F.col("_q")), 9).alias("sim")
     return (
-        emb.filter(F.col(id_col) != query_vec_id)
+        emb.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(qvec))
-        .select(id_col, sim)
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
+        .select("vec_id", sim)
+        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -92,55 +99,41 @@ def knn_bruteforce(
 def embedding_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
-    n_planes: int = 8,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
-    max_bucket_size: int | None = 1000,
-    max_exact_rows: int = 50_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥
-    threshold).
+    threshold) of (vec_id, embedding) rows.
 
     exact=False (default, the scale path): banded sign-LSH
-    (OR-of-ANDs) — `n_bands` independent buckets of `n_planes` sign
+    (OR-of-ANDs) — `N_BANDS` independent buckets of `N_PLANES` sign
     bits each; vectors sharing ANY band bucket become candidates, and
     exact cosine verifies. Per-bucket joins, never all-pairs. A pair at
     angle θ is a candidate with probability 1 − (1 − p^r)^b where
-    p = 1 − θ/π, r = n_planes, b = n_bands: ~99% at cosine 0.95 with
-    the defaults, vanishing for unrelated vectors.
+    p = 1 − θ/π, r = N_PLANES, b = N_BANDS: ~99% at cosine 0.95,
+    vanishing for unrelated vectors.
 
     exact=True: all-pairs self-join — O(N²), for oracle checks and
     small N only. Guarded: raises if the input exceeds
-    `max_exact_rows`, so the verification baseline cannot be pointed
+    `MAX_EXACT_ROWS`, so the verification baseline cannot be pointed
     at a real corpus (50k rows is already a 2.5-billion-pair join).
     """
     if exact:
         n = emb.count()
-        if n > max_exact_rows:
+        if n > MAX_EXACT_ROWS:
             raise ValueError(
                 f"exact=True is the O(N²) verification baseline: input has "
-                f"{n} rows > max_exact_rows={max_exact_rows}. Use the "
-                f"banded LSH path (exact=False) for real corpora, or "
-                f"raise max_exact_rows explicitly."
+                f"{n} rows > MAX_EXACT_ROWS={MAX_EXACT_ROWS}. Use the "
+                f"banded LSH path (exact=False) for real corpora."
             )
         left = emb.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
+            F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")
         )
         right = emb.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+            F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")
         )
         pairs = left.crossJoin(right).filter(F.col("id_a") < F.col("id_b"))
     else:
-        pairs = _banded_candidates(
-            emb,
-            id_col,
-            vec_col,
-            n_bands=n_bands,
-            n_planes=n_planes,
-            max_bucket_size=max_bucket_size,
-        )
+        pairs = _banded_candidates(emb)
     sim = F.round(cosine(F.col("va"), F.col("vb")), 9)
     return (
         pairs.select("id_a", "id_b", sim.alias("sim"))
@@ -148,31 +141,18 @@ def embedding_dup_pairs(
     )
 
 
-def embedding_pairs_params(
-    threshold: float,
-    n_planes: int,
-    n_bands: int,
-    id_col: str,
-    vec_col: str,
-    max_bucket_size: int | None,
-) -> str:
+def embedding_pairs_params(threshold: float) -> str:
     """Store params of the embedding-pair family. The threshold is
     ROUNDED to thousandths: truncating keyed two thresholds onto one
     store."""
     return (
-        f"t{round(threshold * 1000)}p{n_planes}b{n_bands}"
-        f"m{max_bucket_size}_{id_col}_{vec_col}"
+        f"t{round(threshold * 1000)}p{N_PLANES}b{N_BANDS}"
+        f"m{MAX_BUCKET_SIZE}_vec_id_embedding"
     )
 
 
 def stored_embedding_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = 1000,
+    emb: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
     """:func:`embedding_dup_pairs` (banded-LSH path) through the
     at-rest store: sign bucketing, candidate generation, and cosine
@@ -190,30 +170,13 @@ def stored_embedding_pairs(
     return get_or_build_parquet(
         emb,
         "emb_pairs",
-        embedding_pairs_params(
-            threshold, n_planes, n_bands, id_col, vec_col, max_bucket_size
-        ),
-        lambda: embedding_dup_pairs(
-            emb,
-            threshold=threshold,
-            n_planes=n_planes,
-            n_bands=n_bands,
-            id_col=id_col,
-            vec_col=vec_col,
-            exact=False,
-            max_bucket_size=max_bucket_size,
-        ),
+        embedding_pairs_params(threshold),
+        lambda: embedding_dup_pairs(emb, threshold=threshold),
     )
 
 
 def stored_embedding_components(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    n_bands: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = 1000,
+    emb: DataFrame, threshold: float = 0.95
 ) -> DataFrame:
     """(id, component) connected-component labels of the embedding
     near-dup graph through the at-rest store — the embedding-side
@@ -233,17 +196,9 @@ def stored_embedding_components(
     )
 
     def build() -> DataFrame:
-        pairs = stored_embedding_pairs(
-            emb,
-            threshold=threshold,
-            n_planes=n_planes,
-            n_bands=n_bands,
-            id_col=id_col,
-            vec_col=vec_col,
-            max_bucket_size=max_bucket_size,
-        )
+        pairs = stored_embedding_pairs(emb, threshold=threshold)
         return connected_components(
-            emb.select(F.col(id_col).alias("id")),
+            emb.select(F.col("vec_id").alias("id")),
             pairs.select(
                 F.col("id_a").alias("src"),
                 F.col("id_b").alias("dst"),
@@ -253,25 +208,16 @@ def stored_embedding_components(
     return get_or_build_parquet(
         emb,
         "emb_comp",
-        embedding_pairs_params(
-            threshold, n_planes, n_bands, id_col, vec_col, max_bucket_size
-        ),
+        embedding_pairs_params(threshold),
         build,
     )
 
 
-def _banded_candidates(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_bands: int,
-    n_planes: int,
-    max_bucket_size: int | None = 1000,
-) -> DataFrame:
-    """Distinct candidate pairs sharing any of `n_bands` sign buckets
-    (each from `n_planes` independent hyperplanes).
+def _banded_candidates(emb: DataFrame) -> DataFrame:
+    """Distinct candidate pairs sharing any of `N_BANDS` sign buckets
+    (each from `N_PLANES` independent hyperplanes).
 
-    Scale shape: buckets larger than `max_bucket_size` are dropped
+    Scale shape: buckets larger than `MAX_BUCKET_SIZE` are dropped
     before the self-join (a degenerate bucket — many near-identical
     embeddings, exactly what a dup-heavy corpus produces — would go
     quadratic; its members are better handled by exact/content-hash
@@ -280,6 +226,8 @@ def _banded_candidates(
     stream afterwards, so the wide payload never rides through the
     candidate shuffle.
     """
+    id_col, vec_col = "vec_id", "embedding"
+    n_bands, n_planes = N_BANDS, N_PLANES
     dim = len(emb.select(vec_col).first()[0])
     # All n_bands·n_planes sign bits in ONE Arrow-vectorized kernel
     # (projection matrix product + bit packing) instead of
@@ -330,7 +278,7 @@ def _banded_candidates(
     # generation. The guard is a broadcast anti-join against the
     # tiny >cap list (see operators/buckets.py)
     # so the collect_list below has aggregation buffers bounded at
-    # `max_bucket_size` ids by construction; the in-row double explode
+    # `MAX_BUCKET_SIZE` ids by construction; the in-row double explode
     # then emits a<b pairs with ONE band-keyed shuffle of bare ids —
     # no self-join of the bucketed frame.
     from babylon_data_loader_spark.operators.buckets import (
@@ -339,7 +287,7 @@ def _banded_candidates(
 
     bucketed = persist_tracked(bucketed)
     bucketed = drop_oversized_buckets(
-        bucketed, ["band_idx", "bucket"], max_bucket_size
+        bucketed, ["band_idx", "bucket"], MAX_BUCKET_SIZE
     )
     buckets = bucketed.groupBy("band_idx", "bucket").agg(
         F.collect_list(id_col).alias("_ids")
@@ -365,14 +313,7 @@ def _bucket_of(vec: list[float], planes: list[list[float]]) -> str:
     return "".join(bits)
 
 
-def write_lsh_index(
-    emb: DataFrame,
-    path: str,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fingerprint: str | None = None,
-) -> dict:
+def write_lsh_index(emb: DataFrame, path: str, n_planes: int = 8) -> dict:
     """Persist the sign-bucket index partitioned BY bucket — the
     write-time half of LSH's economics. Each vector's bucket is
     computed once here (scan-local, no shuffle beyond the partitioned
@@ -381,14 +322,14 @@ def write_lsh_index(
     the full table (the contract an indexed lookup implies —
     /root/reference/apiClient/apiClient.go:188-243 reads by key, it
     does not scan). Hyperplanes are deterministic from (plane, dim),
-    so the index carries only {n_planes, dim} as metadata. Returns the
-    store meta."""
+    so the index carries only {n_planes, dim} as metadata (and a
+    `fingerprint` field, always null). Returns the store meta."""
     from babylon_data_loader_spark.operators.index_store import write_store
 
-    dim = len(emb.select(vec_col).first()[0])
+    dim = len(emb.select("embedding").first()[0])
     planes = [_hyperplane(p, dim) for p in range(n_planes)]
     return write_store(
-        emb.withColumn("bucket", sign_bucket(F.col(vec_col), planes))
+        emb.withColumn("bucket", sign_bucket(F.col("embedding"), planes))
         # ONE build-time hash shuffle on bucket: without it,
         # partitionBy splits EVERY upstream task's output by bucket —
         # #tasks × #buckets tiny files (a probe then opens up to
@@ -402,17 +343,11 @@ def write_lsh_index(
         ("bucket",),
         n_planes=n_planes,
         dim=dim,
-        fingerprint=fingerprint,
+        fingerprint=None,
     )
 
 
-def append_lsh_index(
-    new_vecs,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fingerprint: str | None = None,
-) -> None:
+def append_lsh_index(new_vecs, path: str) -> None:
     """Incrementally extend an EXISTING LSH index with new vectors —
     the maintenance half of the at-rest economics: at 100 TB an append
     of 0.1%% of the corpus must cost 0.1%% of a build, not a rebuild.
@@ -429,23 +364,21 @@ def append_lsh_index(
     so only CONTENT, not file layout, affects the top-k
     (pinned by tests/test_similarity.py).
 
-    Only meaningful for caller-owned `index_path` stores: the
-    fingerprint-keyed session store is invalidated by ANY source-table
-    change, by design. The meta's fingerprint is updated (or cleared)
-    so a stale-content guard cannot silently pass."""
+    Only meaningful for caller-owned stores written by
+    :func:`write_lsh_index`: the fingerprint-keyed session store is
+    invalidated by ANY source-table change, by design. The meta is
+    left as it is."""
     from babylon_data_loader_spark.operators.index_store import (
         check_append_schema,
         read_store_meta,
-        write_store_meta,
     )
 
-    spark = new_vecs.sparkSession
-    meta = read_store_meta(spark, path)
+    meta = read_store_meta(new_vecs.sparkSession, path)
     dim = int(meta["dim"])
     planes = [_hyperplane(p, dim) for p in range(int(meta["n_planes"]))]
-    first = new_vecs.select(vec_col).first()
+    first = new_vecs.select("embedding").first()
     if first is None:
-        return  # empty append: nothing to write, meta untouched
+        return  # empty append: nothing to write
     if len(first[0]) != dim:
         raise ValueError(
             f"append_lsh_index: new vectors have dim {len(first[0])}, "
@@ -455,7 +388,7 @@ def append_lsh_index(
     # appended files would surface as NULLs on later probes
     check_append_schema(meta, new_vecs, exclude=("bucket",))
     (
-        new_vecs.withColumn("bucket", sign_bucket(F.col(vec_col), planes))
+        new_vecs.withColumn("bucket", sign_bucket(F.col("embedding"), planes))
         # same one-shuffle discipline as the full build: one new file
         # per touched bucket per append, not #tasks x #buckets
         .repartition(F.col("bucket"))
@@ -463,8 +396,6 @@ def append_lsh_index(
         .partitionBy("bucket")
         .parquet(path)
     )
-    meta["fingerprint"] = fingerprint
-    write_store_meta(spark, path, meta)
 
 
 def read_lsh_index(spark, path: str) -> tuple[DataFrame, dict]:
@@ -480,11 +411,9 @@ def lsh_search(
     query_vec: list[float],
     k: int = 10,
     probe_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k by exact cosine within the multi-probe buckets of a
-    stored LSH index.
+    """Top-k ``vec_id`` by exact cosine within the multi-probe buckets
+    of a stored LSH index.
 
     The query's bucket and its Hamming-ball probes are computed
     driver-side (O(n_planes·d) + O(n_planes^probe_hamming) strings);
@@ -497,12 +426,12 @@ def lsh_search(
     probes = _probe_buckets(_bucket_of(query_vec, planes), probe_hamming)
 
     qcol = double_array_lit(query_vec)
-    sim = F.round(cosine(F.col(vec_col), qcol), 9).alias("sim")
-    keep = [c for c in (id_col, "label") if c in indexed.columns]
+    sim = F.round(cosine(F.col("embedding"), qcol), 9).alias("sim")
+    keep = [c for c in ("vec_id", "label") if c in indexed.columns]
     return (
         indexed.filter(F.col("bucket").isin(probes))
         .select(*keep, sim)
-        .orderBy(F.col("sim").desc(), F.col(id_col).asc())
+        .orderBy(F.col("sim").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -512,91 +441,45 @@ def knn_lsh(
     query_vec_id: int,
     k: int = 10,
     n_planes: int = 8,
-    probe_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index_path: str | None = None,
-    build_throwaway_index: bool = False,
 ) -> DataFrame:
-    """Approximate cosine top-k via multi-probe sign-LSH over an
-    AT-REST bucketed index.
+    """Approximate cosine top-k via multi-probe sign-LSH (Hamming
+    radius 2) over an AT-REST bucketed index.
 
     The index (table partitioned by sign bucket) is built ONCE via
-    :func:`write_lsh_index` and reused across calls. With no
-    `index_path`, the store is keyed by the input's CONTENT
-    fingerprint (file sizes + mtimes — operators/index_store.py) under
-    the session warehouse dir: the first call per dataset version pays
-    the build, every later call is pure probe cost, and regenerated
-    data can never alias onto a stale index (new fingerprint → new
-    dir, old dirs swept). Inputs with no file lineage cannot be
-    fingerprinted; building a throwaway index for those is a full
-    table write per call, so it must be opted into with
-    `build_throwaway_index=True` — the default refuses rather than
-    silently rewriting a corpus. An explicit `index_path` is
-    validated against the input fingerprint (and `n_planes`) and
-    rebuilt on mismatch. The search itself reads ONLY the probed
-    buckets' partitions (pushed-down partition filter) plus one O(1)
-    point lookup for the query row — never a full scan.
+    :func:`write_lsh_index` and reused across calls. The store is
+    keyed by the input's CONTENT fingerprint (file sizes + mtimes —
+    operators/index_store.py) under the session warehouse dir: the
+    first call per dataset version pays the build, every later call
+    is pure probe cost, and regenerated data can never alias onto a
+    stale index (new fingerprint → new dir, old dirs swept). Inputs
+    with no file lineage cannot be fingerprinted and raise: an index
+    for them would be a full table write per call. The search itself
+    reads ONLY the probed buckets' partitions (pushed-down partition
+    filter) plus one O(1) point lookup for the query row — never a
+    full scan.
     """
     from babylon_data_loader_spark.operators.index_store import (
-        df_fingerprint,
         get_or_build_store,
-        new_staging_dir,
-        published_meta,
     )
 
-    spark = emb.sparkSession
-
-    def write(path: str) -> dict:
-        return write_lsh_index(
-            emb,
-            path,
-            n_planes=n_planes,
-            id_col=id_col,
-            vec_col=vec_col,
-            fingerprint=fp,
-        )
-
+    index_path = get_or_build_store(
+        emb,
+        "lsh_index",
+        f"p{n_planes}",
+        lambda path: write_lsh_index(emb, path, n_planes=n_planes),
+    )
     if index_path is None:
-        fp = None  # the store's NAME carries the fingerprint
-        index_path = get_or_build_store(
-            emb, "lsh_index", f"p{n_planes}", write
+        raise ValueError(
+            "knn_lsh: input has no file lineage to fingerprint, so a "
+            "persistent index cannot be keyed to it"
         )
-        if index_path is None:
-            if not build_throwaway_index:
-                raise ValueError(
-                    "knn_lsh: input has no file lineage to fingerprint, "
-                    "so a persistent index cannot be keyed to it. Pass "
-                    "index_path= (caller-owned store) or "
-                    "build_throwaway_index=True to accept a full "
-                    "staging write for this call."
-                )
-            # A throwaway index stays on disk while its lazy result
-            # plan is alive, so it cannot be removed here: it is a
-            # staging dir, which the store sweep ages out.
-            index_path = new_staging_dir(spark, "lsh_index")
-            write(index_path)
-    else:
-        fp = df_fingerprint(emb)
-        meta = published_meta(spark, index_path)
-        stale = meta is None or meta.get("n_planes") != n_planes or (
-            fp is not None
-            and meta.get("fingerprint") is not None
-            and meta["fingerprint"] != fp
-        )
-        if stale:
-            write(index_path)
-    indexed, meta = read_lsh_index(spark, index_path)
+    indexed, meta = read_lsh_index(emb.sparkSession, index_path)
     qvec = [
         float(x)
-        for x in emb.filter(F.col(id_col) == query_vec_id).first()[vec_col]
+        for x in emb.filter(F.col("vec_id") == query_vec_id).first()[
+            "embedding"
+        ]
     ]
     return lsh_search(
-        indexed.filter(F.col(id_col) != query_vec_id),
-        meta,
-        qvec,
-        k=k,
-        probe_hamming=probe_hamming,
-        id_col=id_col,
-        vec_col=vec_col,
+        indexed.filter(F.col("vec_id") != query_vec_id), meta, qvec, k=k
     )

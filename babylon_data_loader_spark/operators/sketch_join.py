@@ -31,6 +31,9 @@ from babylon_data_loader_spark.session import local_frame
 
 _SEEDS = (0, 7)  # k = 2 hash functions derived from seeded xxhash64
 
+#: bits in bloom_prefilter's sketch of the small side's keys
+PREFILTER_BITS = 1 << 18
+
 
 def _positions(key: Column, n_bits: int) -> list[Column]:
     return [
@@ -89,7 +92,6 @@ def bloom_prefilter(
     small: DataFrame,
     big_key: str,
     small_key: str,
-    n_bits: int = 1 << 18,
 ) -> DataFrame:
     """`big` reduced to rows whose key might appear in `small` —
     the explicit semi-join-reduction operator. Follow with the real
@@ -100,6 +102,7 @@ def bloom_prefilter(
     4096-element CreateArray in the filter expression re-materializes
     the array per input row (measured 12× slower than the broadcast
     at sf0.1)."""
+    n_bits = PREFILTER_BITS
     words = build_key_bloom(small, small_key, n_bits)
     spark = big.sparkSession
     bitmap = local_frame(spark, [(words,)], "_bloom_bitmap array<bigint>")

@@ -42,8 +42,10 @@ Scale notes: rewrite cost per merge is bounded by the touched
 partitions, not the table; the manifest is O(partitions); readers
 issue one scan per live version dir (appends accumulate dirs —
 ``compact()`` folds a partition back to one dir). Each version dir
-records its data schema in ``_schema.json`` when it is written, so
-opening that scan costs no footer-inference job. All the underscore-
+records its schema in ``_schema.json`` when it is written (partition
+column last, with the type it was written with), so opening that scan
+costs no footer-inference job and the partition column reads back as
+written, not as hive inference guesses it. All the underscore-
 prefixed control dirs are invisible to plain ``spark.read.parquet`` on
 the lake root, so a legacy plain lake migrates in place: its root
 becomes data dir ``"."`` of manifest v1, with zero data movement.
@@ -68,7 +70,7 @@ from babylon_data_loader_spark.functions.exprs import referenced_columns
 from babylon_data_loader_spark.operators.commit_backend import (
     PosixCommitBackend,
 )
-from babylon_data_loader_spark.schemas import as_nullable
+from babylon_data_loader_spark.schemas import stored_schema
 from babylon_data_loader_spark.session import local_frame
 
 # Spark's placeholder subdir value for a NULL partition key; a batch
@@ -81,7 +83,7 @@ HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 # of having the working column silently replace and then drop it.
 RESOLVE_RN = "__bdl_rn"
 
-# Per-version-dir data schema, published when the dir is written.
+# Per-version-dir schema, published when the dir is written.
 SCHEMA_SIDECAR = "_schema.json"
 
 
@@ -361,7 +363,6 @@ class TransactionalLake:
         self,
         spark: SparkSession,
         predicates: list[tuple[str, object | None, object | None]],
-        version: int | None = None,
     ) -> DataFrame:
         """``read().filter(lo <= col <= hi for each predicate)`` that
         opens only files whose sidecar [min, max] can overlap the
@@ -382,7 +383,7 @@ class TransactionalLake:
                 cond = cond & (F.col(col) <= F.lit(hi))
         return self._read_partitions(
             spark,
-            self._manifest(version)["partitions"],
+            self.current_manifest()["partitions"],
             lambda base, subdirs: prune_files(
                 spark, base, subdirs, predicates
             ),
@@ -393,7 +394,6 @@ class TransactionalLake:
         spark: SparkSession,
         col: str,
         value: object,
-        version: int | None = None,
     ) -> DataFrame:
         """Point lookup ``col == value`` that opens only files whose
         Bloom filter (operators/lake_bloom.py, built when the lake has
@@ -407,14 +407,14 @@ class TransactionalLake:
 
         return self._read_partitions(
             spark,
-            self._manifest(version)["partitions"],
+            self.current_manifest()["partitions"],
             lambda base, subdirs: bloom_keep_files(
                 spark, base, subdirs, col, value
             ),
         ).filter(F.col(col) == F.lit(value))
 
     def _dir_schema(self, base: str) -> T.StructType | None:
-        """The data schema recorded in version dir ``base``; None when
+        """The schema recorded in version dir ``base``; None when
         its sidecar is missing (the adopted ``"."`` dir, dirs written
         before sidecars existed) or unreadable — the caller then lets
         Spark infer it from a footer."""
@@ -439,9 +439,10 @@ class TransactionalLake:
         its commit-ordered version dirs), one parquet scan per version
         dir, unioned by name (schema evolution NULL-fills missing
         columns). ``keep_files(base, subdirs)`` may narrow a dir to
-        ``{subdir: [file, ...]}`` (None: read it whole). Hive partition
-        discovery types the partition column, so a scan opened with
-        the dir's recorded data schema equals the inferred one."""
+        ``{subdir: [file, ...]}`` (None: read it whole). A dir with a
+        recorded schema is read with it, so its partition column has
+        the written type; hive partition discovery types the column
+        only in dirs without one."""
         by_dir: dict[str, list[str]] = {}
         for subdir in sorted(partitions):
             for d in partitions[subdir]:
@@ -529,19 +530,14 @@ class TransactionalLake:
             .partitionBy(self.partition_col)
             .parquet(full)
         )
-        # Record the data schema the way the parquet reader will report
-        # it, so every later scan of this dir skips footer inference.
-        # The dir is unreachable until the manifest commit, so a crash
-        # here leaves an orphan for vacuum.
+        # Record the schema the way the parquet reader will report it,
+        # partition column included, so every later scan of this dir
+        # skips footer inference and reads the partition column with
+        # its written type. The dir is unreachable until the manifest
+        # commit, so a crash here leaves an orphan for vacuum.
         self.backend.publish(
             os.path.join(full, SCHEMA_SIDECAR),
-            T.StructType(
-                [
-                    f
-                    for f in as_nullable(df.schema).fields
-                    if f.name != self.partition_col
-                ]
-            ).json(),
+            stored_schema(df.schema, (self.partition_col,)).json(),
         )
         subdirs = [
             e
@@ -645,6 +641,19 @@ class TransactionalLake:
         escapes path-special chars as %XX; unquote reverses it)."""
         return unquote(subdir.split("=", 1)[1])
 
+    def _partition_values(self, df: DataFrame) -> set[str]:
+        """The partition values ``df``'s rows land under, spelled as
+        :meth:`_subdir_value` reads them back: Spark names a dir by
+        the value cast to string (``true``, not Python's ``True``),
+        and a NULL or empty value lands under the hive default
+        partition."""
+        return {
+            r[0] or HIVE_NULL_PARTITION
+            for r in df.select(F.col(self.partition_col).cast("string"))
+            .distinct()
+            .collect()
+        }
+
     def _touched_partition_values(
         self, spark: SparkSession, manifest: dict, condition
     ) -> set[str]:
@@ -674,13 +683,7 @@ class TransactionalLake:
             # rows the delete will REMOVE (TRUE-condition rows, SQL
             # DELETE semantics — NULL keeps the row)
             deletes = F.coalesce(condition, F.lit(False))
-            return {
-                HIVE_NULL_PARTITION if r[0] is None else str(r[0])
-                for r in full.where(deletes)
-                .select(pc)
-                .distinct()
-                .collect()
-            }
+            return self._partition_values(full.where(deletes))
 
         refs = referenced_columns(condition)
         if refs is None or any(r.lower() != pc.lower() for r in refs):
@@ -790,14 +793,10 @@ class TransactionalLake:
         must be stable per key (true for data_source); migrating
         partitioning onto a mutable value column would let a key's
         old row survive in its former partition."""
-        # NULL partition values land on disk under Spark's
-        # __HIVE_DEFAULT_PARTITION__ subdir; match that, not the
-        # Python repr 'None' (which matches nothing and would let
-        # same-key null-partition rows survive the anti-join).
-        touched_values = {
-            HIVE_NULL_PARTITION if r[0] is None else str(r[0])
-            for r in batch.select(self.partition_col).distinct().collect()
-        }
+        # Match the batch's values as Spark spells them in dir names
+        # (a Python repr — 'None', 'True' — matches nothing and would
+        # let same-key stored rows survive the anti-join).
+        touched_values = self._partition_values(batch)
 
         def plan(manifest: dict):
             stored_subdirs = {
@@ -900,12 +899,7 @@ class TransactionalLake:
 
         self._commit_loop(plan, max_retries)
 
-    def delete_where(
-        self,
-        spark: SparkSession,
-        condition,
-        max_retries: int = 3,
-    ) -> int:
+    def delete_where(self, spark: SparkSession, condition) -> int:
         """Targeted row deletion (the GDPR / right-to-be-forgotten
         shape): rewrite ONLY the partitions that contain matching rows
         — survivors re-written, everything else untouched — committed
@@ -983,13 +977,10 @@ class TransactionalLake:
             }
             return rel, self._next_manifest(manifest, parts), n_deleted
 
-        return self._commit_loop(plan, max_retries) or 0
+        return self._commit_loop(plan) or 0
 
     def migrate_partitioning(
-        self,
-        spark: SparkSession,
-        new_partition_col: str,
-        max_retries: int = 3,
+        self, spark: SparkSession, new_partition_col: str
     ) -> "TransactionalLake":
         """Re-partition the WHOLE table under `new_partition_col` as
         one atomic version — the partition-evolution rewrite (what
@@ -1028,9 +1019,9 @@ class TransactionalLake:
                 migrated,
             )
 
-        return self._commit_loop(plan, max_retries)
+        return self._commit_loop(plan)
 
-    def append(self, spark: SparkSession, batch: DataFrame, max_retries: int = 3) -> None:
+    def append(self, spark: SparkSession, batch: DataFrame) -> None:
         """Plain append (no key collapse): a new version dir extends
         the touched partitions' dir lists.
 
@@ -1052,7 +1043,7 @@ class TransactionalLake:
             }
             return rel, self._next_manifest(manifest, parts), None
 
-        self._commit_loop(plan, max_retries)
+        self._commit_loop(plan)
 
     def compact(self, spark: SparkSession) -> None:
         """Fold every partition back to a single version dir (appends

@@ -82,13 +82,9 @@ def interleave(cells: list[Column], bits: int = DEFAULT_BITS) -> Column:
     return z
 
 
-def zorder_frame(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = DEFAULT_BITS,
-    out: str = "_z",
-) -> DataFrame:
-    """``df`` plus a Morton z-value column over ``cols``.
+def zorder_frame(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` plus a Morton z-value column ``_z`` over ``cols``,
+    ``DEFAULT_BITS`` bits per column.
 
     Bounds are the frame's own min/max per column — one
     map-combinable aggregate collected as O(len(cols)) driver scalars
@@ -96,8 +92,8 @@ def zorder_frame(
     Non-numeric columns are ordered by a stable 31-bit hash rank
     instead of a linear rank (hash clustering still co-locates equal
     values, which is what point-predicate skipping needs)."""
-    if out in df.columns:
-        raise ValueError(f"z-value column {out!r} collides with input")
+    if "_z" in df.columns:
+        raise ValueError("z-value column '_z' collides with input")
     types = {f.name: f.dataType.typeName() for f in df.schema.fields}
     numeric = {
         "byte", "short", "integer", "long",
@@ -138,25 +134,21 @@ def zorder_frame(
             exprs[c],
             bounds[f"_lo_{c}"] if bounds[f"_lo_{c}"] is not None else 0.0,
             bounds[f"_hi_{c}"] if bounds[f"_hi_{c}"] is not None else 0.0,
-            bits,
         )
         for c in cols
     ]
-    return df.withColumn(out, interleave(cells, bits))
+    return df.withColumn("_z", interleave(cells))
 
 
 def zorder_arrange(
-    df: DataFrame,
-    cols: list[str],
-    n_files: int | None = None,
-    bits: int = DEFAULT_BITS,
+    df: DataFrame, cols: list[str], n_files: int | None = None
 ) -> DataFrame:
     """Rows of ``df`` range-partitioned and sorted by their z-value,
     with the helper column already dropped — ready for a partitioned
     write where each task (= each file per hive subdir) covers one
     compact hyper-rectangle of the z-ordered key space, so min/max
     sidecars are tight on EVERY z-ordered column."""
-    z = zorder_frame(df, cols, bits)
+    z = zorder_frame(df, cols)
     args = [n_files, "_z"] if n_files else ["_z"]
     return (
         z.repartitionByRange(*args)

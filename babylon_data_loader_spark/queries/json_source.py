@@ -47,14 +47,12 @@ GROUP BY lang, source
 """
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: T.StructType = DOC_SCHEMA
-) -> DataFrame:
-    """Distributed JSONL scan with an explicit schema (PERMISSIVE:
+def read_jsonl(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed JSONL scan with the explicit DOC_SCHEMA (PERMISSIVE:
     malformed lines become all-null rows rather than failing the
     scan — per-row error isolation, the JSONL analog of the CSV
     lane's short-row handling, reference csv/csv.go:82-84)."""
-    return spark.read.schema(schema).json(path)
+    return spark.read.schema(DOC_SCHEMA).json(path)
 
 
 def write_jsonl(df: DataFrame, path: str, shards: int | None = None) -> None:
@@ -92,13 +90,11 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, out_schema)
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType = DOC_SCHEMA
-) -> DataFrame:
-    """Distributed ORC scan with an explicit schema — same
+def read_orc(spark: SparkSession, path: str) -> DataFrame:
+    """Distributed ORC scan with the explicit DOC_SCHEMA — same
     no-inference-at-scale posture as the JSONL lane; ORC carries its
     own types so the schema acts as a projection/assertion."""
-    return spark.read.schema(schema).orc(path)
+    return spark.read.schema(DOC_SCHEMA).orc(path)
 
 
 def write_orc(df: DataFrame, path: str, shards: int | None = None) -> None:

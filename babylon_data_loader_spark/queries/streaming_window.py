@@ -59,10 +59,8 @@ GROUP BY 1, 2, 3
 """
 
 
-def _stage_time_ordered(
-    staged: DataFrame, work: str, src_dir: str, ts_col: str = "ts_ts"
-) -> None:
-    """Write `staged` as 3 parquet files in EVENT-TIME ORDER with
+def _stage_time_ordered(staged: DataFrame, work: str, src_dir: str) -> None:
+    """Write `staged` as 3 parquet files in EVENT-TIME (`ts_ts`) ORDER with
     forced-increasing mtimes — the file source replays by modification
     time. Random file assignment would put most rows BEHIND the
     watermark of earlier batches, and append mode drops late rows —
@@ -74,11 +72,11 @@ def _stage_time_ordered(
     yields the same final state), so approximate percentiles on a
     single pass beat a global sort."""
     q33, q66 = staged.select(
-        F.percentile_approx(ts_col, [1.0 / 3, 2.0 / 3], 10_000).alias("q")
+        F.percentile_approx("ts_ts", [1.0 / 3, 2.0 / 3], 10_000).alias("q")
     ).collect()[0]["q"]
     bucket = (
-        F.when(F.col(ts_col) <= F.lit(q33), 1)
-        .when(F.col(ts_col) <= F.lit(q66), 2)
+        F.when(F.col("ts_ts") <= F.lit(q33), 1)
+        .when(F.col("ts_ts") <= F.lit(q66), 2)
         .otherwise(3)
     )
     stage_dir = os.path.join(work, "staged")

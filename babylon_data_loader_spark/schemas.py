@@ -44,6 +44,21 @@ def as_nullable(dtype: DataType) -> DataType:
     return dtype
 
 
+def stored_schema(schema: StructType, partition_cols) -> StructType:
+    """The schema a parquet read reports for ``schema`` written
+    partitioned by ``partition_cols``: every field nullable
+    (:func:`as_nullable`), partition columns last. Lake version dirs
+    and stores record their schema this way, so a read declared with
+    it types every column, partition columns included, as written:
+    hive inference would read a ``"0042"`` partition value back as the
+    integer 42."""
+    cols = as_nullable(schema).fields
+    return StructType(
+        [f for f in cols if f.name not in partition_cols]
+        + [f for c in partition_cols for f in cols if f.name == c]
+    )
+
+
 # The 10-field fact row. `posting_date` is deliberately a STRING in
 # MM/dd/yyyy form — the reference stores the re-formatted string and the
 # upsert key compares it as a string (datalake/datalake.go:259,

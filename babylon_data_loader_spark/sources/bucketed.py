@@ -21,13 +21,14 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 16,
-    sort: bool = True,
 ) -> None:
-    """Persist as a bucketed (and bucket-sorted) managed table."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
+    """Persist as a bucketed and bucket-sorted managed table."""
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
+    )
 
 
 def bucketed_join(

@@ -280,15 +280,15 @@ def read_header_group(spark: SparkSession, group: HeaderGroup) -> DataFrame:
     )
 
 
-def with_source_info(df: DataFrame, file_col: str = "_input_file") -> DataFrame:
-    """Stamp (data_source, account_id) from the file name.
+def with_source_info(df: DataFrame) -> DataFrame:
+    """Stamp (data_source, account_id) from the ``_input_file`` name.
 
     Mirrors GenericExtractor.ExtractInfo
     (datalake/datasource/generic_extractor.go:17-41): lower-cased name;
     ``chase(\\d{4})`` ⇒ ('chase', captured); contains 'synthetic' ⇒
     ('synthetic', '0000'); otherwise NULLs (caller rejects the file).
     """
-    base = decoded_basename(file_col)
+    base = decoded_basename("_input_file")
     lower = F.lower(base)
     chase_acct = F.regexp_extract(lower, r"chase(\d{4})", 1)
     is_chase = chase_acct != F.lit("")

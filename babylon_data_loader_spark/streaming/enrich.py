@@ -16,11 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_events(
-    events: DataFrame,
-    user_dim: DataFrame,
-    on: str = "user_id",
-) -> DataFrame:
-    """events ⋈ broadcast(user_dim), left outer so unknown keys pass
-    through with NULL attributes (no event loss on dimension lag)."""
-    return events.join(F.broadcast(user_dim), on=on, how="left")
+def enrich_events(events: DataFrame, user_dim: DataFrame) -> DataFrame:
+    """events ⋈ broadcast(user_dim) on ``user_id``, left outer so
+    unknown keys pass through with NULL attributes (no event loss on
+    dimension lag)."""
+    return events.join(F.broadcast(user_dim), on="user_id", how="left")

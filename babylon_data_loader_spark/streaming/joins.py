@@ -20,13 +20,12 @@ from pyspark.sql import functions as F
 def attribute_purchases(
     clicks: DataFrame,
     purchases: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts_ts",
     within: str = "30 minutes",
     watermark: str = "1 hour",
     how: str = "inner",
 ) -> DataFrame:
-    """Purchases joined to the click they follow within `within`.
+    """Purchases joined to the click they follow within `within`:
+    the same ``user_id``, event time ``ts_ts``.
 
     Both sides are watermarked; the join condition carries the
     event-time range, so click state older than the horizon is
@@ -44,13 +43,13 @@ def attribute_purchases(
     tests/test_round4e.py::test_stream_left_outer_boundary and encoded
     in q_stream_left_join's oracle."""
     c = clicks.select(
-        F.col(key).alias("c_key"),
-        F.col(ts_col).alias("click_ts"),
+        F.col("user_id").alias("c_key"),
+        F.col("ts_ts").alias("click_ts"),
         F.col("event_id").alias("click_id"),
     )
     p = purchases.select(
-        F.col(key).alias("p_key"),
-        F.col(ts_col).alias("purchase_ts"),
+        F.col("user_id").alias("p_key"),
+        F.col("ts_ts").alias("purchase_ts"),
         F.col("event_id").alias("purchase_id"),
     )
     if c.isStreaming:
@@ -68,7 +67,7 @@ def attribute_purchases(
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     return c.join(p, cond, how).select(
-        F.col("c_key").alias(key),
+        F.col("c_key").alias("user_id"),
         "click_id",
         "purchase_id",
         "click_ts",

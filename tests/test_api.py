@@ -64,13 +64,12 @@ def test_do_echo(spark):
 def test_stats_frame(spark):
     from babylon_data_loader_spark.ingest.pipeline import IngestResult
 
-    r = IngestResult(
-        total_files=3,
-        processed_files=1,
-        failed_files=2,
-        records_uploaded=10,
-        failures={"a.txt": "not a csv file", "b.csv": "no valid transactions"},
-    )
+    r = IngestResult()
+    r.total_files = 3
+    r.processed_files = 1
+    r.failed_files = 2
+    r.records_uploaded = 10
+    r.failures = {"a.txt": "not a csv file", "b.csv": "no valid transactions"}
     row = r.to_frame(spark).collect()[0]
     assert row["total_files"] == 3
     assert row["failures"]["a.txt"] == "not a csv file"

@@ -49,31 +49,6 @@ def test_jaccard_verify_scores(spark, docs):
     assert verified[(1, 3)] == pytest.approx(0.75)
 
 
-def test_stored_verified_pairs_forwards_id_col_and_bands(spark, tmp_path):
-    """Non-default id_col/n_bands must reach candidate generation:
-    before the r7 fix, an 8-band build scanned only b0..b3 and a
-    renamed id column crashed resolution."""
-    import os
-
-    A = "the quick brown fox jumps over the lazy dog again"
-    from babylon_data_loader_spark.operators.dedup import (
-        stored_verified_pairs,
-    )
-
-    sf = os.path.join(str(tmp_path), "sf")
-    os.makedirs(sf)
-    spark.createDataFrame(
-        [(1, A), (2, A), (3, "totally unrelated text content here")],
-        "id BIGINT, text STRING",
-    ).write.parquet(os.path.join(sf, "docs.parquet"))
-    docs = spark.read.parquet(os.path.join(sf, "docs.parquet"))
-    pairs = stored_verified_pairs(
-        docs, id_col="id", n_bands=8
-    ).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
-    assert pairs[0]["jaccard"] == 1.0
-
-
 def test_token_window_store_append_equals_rebuild(spark, tmp_path):
     """Caller-owned window store: write(corpus) + append(batch) must
     hold EXACTLY the content of a fresh full build over corpus+batch

@@ -19,8 +19,17 @@ shares a family's name). A top-level def or class is reached when its
 name is, in whichever module it lives.
 
 ``tests/`` is never a root, so a def that only tests call stays
-unreached and fails the test below. Move a
+unreached and fails the first test below. Move a
 test fixture into ``tests/``; delete a def whose twin the lanes run.
+
+The second test applies the same idea to options: a parameter with a
+default on a package def or class method (``@query`` lanes aside)
+must be set by some call outside ``tests/``. A call sets it when the
+callee's name matches (the class name for ``__init__``) and it passes
+the parameter by keyword, by position, or through ``*``/``**``. An
+option that every caller leaves at its default is a constant: write
+the value into the code, or make it a module constant that tests
+monkeypatch.
 """
 
 from __future__ import annotations
@@ -52,7 +61,20 @@ ALLOWED = {
     ),
 }
 
-_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+# Options no caller outside tests sets that stay on purpose.
+ALLOWED_OPTIONS = {
+    "session.build_session(master)": "session deployment setting",
+    "session.build_session(shuffle_partitions)": (
+        "session deployment setting"
+    ),
+    # storage/mongo_repository.go reads one source's collection
+    "sources.parquet_lake.read_transactions(data_source)": (
+        "reference per-source collection read"
+    ),
+}
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+_DEFS = _FUNCS + (ast.ClassDef,)
 
 
 def _parse(path: str) -> ast.Module:
@@ -113,18 +135,27 @@ def _entry_files() -> list[str]:
     return [p for p in files if os.path.exists(p)]
 
 
-def unreached_defs() -> dict[str, int]:
-    """``{"<module>.<def>": line count}`` for every top-level def of
-    the package that no root reaches."""
+def _package_modules() -> list[tuple[str, ast.Module]]:
+    """``(dotted module name, parsed module)`` for every package
+    module but ``__main__.py``, which is a root."""
     main = os.path.join(PKG, "__main__.py")
-    defs: dict[str, list[tuple[str, ast.AST]]] = {}
-    pending: list[str] = []
+    out = []
     for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
         if path == main:
             continue
         mod = os.path.relpath(path, PKG)[: -len(".py")].replace(os.sep, ".")
         mod = mod.removesuffix(".__init__").removesuffix("__init__")
-        body = _parse(path).body
+        out.append((mod, _parse(path)))
+    return out
+
+
+def unreached_defs() -> dict[str, int]:
+    """``{"<module>.<def>": line count}`` for every top-level def of
+    the package that no root reaches."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    pending: list[str] = []
+    for mod, tree in _package_modules():
+        body = tree.body
         module_level = []
         for node in body:
             if isinstance(node, _DEFS):
@@ -167,3 +198,85 @@ def test_every_library_def_is_reached():
     # stale: drop it so the allowlist stays the list of exceptions
     stale = sorted(set(ALLOWED) - set(unreached))
     assert not stale, f"stale allowlist entries: {stale}"
+
+
+def _options(fn, method: bool) -> list[tuple[str, int | None]]:
+    """``(name, position at the call site)`` of each defaulted
+    parameter; a keyword-only one has no position, and a method's
+    ``self``/``cls`` is not passed positionally."""
+    args = fn.args
+    pos = args.posonlyargs + args.args
+    skip = int(
+        method
+        and not any(
+            isinstance(d, ast.Name) and d.id == "staticmethod"
+            for d in fn.decorator_list
+        )
+    )
+    first_default = len(pos) - len(args.defaults)
+    out = [(a.arg, i - skip) for i, a in enumerate(pos) if i >= first_default]
+    out += [
+        (a.arg, None)
+        for a, d in zip(args.kwonlyargs, args.kw_defaults)
+        if d is not None
+    ]
+    return out
+
+
+def _sets(call: ast.Call, name: str, position: int | None) -> bool:
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    if any(k.arg is None or k.arg == name for k in call.keywords):
+        return True
+    return position is not None and position < len(call.args)
+
+
+def unset_options() -> list[str]:
+    """``"<module>.<def>(<param>)"`` for each option that no call
+    outside ``tests/`` sets."""
+    options = []  # (label, callee name, parameter, position)
+    trees = []
+    for mod, tree in _package_modules():
+        trees.append(tree)
+        for node in tree.body:
+            if isinstance(node, _FUNCS) and not _is_query_lane(node):
+                for p, i in _options(node, method=False):
+                    options.append((f"{mod}.{node.name}({p})", node.name, p, i))
+            elif isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    if not isinstance(fn, _FUNCS):
+                        continue
+                    callee = node.name if fn.name == "__init__" else fn.name
+                    for p, i in _options(fn, method=True):
+                        label = f"{mod}.{node.name}.{fn.name}({p})"
+                        options.append((label, callee, p, i))
+    trees += [_parse(p) for p in _entry_files()]
+
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in trees:
+        for sub in ast.walk(tree):
+            if not isinstance(sub, ast.Call):
+                continue
+            fn = sub.func
+            if isinstance(fn, ast.Name):
+                calls.setdefault(fn.id, []).append(sub)
+            elif isinstance(fn, ast.Attribute):
+                calls.setdefault(fn.attr, []).append(sub)
+
+    return [
+        label
+        for label, callee, p, i in options
+        if not any(_sets(c, p, i) for c in calls.get(callee, ()))
+    ]
+
+
+def test_every_option_is_set_outside_tests():
+    unset = unset_options()
+    stray = sorted(set(unset) - set(ALLOWED_OPTIONS))
+    assert not stray, (
+        f"{len(stray)} options that no lane, CLI command, script or "
+        "benchmark sets (only tests do; make each a constant): "
+        + ", ".join(stray)
+    )
+    stale = sorted(set(ALLOWED_OPTIONS) - set(unset))
+    assert not stale, f"stale option allowlist entries: {stale}"

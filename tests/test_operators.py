@@ -32,9 +32,7 @@ def test_knn_lsh_recall(spark, embeddings):
         r["vec_id"]: r["sim"]
         for r in knn_bruteforce(embeddings, query_vec_id=0, k=10).collect()
     }
-    approx = knn_lsh(
-        embeddings, query_vec_id=0, k=10, n_planes=8, probe_hamming=2
-    ).collect()
+    approx = knn_lsh(embeddings, query_vec_id=0, k=10, n_planes=8).collect()
     assert 0 < len(approx) <= 10
     # every approx result must carry the true cosine value
     for r in approx:

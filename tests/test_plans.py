@@ -101,10 +101,11 @@ def test_embedding_dup_pairs_banded_no_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_banded_candidates_hot_bucket_guard(spark):
+def test_banded_candidates_hot_bucket_guard(spark, monkeypatch):
     """A degenerate bucket (many identical embeddings) must be dropped
-    by max_bucket_size, bounding the candidate-pair count; without the
+    by MAX_BUCKET_SIZE, bounding the candidate-pair count; without the
     guard 60 identical vectors would emit C(60,2)=1770 pairs."""
+    from babylon_data_loader_spark.operators import similarity
     from babylon_data_loader_spark.operators.similarity import (
         embedding_dup_pairs,
     )
@@ -122,15 +123,13 @@ def test_banded_candidates_hot_bucket_guard(spark):
     emb = spark.createDataFrame(
         rows, "vec_id BIGINT, embedding ARRAY<FLOAT>"
     )
-    guarded = embedding_dup_pairs(
-        emb, threshold=0.99, exact=False, max_bucket_size=10
-    )
+    monkeypatch.setattr(similarity, "MAX_BUCKET_SIZE", 10)
+    guarded = embedding_dup_pairs(emb, threshold=0.99, exact=False)
     # every bucket holding the 60 clones exceeds the cap ⇒ no clone
     # pairs survive; the 5 distinct vectors produce no ≥0.99 pairs.
     assert guarded.count() == 0
-    unguarded = embedding_dup_pairs(
-        emb, threshold=0.99, exact=False, max_bucket_size=None
-    )
+    monkeypatch.setattr(similarity, "MAX_BUCKET_SIZE", None)
+    unguarded = embedding_dup_pairs(emb, threshold=0.99, exact=False)
     assert unguarded.count() == 1770
 
 

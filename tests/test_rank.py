@@ -83,18 +83,6 @@ def test_value_ranks_tie_averaged(spark):
     assert bad.count() == 0
 
 
-def test_value_ranks_descending(spark):
-    df = _frame(spark, n=300)
-    got = value_ranks(df, ["v"], descending=True)
-    rows = df.select(
-        "v",
-        F.rank().over(Window.orderBy(F.col("v").desc())).alias("r"),
-    ).distinct()
-    assert got.join(rows, "v").filter(
-        F.col("rnk") != F.col("r")
-    ).count() == 0
-
-
 def test_global_ntile_matches_window(spark):
     df = _frame(spark, n=503)
     for n in (4, 10, 7):

@@ -224,13 +224,18 @@ def test_incremental_decontaminate_batch_only_and_store_reuse(
     assert evalg and all(e["hit"] for e in evalg)
 
 
-def test_contamination_report_custom_columns(spark):
-    # The operator API must work off the documents schema: custom id
-    # and text column names, eval predicate over a non-id column.
+def test_contamination_report_custom_columns(spark, monkeypatch):
+    # The operator works off the documents schema named by its
+    # DOC_ID_COL/DOC_TEXT_COL constants, eval predicate over a non-id
+    # column.
+    from babylon_data_loader_spark.operators import decontaminate
     from babylon_data_loader_spark.operators.decontaminate import (
         contamination_report,
     )
     from pyspark.sql import functions as F
+
+    monkeypatch.setattr(decontaminate, "DOC_ID_COL", "rec_id")
+    monkeypatch.setattr(decontaminate, "DOC_TEXT_COL", "body")
 
     df = spark.createDataFrame(
         [
@@ -240,13 +245,7 @@ def test_contamination_report_custom_columns(spark):
         ],
         "rec_id BIGINT, body STRING, split STRING",
     )
-    rows = contamination_report(
-        df,
-        F.col("split") == "eval",
-        n=4,
-        id_col="rec_id",
-        text_col="body",
-    ).collect()
+    rows = contamination_report(df, F.col("split") == "eval", n=4).collect()
     assert [
         (r.rec_id, r.n_grams, r.n_eval_grams, r.eval_gram_rate)
         for r in rows
@@ -278,10 +277,11 @@ def test_contamination_normalization_case_whitespace(spark):
     ] == [(1, 3, 1)]
 
 
-def test_contamination_broadcast_guard_paths_identical(spark):
-    # The broadcast hint is COUNT-guarded: forcing the fallback
-    # (threshold 0 -> hash-partitioned join on h) must produce the
-    # exact same census as the broadcast path.
+def test_contamination_broadcast_guard_paths_identical(spark, monkeypatch):
+    # The broadcast hint is size-guarded: forcing the fallback
+    # (BROADCAST_MAX_ROWS 0 -> hash-partitioned join on h) must produce
+    # the exact same census as the broadcast path.
+    from babylon_data_loader_spark.operators import decontaminate
     from babylon_data_loader_spark.operators.decontaminate import (
         contamination_report,
     )
@@ -300,11 +300,9 @@ def test_contamination_broadcast_guard_paths_identical(spark):
         tuple(r)
         for r in contamination_report(df, pred, n=4).collect()
     )
+    monkeypatch.setattr(decontaminate, "BROADCAST_MAX_ROWS", 0)
     via_shuffle = sorted(
-        tuple(r)
-        for r in contamination_report(
-            df, pred, n=4, broadcast_max_rows=0
-        ).collect()
+        tuple(r) for r in contamination_report(df, pred, n=4).collect()
     )
     assert via_bcast == via_shuffle and via_bcast
 

@@ -69,42 +69,6 @@ def test_delta_export_log_structure_and_roundtrip(spark, tmp_path):
     assert got == want
 
 
-def test_delta_export_time_travel_version(spark, tmp_path):
-    """Exporting a PAST version must describe that version's files."""
-    from babylon_data_loader_spark.operators.delta_export import (
-        export_delta_log,
-        read_delta_export,
-    )
-    from babylon_data_loader_spark.operators.tx_lake import (
-        TransactionalLake,
-    )
-
-    rows1 = [(1, "a", 1.0), (2, "b", 2.0)]
-    rows2 = [(1, "a", 9.0)]
-    schema = "event_id bigint, event_type string, value double"
-    lake = TransactionalLake(
-        str(tmp_path / "lake"), partition_col="event_type"
-    )
-    lake.merge(spark, spark.createDataFrame(rows1, schema), key=["event_id"])
-    lake.merge(spark, spark.createDataFrame(rows2, schema), key=["event_id"])
-
-    out1 = str(tmp_path / "v1")
-    export_delta_log(spark, lake, out1, version=1)
-    v1 = {
-        (r["event_id"], r["value"])
-        for r in read_delta_export(spark, out1).collect()
-    }
-    assert v1 == {(1, 1.0), (2, 2.0)}
-
-    out2 = str(tmp_path / "v2")
-    export_delta_log(spark, lake, out2)
-    v2 = {
-        (r["event_id"], r["value"])
-        for r in read_delta_export(spark, out2).collect()
-    }
-    assert v2 == {(1, 9.0), (2, 2.0)}
-
-
 def test_bloom_prefilter_exact_and_selective(spark):
     """The prefiltered+joined result must equal the plain join, and
     the prefilter must actually drop most non-matching rows."""

@@ -8,20 +8,22 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 
-def test_incremental_dedup_equals_plain_antijoin(spark):
+def test_incremental_dedup_equals_plain_antijoin(spark, monkeypatch):
     """The Bloom prefilter + exact confirm must produce EXACTLY the
     rows a plain anti-join keeps — false positives die in the confirm
     join, false negatives are impossible (Bloom has none)."""
+    from babylon_data_loader_spark.operators import sketch_join
     from babylon_data_loader_spark.operators.sketch_join import (
         bloom_prefilter,
     )
 
+    monkeypatch.setattr(sketch_join, "PREFILTER_BITS", 1 << 10)
     rows = [(i, f"text-{i % 40}") for i in range(200)]
     df = spark.createDataFrame(rows, "id BIGINT, fp STRING")
     corpus = df.filter(F.col("id") % 2 == 0)
     batch = df.filter(F.col("id") % 2 == 1)
 
-    maybe = bloom_prefilter(batch, corpus, "fp", "fp", n_bits=1 << 10)
+    maybe = bloom_prefilter(batch, corpus, "fp", "fp")
     confirmed = maybe.join(
         corpus.select("fp").distinct(), on="fp", how="left_semi"
     )

@@ -38,9 +38,7 @@ def test_banded_lsh_finds_planted_dups(spark, planted):
     assert len(exact) == 20  # all planted, no random collisions
     lsh = {
         (r["id_a"], r["id_b"])
-        for r in embedding_dup_pairs(
-            planted, 0.98, n_planes=8, n_bands=4
-        ).collect()
+        for r in embedding_dup_pairs(planted, 0.98).collect()
     }
     recall = len(exact & lsh) / len(exact)
     assert recall >= 0.9, f"recall {recall}"
@@ -56,7 +54,7 @@ def test_lsh_no_false_pairs_on_random(spark, planted):
 
     # raise the bar: at 0.999 only the tightest planted pairs survive,
     # and nothing random does
-    out = embedding_dup_pairs(planted, 0.9999, n_planes=8, n_bands=4).collect()
+    out = embedding_dup_pairs(planted, 0.9999).collect()
     for r in out:
         assert r["sim"] >= 0.9999
 
@@ -118,16 +116,19 @@ def test_q_knn_lsh_uses_stored_index(spark):
     assert len(out.collect()) == 10
 
 
-def test_exact_all_pairs_guarded_by_row_cap(spark, planted):
+def test_exact_all_pairs_guarded_by_row_cap(spark, planted, monkeypatch):
     """The O(N²) baseline must refuse a corpus-sized input."""
+    from babylon_data_loader_spark.operators import similarity
     from babylon_data_loader_spark.operators.similarity import (
         embedding_dup_pairs,
     )
 
-    with pytest.raises(ValueError, match="max_exact_rows"):
-        embedding_dup_pairs(planted, 0.98, exact=True, max_exact_rows=100)
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 100)
+    with pytest.raises(ValueError, match="MAX_EXACT_ROWS"):
+        embedding_dup_pairs(planted, 0.98, exact=True)
     # and still works under the cap
-    out = embedding_dup_pairs(planted, 0.98, exact=True, max_exact_rows=1000)
+    monkeypatch.setattr(similarity, "MAX_EXACT_ROWS", 1000)
+    out = embedding_dup_pairs(planted, 0.98, exact=True)
     assert out.count() == 20
 
 
@@ -181,7 +182,7 @@ def test_index_store_fingerprint_and_reuse(spark, tmp_path):
     """Content-fingerprint keying: same files → same store path (the
     second knn_lsh call writes nothing); touched mtime → NEW
     fingerprint (a regenerated dataset can never alias onto a stale
-    index); no file lineage → refuse unless throwaway is opted into."""
+    index); no file lineage → refuse."""
     import os
     import shutil
     import time
@@ -229,41 +230,8 @@ def test_index_store_fingerprint_and_reuse(spark, tmp_path):
     mem = spark.createDataFrame(
         emb.limit(20).collect(), schema=emb.schema
     )
-    with _pytest.raises(ValueError, match="build_throwaway_index"):
+    with _pytest.raises(ValueError, match="no file lineage"):
         knn_lsh(mem, query_vec_id=0, k=5, n_planes=4)
-    got = knn_lsh(
-        mem, query_vec_id=0, k=5, n_planes=4, build_throwaway_index=True
-    ).collect()
-    assert len(got) <= 5
-
-
-def test_knn_lsh_uri_index_path_is_probed_in_place(spark, tmp_path):
-    """A caller-owned index_path given as a URI is probed where it
-    lives: the second call reuses the index instead of rewriting it."""
-    import os
-
-    from babylon_data_loader_spark.operators.index_store import META_NAME
-    from babylon_data_loader_spark.operators.similarity import knn_lsh
-    from babylon_data_loader_spark.schemas import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    local = tmp_path / "lsh"
-    uri = local.as_uri()
-    assert uri.startswith("file://")
-
-    def search():
-        return sorted(
-            tuple(r)
-            for r in knn_lsh(
-                emb, query_vec_id=0, k=10, n_planes=8, index_path=uri
-            ).collect()
-        )
-
-    out1 = search()
-    assert len(out1) == 10
-    mtime1 = os.stat(local / META_NAME).st_mtime_ns
-    assert search() == out1
-    assert os.stat(local / META_NAME).st_mtime_ns == mtime1
 
 
 def test_store_sweep_keeps_live_cross_sf_siblings(spark, tmp_path):

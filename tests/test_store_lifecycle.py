@@ -147,6 +147,4 @@ def test_threshold_store_params_do_not_collide():
     assert verified_pairs_params(0.56, 4, 3, 1000) != verified_pairs_params(
         0.57, 4, 3, 1000
     )
-    assert embedding_pairs_params(
-        0.56, 8, 4, "vec_id", "embedding", 1000
-    ) != embedding_pairs_params(0.57, 8, 4, "vec_id", "embedding", 1000)
+    assert embedding_pairs_params(0.56) != embedding_pairs_params(0.57)

@@ -205,7 +205,8 @@ def test_pq_index_store(spark, emb, tmp_path):
     assert codes.count() == emb.count()
 
 
-def test_token_window_store(spark, docs, tmp_path):
+def test_token_window_store(spark, docs, tmp_path, monkeypatch):
+    from babylon_data_loader_spark.operators import dedup
     from babylon_data_loader_spark.operators.dedup import (
         append_token_windows,
         read_token_window_store,
@@ -215,9 +216,8 @@ def test_token_window_store(spark, docs, tmp_path):
 
     path = str(tmp_path / "tokwin")
     # two hex chars: prefixes like "07" or "42" are strings, not numbers
-    write_token_window_store(
-        docs.where("doc_id < 3"), path, prefix_chars=2
-    )
+    monkeypatch.setattr(dedup, "TOKWIN_PREFIX_CHARS", 2)
+    write_token_window_store(docs.where("doc_id < 3"), path)
     assert_first_read_starts_no_job(
         spark, lambda: read_token_window_store(spark, path)
     )

@@ -34,9 +34,11 @@ def state(spark, lake):
 
 def assert_sidecar_read_matches(spark, lake):
     """Every live written dir carries a sidecar equal to the data
-    schema its footers give, and reading through the recorded schemas
-    gives exactly what the inferred per-dir read gives: schema (column
-    order, nullability, field metadata) and rows."""
+    schema its footers give plus the partition column last, and
+    reading through the recorded schemas gives exactly what the
+    inferred per-dir read gives, the partition column cast to its
+    recorded type: schema (column order, nullability, field metadata)
+    and rows."""
     live = {
         d
         for dirs in lake.current_manifest()["partitions"].values()
@@ -44,21 +46,28 @@ def assert_sidecar_read_matches(spark, lake):
         if d != "."
     }
     assert live
+    pc = lake.partition_col
     for d in live:
-        # the sidecar holds the data schema a footer read reports
+        # the sidecar holds the data schema a footer read reports,
+        # then the partition column
         base = os.path.join(lake.lake_path, d)
         data = [
             f
             for f in spark.read.parquet(base).schema.fields
-            if f.name != lake.partition_col
+            if f.name != pc
         ]
-        assert lake._dir_schema(base) == StructType(data)
+        sidecar = lake._dir_schema(base)
+        assert StructType(sidecar.fields[:-1]) == StructType(data)
+        assert sidecar.fields[-1].name == pc
     recorded = lake.read(spark)
     lake._dir_schema = lambda base: None
     try:
         inferred = lake.read(spark)
     finally:
         del lake._dir_schema
+    inferred = inferred.withColumn(
+        pc, F.col(pc).cast(recorded.schema[pc].dataType)
+    )
     assert recorded.schema.json() == inferred.schema.json()
     assert sorted(map(repr, recorded.collect())) == sorted(
         map(repr, inferred.collect())
@@ -989,7 +998,10 @@ def test_schema_sidecar_nested_null_partition_numeric_migration(
     assert_sidecar_read_matches(spark, lake)
     migrated = lake.migrate_partitioning(spark, "acct")
     assert_sidecar_read_matches(spark, migrated)
-    assert migrated.read(spark).schema["acct"].dataType == T.IntegerType()
+    # the written string type, not the integer hive inference guesses
+    back = migrated.read(spark)
+    assert back.schema["acct"].dataType == T.StringType()
+    assert sorted(r["acct"] for r in back.collect()) == ["1001", "1002"]
 
 
 def test_lookup_on_recorded_schemas_runs_one_job(spark, tmp_path, monkeypatch):
@@ -1199,3 +1211,49 @@ def test_tx_lake_does_its_own_io_only_through_the_backend():
             handlers += 1
     assert direct_io == []
     assert handlers == 1
+
+
+def test_boolean_partition_merge_keeps_untouched_keys(spark, tmp_path):
+    """Spark names a boolean partition dir ``flag=true``: a merge must
+    match the stored partition by that spelling, so the untouched key
+    in it survives, and the column reads back boolean."""
+    schema = "k BIGINT, flag BOOLEAN, v STRING"
+    lake = TransactionalLake(str(tmp_path / "lake"), partition_col="flag")
+    lake.merge(
+        spark,
+        spark.createDataFrame(
+            [(1, True, "a"), (3, True, "c"), (2, False, "b")], schema
+        ),
+        KEY,
+    )
+    lake.merge(spark, spark.createDataFrame([(1, True, "NEW")], schema), KEY)
+    back = lake.read(spark)
+    assert back.schema["flag"].dataType.typeName() == "boolean"
+    rows = sorted(tuple(r) for r in back.select("k", "flag", "v").collect())
+    assert rows == [(1, True, "NEW"), (2, False, "b"), (3, True, "c")]
+    assert lake.delete_where(spark, F.col("v") == "b") == 1
+    assert sorted(r["k"] for r in lake.read(spark).collect()) == [1, 3]
+
+
+def test_numeric_looking_partition_round_trips_and_remerges(spark, tmp_path):
+    """A string partition value that looks like a number (``"0042"``)
+    reads back as the written string, and a re-merge of its key
+    replaces the row instead of writing it again under ``acct=42``."""
+    schema = "k BIGINT, acct STRING, v STRING"
+    lake = TransactionalLake(str(tmp_path / "lake"), partition_col="acct")
+    lake.merge(
+        spark,
+        spark.createDataFrame([(1, "0042", "a"), (2, "0000", "b")], schema),
+        KEY,
+    )
+    back = lake.read(spark)
+    assert back.schema["acct"].dataType.typeName() == "string"
+    assert sorted(r["acct"] for r in back.collect()) == ["0000", "0042"]
+    lake.merge(spark, spark.createDataFrame([(1, "0042", "a2")], schema), KEY)
+    assert sorted(
+        tuple(r) for r in lake.read(spark).select("k", "acct", "v").collect()
+    ) == [(1, "0042", "a2"), (2, "0000", "b")]
+    assert sorted(lake.current_manifest()["partitions"]) == [
+        "acct=0000",
+        "acct=0042",
+    ]

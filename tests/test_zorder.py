@@ -172,7 +172,7 @@ def test_zorder_frame_temporal_columns(spark):
     df = spark.createDataFrame(
         rows, "id LONG, d DATE, ts TIMESTAMP_NTZ"
     )
-    out = zorder_frame(df, ["d", "ts"], bits=4)
+    out = zorder_frame(df, ["d", "ts"])
     got = out.orderBy("id").collect()
     assert len(got) == 10
     # linear rank: z-values must be strictly ordered with the dates
