@@ -9,7 +9,7 @@ SF_DIR ?= /root/testdata/sf0.01
 PY ?= python
 
 .PHONY: all build test test-ci check-quality audit oracle oracle-window bench \
-        run-ingest run-generate clean help
+        profile-lake run-ingest run-generate clean help
 
 all: check-quality test ## quality gates + full test suite
 
@@ -49,6 +49,9 @@ oracle-window: ## exact-match sweep of the 50-slot driver window only
 
 bench: ## headline benchmark (one JSON line on stdout)
 	$(PY) bench.py
+
+profile-lake: ## point-lookup cost at 1/10/40/100 single-row appends
+	$(PY) scripts/profile_lake_reads.py
 
 run-ingest: ## run the ingest pipeline against $$UNPROCESSED_DIR etc.
 	$(PY) -m babylon_data_loader_spark ingest

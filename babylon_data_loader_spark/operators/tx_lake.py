@@ -39,16 +39,19 @@ uses, at partition granularity:
   backend too; only the ``fsck``/``vacuum`` listings are local.
 
 Scale notes: rewrite cost per merge is bounded by the touched
-partitions, not the table; the manifest is O(partitions); readers
-issue one scan per live version dir (appends accumulate dirs —
-``compact()`` folds a partition back to one dir). Each version dir
-records its schema in ``_schema.json`` when it is written (partition
-column last, with the type it was written with), so opening that scan
-costs no footer-inference job and the partition column reads back as
-written, not as hive inference guesses it. All the underscore-
-prefixed control dirs are invisible to plain ``spark.read.parquet`` on
-the lake root, so a legacy plain lake migrates in place: its root
-becomes data dir ``"."`` of manifest v1, with zero data movement.
+partitions, not the table; the manifest is O(partitions). Each version
+dir records its schema in ``_schema.json`` when it is written
+(partition column last, with the type it was written with), so readers
+plan one scan per (recorded schema, partition value), however many
+version dirs appends accumulate, with no footer-inference job; the
+partition column is a literal of its written type, not what hive
+inference guesses. Appends still add one small file per partition
+each — ``compact()`` folds a partition back to one dir. Rows already
+on the driver (a single-row insert) are written by pyarrow with no
+Spark job. All the underscore-prefixed control dirs are invisible to
+plain ``spark.read.parquet`` on the lake root, so a legacy plain lake
+migrates in place: its root becomes data dir ``"."`` of manifest v1,
+with zero data movement.
 """
 
 from __future__ import annotations
@@ -100,6 +103,47 @@ def _orderable(dtype) -> bool:
     if isinstance(dtype, T.StructType):
         return all(_orderable(f.dataType) for f in dtype.fields)
     return True
+
+
+# Types the driver-side version-dir writer stores exactly as Spark's
+# parquet writer does (same logical type; Spark's footer inference and
+# DuckDB read the same values). TimestampType is left out: Spark writes
+# it as INT96, pyarrow as an instant TIMESTAMP, and DuckDB types the two
+# differently; a frame holding one goes to the Spark writer.
+_DRIVER_ATOMIC_TYPES = (
+    T.StringType,
+    T.LongType,
+    T.IntegerType,
+    T.ShortType,
+    T.ByteType,
+    T.DoubleType,
+    T.FloatType,
+    T.BooleanType,
+    T.DecimalType,
+    T.DateType,
+    T.TimestampNTZType,
+    T.BinaryType,
+)
+
+
+def _driver_writable(dtype) -> bool:
+    """Whether :meth:`TransactionalLake._write_local` reproduces a
+    Spark write of this type (a frame's schema, or a column's type).
+    A field with metadata is not: Spark keeps field metadata in a
+    footer key, and pyarrow 16 writes no footer key unless it also
+    writes its serialized Arrow schema (~2 KB a file)."""
+    if isinstance(dtype, T.ArrayType):
+        return _driver_writable(dtype.elementType)
+    if isinstance(dtype, T.MapType):
+        return _driver_writable(dtype.keyType) and _driver_writable(
+            dtype.valueType
+        )
+    if isinstance(dtype, T.StructType):
+        return all(
+            not f.metadata and _driver_writable(f.dataType)
+            for f in dtype.fields
+        )
+    return isinstance(dtype, _DRIVER_ATOMIC_TYPES)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -436,13 +480,22 @@ class TransactionalLake:
         keep_files=None,
     ) -> DataFrame:
         """The one lake reader: the rows of ``partitions`` (subdir →
-        its commit-ordered version dirs), one parquet scan per version
-        dir, unioned by name (schema evolution NULL-fills missing
-        columns). ``keep_files(base, subdirs)`` may narrow a dir to
-        ``{subdir: [file, ...]}`` (None: read it whole). A dir with a
-        recorded schema is read with it, so its partition column has
-        the written type; hive partition discovery types the column
-        only in dirs without one."""
+        its commit-ordered version dirs), unioned by name (schema
+        evolution NULL-fills missing columns).
+
+        One scan per (recorded schema, partition subdir), not one per
+        version dir, so a lookup's plan stays one leaf per partition
+        however many appends accumulate: the subdir's files across all
+        dirs with an equal sidecar are read with the sidecar's data
+        fields, and the partition column is a literal of its recorded
+        type from the subdir's value (:data:`HIVE_NULL_PARTITION` is
+        NULL). Its name comes from the subdir — the sidecar's last
+        field — not from this handle: a version from before
+        ``migrate_partitioning`` is partitioned by the old column. The
+        adopted ``"."`` root and dirs without a usable sidecar keep a
+        per-dir read with hive partition discovery. ``keep_files(base,
+        subdirs)``, called once per dir, may narrow a dir to
+        ``{subdir: [file, ...]}`` (None: read it whole)."""
         by_dir: dict[str, list[str]] = {}
         for subdir in sorted(partitions):
             for d in partitions[subdir]:
@@ -451,10 +504,11 @@ class TransactionalLake:
             raise FileNotFoundError(
                 f"empty or missing lake at {self.lake_path}"
             )
-        frames = []
-        # "." first, then order of first appearance: a function of the
-        # manifest alone, so the union's column order never depends on
-        # the random version-dir names.
+        # scan key -> (recorded schema or None, base, paths). "." first,
+        # then order of first appearance: a function of the manifest
+        # alone, so the union's column order never depends on the
+        # random version-dir names.
+        scans: dict[tuple, tuple] = {}
         for d in sorted(by_dir, key=lambda d: d != "."):
             subdirs = by_dir[d]
             base = (
@@ -463,21 +517,51 @@ class TransactionalLake:
                 else os.path.join(self.lake_path, d)
             )
             kept = keep_files(base, subdirs) if keep_files else None
-            if kept is None:
-                paths = [os.path.join(base, s) for s in subdirs]
-            else:
-                paths = [
-                    os.path.join(base, s, f)
-                    for s in sorted(kept)
-                    for f in kept[s]
-                ]
-            if not paths:
+            schema = self._dir_schema(base) if d != "." else None
+            if schema is not None and (
+                subdirs[0].split("=", 1)[0] not in schema.fieldNames()
+            ):
+                schema = None  # a sidecar that misses its partition column
+            for s in subdirs:
+                if kept is None:
+                    paths = [os.path.join(base, s)]
+                else:
+                    paths = [os.path.join(base, s, f) for f in kept.get(s, [])]
+                if not paths:
+                    continue
+                key = ("dir", d) if schema is None else (schema.json(), s)
+                scans.setdefault(key, (schema, base, []))[2].extend(paths)
+        frames = []
+        for (_, s), (schema, base, paths) in scans.items():
+            if schema is None:
+                frames.append(
+                    spark.read.option("basePath", base).parquet(*paths)
+                )
                 continue
-            reader = spark.read.option("basePath", base)
-            schema = self._dir_schema(base)
-            if schema is not None:
-                reader = reader.schema(schema)
-            frames.append(reader.parquet(*paths))
+            name = s.split("=", 1)[0]
+            field = schema[name]
+            data = T.StructType([f for f in schema.fields if f.name != name])
+            t = field.dataType.simpleString()
+            value = self._subdir_value(s)
+            # One parsed expression: a few py4j calls, where F.* column
+            # calls cost ~60. The value goes in as hex, so it needs no
+            # SQL quoting. nullif(v, NULL) is v, but it stays nullable,
+            # as a partition column read from disk is; a bare literal
+            # would not be.
+            lit = (
+                f"CAST(NULL AS {t})"
+                if value == HIVE_NULL_PARTITION
+                else f"nullif(CAST(CAST(unhex('{value.encode().hex()}') "
+                f"AS STRING) AS {t}), NULL)"
+            )
+            frame = (
+                spark.read.schema(data)
+                .parquet(*paths)
+                .withColumn(name, F.expr(lit))
+            )
+            if field.metadata:
+                frame = frame.withMetadata(name, field.metadata)
+            frames.append(frame)
         if not frames:
             # Every file pruned: an empty frame with the live schema.
             return self._read_partitions(spark, partitions).filter(
@@ -493,9 +577,74 @@ class TransactionalLake:
         """Write `df` partitioned into a fresh immutable dir; returns
         (relative dir, its partition subdir names — the touched set,
         straight from the filesystem so Spark's own path escaping is
-        the source of truth)."""
+        the source of truth). A write with no rows leaves no dir and
+        touches no subdir.
+
+        The writer is chosen from the input. Rows already on the driver
+        (a bare ``LocalRelation``, e.g. an ``add_transaction`` row) of
+        types :func:`_driver_writable` accepts are written by
+        :meth:`_write_local` with no Spark job; everything else is a
+        Spark write. Both leave the same subdir names, schema, stats
+        and bloom sidecars."""
         rel = os.path.join("_versions", f"v{uuid.uuid4().hex[:12]}")
         full = os.path.join(self.lake_path, rel)
+        if (
+            df.isLocal()
+            and not (self.cluster_by or self.zorder_by)
+            and _driver_writable(df.schema)
+        ):
+            self._write_local(df, full)
+        else:
+            self._write_distributed(df, full)
+        subdirs = (
+            [
+                e
+                for e in sorted(os.listdir(full))
+                if e.startswith(f"{self.partition_col}=")
+            ]
+            if os.path.isdir(full)
+            else []
+        )
+        if not subdirs:
+            shutil.rmtree(full, ignore_errors=True)
+            return rel, []
+        # Record the schema the way the parquet reader will report it,
+        # partition column included, so every later scan of this dir
+        # skips footer inference and reads the partition column with
+        # its written type. The dir is unreachable until the manifest
+        # commit, so a crash here leaves an orphan for vacuum.
+        self.backend.publish(
+            os.path.join(full, SCHEMA_SIDECAR),
+            stored_schema(df.schema, (self.partition_col,)).json(),
+        )
+        if self.stats_cols:
+            from babylon_data_loader_spark.operators.lake_stats import (
+                write_stats_sidecar,
+            )
+
+            write_stats_sidecar(
+                df.sparkSession,
+                full,
+                f"{self.partition_col}=",
+                self.stats_cols,
+            )
+        if self.bloom_cols:
+            from babylon_data_loader_spark.operators.lake_bloom import (
+                write_bloom_sidecar,
+            )
+
+            write_bloom_sidecar(
+                df.sparkSession,
+                full,
+                f"{self.partition_col}=",
+                self.bloom_cols,
+            )
+        return rel, subdirs
+
+    def _write_distributed(self, df: DataFrame, full: str) -> None:
+        """Spark's partitioned parquet write of ``df`` into ``full``,
+        arranged by ``cluster_by`` / ``zorder_by`` when the lake has
+        them."""
         if self.cluster_by:
             # Disjoint cluster-key ranges per task ⇒ disjoint ranges
             # per FILE within each hive subdir — what makes the
@@ -530,43 +679,53 @@ class TransactionalLake:
             .partitionBy(self.partition_col)
             .parquet(full)
         )
-        # Record the schema the way the parquet reader will report it,
-        # partition column included, so every later scan of this dir
-        # skips footer inference and reads the partition column with
-        # its written type. The dir is unreachable until the manifest
-        # commit, so a crash here leaves an orphan for vacuum.
-        self.backend.publish(
-            os.path.join(full, SCHEMA_SIDECAR),
-            stored_schema(df.schema, (self.partition_col,)).json(),
+
+    def _write_local(self, df: DataFrame, full: str) -> None:
+        """The driver-side twin of :meth:`_write_distributed` for a
+        ``LocalRelation`` frame: one zstd parquet file per partition
+        value, written by pyarrow, no Spark job (collecting a local
+        relation runs none). Subdir names are Spark's: the value is
+        spelled by ``cast("string")`` and escaped by Spark's own
+        ``escapePathName``; NULL and ``""`` land in
+        :data:`HIVE_NULL_PARTITION`. Files carry the all-nullable
+        stored data schema, whose parquet types Spark's footer
+        inference and DuckDB read as they read a Spark write's. They
+        carry no footer key (Spark's schema and version keys): without
+        the version key Spark reads dates under the session's
+        ``datetimeRebaseModeInRead`` (CORRECTED by default, no
+        rebase). Zero rows write nothing."""
+        import pyarrow.parquet as pq
+
+        from babylon_data_loader_spark.session import arrow_table
+
+        spark = df.sparkSession
+        pc = self.partition_col
+        stored = stored_schema(df.schema, (pc,))
+        data = T.StructType(stored.fields[:-1])
+        escape = (
+            spark._jvm.org.apache.spark.sql.catalyst.catalog
+            .ExternalCatalogUtils.escapePathName
         )
-        subdirs = [
-            e
-            for e in sorted(os.listdir(full))
-            if e.startswith(f"{self.partition_col}=")
-        ]
-        if self.stats_cols:
-            from babylon_data_loader_spark.operators.lake_stats import (
-                write_stats_sidecar,
-            )
-
-            write_stats_sidecar(
-                df.sparkSession,
+        by_value: dict[str | None, list[tuple]] = {}
+        for r in df.select(
+            F.col(pc).cast("string"), *data.fieldNames()
+        ).collect():
+            by_value.setdefault(r[0] or None, []).append(tuple(r[1:]))
+        for value, rows in by_value.items():
+            subdir = os.path.join(
                 full,
-                f"{self.partition_col}=",
-                self.stats_cols,
+                f"{escape(pc)}="
+                + (HIVE_NULL_PARTITION if value is None else escape(value)),
             )
-        if self.bloom_cols:
-            from babylon_data_loader_spark.operators.lake_bloom import (
-                write_bloom_sidecar,
+            os.makedirs(subdir)
+            pq.write_table(
+                arrow_table(rows, data),
+                os.path.join(
+                    subdir, f"part-00000-{uuid.uuid4()}.c000.zstd.parquet"
+                ),
+                compression="zstd",
+                store_schema=False,
             )
-
-            write_bloom_sidecar(
-                df.sparkSession,
-                full,
-                f"{self.partition_col}=",
-                self.bloom_cols,
-            )
-        return rel, subdirs
 
     def _claim_and_commit(self, manifest: dict) -> None:
         """Claim version N via the backend's exclusive create, then
@@ -602,20 +761,25 @@ class TransactionalLake:
         """The one write loop. Each attempt calls ``plan(manifest)`` on
         the current manifest; the plan returns ``(version dir, next
         manifest, result)`` — having written that dir or reused one —
-        or None when there is nothing to commit. The attempt then
-        claims; a lost claim backs off and re-plans on the advanced
-        state, up to ``max_retries`` times. Returns the committing
-        plan's result (None if a plan had nothing to commit). Every
-        dir a plan returned whose claim was lost, and that no later
-        attempt committed, is removed before the call returns or
-        raises."""
+        or None when there is nothing to commit. A next manifest whose
+        partitions equal the current ones (an empty batch: its write
+        left no subdir and no dir) is nothing to commit either. The
+        attempt then claims; a lost claim backs off and re-plans on the
+        advanced state, up to ``max_retries`` times. Returns the
+        committing plan's result (None if a plan had nothing to
+        commit). Every dir a plan returned whose claim was lost, and
+        that no later attempt committed, is removed before the call
+        returns or raises."""
         lost: set[str] = set()
         try:
             for attempt in range(max_retries + 1):
-                planned = plan(self.current_manifest())
+                current = self.current_manifest()
+                planned = plan(current)
                 if planned is None:
                     return None
                 rel, manifest, result = planned
+                if manifest["partitions"] == current["partitions"]:
+                    return None
                 try:
                     self._claim_and_commit(manifest)
                 except ConcurrentWriteError:
@@ -812,17 +976,21 @@ class TransactionalLake:
                 # column (e.g. check_or_slip_num) must match a stored
                 # NULL, like Mongo's upsert filter does, or the old
                 # row survives alongside its replacement.
+                # The keys compare as ONE struct: with the partition
+                # column a literal per scan (_read_partitions), a
+                # per-column `__s.pc <=> __b.pc` folds to
+                # `'chase' <=> __b.pc`, Spark pushes that into the
+                # batch-keys side, and the batch's two uses stop
+                # sharing one exchange — the batch input is scanned
+                # once more per touched partition. Struct equality is
+                # the same null-safe, field-by-field match.
                 stored_a = stored.alias("__s")
                 batch_keys = F.broadcast(
                     batch.select(*key).distinct().alias("__b")
                 )
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [
-                        F.col(f"__s.`{k}`").eqNullSafe(F.col(f"__b.`{k}`"))
-                        for k in key
-                    ],
-                )
+                cond = F.struct(
+                    *[F.col(f"__s.`{k}`") for k in key]
+                ).eqNullSafe(F.struct(*[F.col(f"__b.`{k}`") for k in key]))
                 if order_cols is None:
                     survivors = stored_a.join(
                         batch_keys, on=cond, how="left_anti"

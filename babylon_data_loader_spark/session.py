@@ -10,7 +10,7 @@ the SparkSession. Two entry points:
   its own session; we must not assume builder-time config).
 
 :func:`local_frame` is the one way library code turns driver-side rows
-into a DataFrame.
+into a DataFrame; :func:`arrow_table` is the row conversion it uses.
 """
 
 from __future__ import annotations
@@ -111,32 +111,21 @@ def build_session(
     return configure_session(spark)
 
 
-def local_frame(
-    spark: SparkSession, rows: Iterable, schema: StructType | str
-) -> DataFrame:
-    """Driver-side ``rows`` as a DataFrame backed by a JVM local relation.
+def arrow_table(rows: Iterable, schema: StructType):
+    """Driver-side ``rows`` as a pyarrow Table of ``schema``.
 
-    ``spark.createDataFrame(<list>, schema)`` ships pickled rows as a
-    Python RDD split ``defaultParallelism`` ways, so every job touching
-    the frame starts Python workers for a handful of rows. Here the rows
-    go to the JVM as one Arrow table instead: the plan leaf is a
-    ``LocalRelation`` (no Python worker, no split, broadcast without a
-    job) and an empty row list is an empty relation the optimizer prunes.
-
-    Values are checked and converted exactly as the list path does
-    (the same type verifier, then ``schema.toInternal``), so a row gives
-    the list path's values or raises: Arrow refuses what it cannot hold
+    Values are checked and converted exactly as
+    ``spark.createDataFrame(<list>, schema)`` does (the same type
+    verifier, then ``schema.toInternal``), so a row gives the list
+    path's values or raises: Arrow refuses what it cannot hold
     exactly, e.g. a decimal with more digits than its scale or an int
-    for a string column. A NOT NULL field of a struct that holds a
-    nested or timestamp field raises too: PySpark's Arrow path rebuilds
-    such structs as nullable. ``schema`` is a StructType or a DDL string.
+    for a string column. :func:`local_frame` and the lake's driver-side
+    version-dir writer both convert through here.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _make_type_verifier, _parse_datatype_string
+    from pyspark.sql.types import _make_type_verifier
 
-    if isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
     verify = _make_type_verifier(schema)
     internal = []
     for row in rows:
@@ -145,11 +134,33 @@ def local_frame(
     arrow_schema = to_arrow_schema(schema)
     # Internal values (epoch days/micros, tuples for structs) are what
     # Arrow's date, timestamp and struct types take as input.
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [
             pa.array([r[i] for r in internal], type=f.type)
             for i, f in enumerate(arrow_schema)
         ],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """Driver-side ``rows`` as a DataFrame backed by a JVM local relation.
+
+    ``spark.createDataFrame(<list>, schema)`` ships pickled rows as a
+    Python RDD split ``defaultParallelism`` ways, so every job touching
+    the frame starts Python workers for a handful of rows. Here the rows
+    go to the JVM as one Arrow table (:func:`arrow_table`, which checks
+    and converts them as the list path does) instead: the plan leaf is a
+    ``LocalRelation`` (no Python worker, no split, broadcast without a
+    job) and an empty row list is an empty relation the optimizer prunes.
+    A NOT NULL field of a struct that holds a nested or timestamp field
+    raises: PySpark's Arrow path rebuilds such structs as nullable.
+    ``schema`` is a StructType or a DDL string.
+    """
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
